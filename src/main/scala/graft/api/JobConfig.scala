@@ -29,7 +29,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - `no_of_mappers` → `minPartitions` of the input read — the chunk
   *    split (`master.py:52-60`); results are partition-count-invariant
   *    by the engine's contract, so this is a parallelism floor, not a
-  *    semantic.
+  *    semantic. Absent means the read's default split count.
   *  - `no_of_reducers` → accepted, validated, and subsumed: reduce
   *    parallelism is `spark.sql.shuffle.partitions` + AQE coalescing,
   *    not a per-job process count (the SURVEY §2a ops 9/14 subsumption).
@@ -68,7 +68,10 @@ object JobConfig {
       .stripSuffix(".py")
 
   /** Parse a job-spec JSON file (driver-side: one small config object —
-    * a plain-Java read, not a distributed scan). */
+    * a plain-Java read, not a distributed scan). `no_of_mappers` and
+    * `no_of_reducers` are optional; when present each must be a positive
+    * integer, else an `IllegalArgumentException` names the field and the
+    * config path. */
   def load(spark: SparkSession, configPath: String): JobSpec = {
     val text = new String(
       java.nio.file.Files.readAllBytes(Paths.get(configPath)), "UTF-8")
@@ -99,11 +102,14 @@ object JobConfig {
       else Paths.get(configPath).toAbsolutePath.getParent
         .resolve(rawInput).toString
     }
-    JobSpec(
-      input,
-      job,
-      str("no_of_mappers").map(_.toInt).getOrElse(0),
-      str("no_of_reducers").map(_.toInt).getOrElse(0))
+    // a JSON number or a numeric string (the reference writes "3")
+    def count(f: String): Int =
+      Option(node.get(f)).map(_.asText()).fold(0) { v =>
+        v.toIntOption.filter(_ > 0).getOrElse(
+          throw new IllegalArgumentException(
+            s"$configPath: '$f' must be a positive integer, got '$v'"))
+      }
+    JobSpec(input, job, count("no_of_mappers"), count("no_of_reducers"))
   }
 
   def run(spark: SparkSession, spec: JobSpec): DataFrame = {

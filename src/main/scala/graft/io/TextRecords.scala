@@ -12,6 +12,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    and contributes `len(cleaned)` — so offsets address the concatenated
   *    *cleaned* text, not raw file bytes.
   *
+  * Per-line kernel: cleaning is a plain `char` loop over the line (no
+  * regex). Every kept character is a single ASCII UTF-16 unit, so dropping
+  * units one at a time deletes exactly what the reference's
+  * `replaceAll("[^a-zA-Z0-9 ]", "")` deletes, surrogate pairs included.
+  * Pass 1 only counts kept characters (no string is built); pass 2 cleans
+  * each line once and advances the offset by the cleaned length.
+  *
   * Scale design: the running offset is a global prefix sum over file order.
   * A `Window.orderBy` would force all data through one partition, so we do
   * the classic two-pass partition prefix sum instead — pass 1 computes each
@@ -21,15 +28,41 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * scans; at 100 TB this is 2 reads and zero shuffles. `sc.textFile` split
   * order is deterministic (partition index = split index), which is what
   * makes the prefix sum well-defined.
+  *
+  * Split count: `minPartitions` 0 (the default) asks for
+  * `sc.defaultParallelism` splits, so a small input keeps every core busy
+  * (`sc.textFile`'s own default is `min(defaultParallelism, 2)`). Large
+  * inputs split by the filesystem block size either way.
   */
 object TextRecords {
 
-  private[graft] def cleanLine(s: String): String =
-    s.replaceAll("[^a-zA-Z0-9 ]", "")
+  private def kept(c: Char): Boolean =
+    (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') ||
+      (c >= '0' && c <= '9') || c == ' '
+
+  /** Number of characters of `s` that cleaning keeps. */
+  private def keptLength(s: String): Int = {
+    var n = 0
+    var i = 0
+    while (i < s.length) { if (kept(s.charAt(i))) n += 1; i += 1 }
+    n
+  }
+
+  /** Deletes every character outside `[a-zA-Z0-9 ]`. */
+  private[graft] def cleanLine(s: String): String = {
+    val sb = new java.lang.StringBuilder(s.length)
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (kept(c)) sb.append(c)
+      i += 1
+    }
+    sb.toString
+  }
 
   /** Offset contribution of a raw (newline-stripped) line. */
   private[graft] def contribution(raw: String): Long =
-    if (raw.isEmpty) 1L else cleanLine(raw).length.toLong
+    if (raw.isEmpty) 1L else keptLength(raw).toLong
 
   /** Read a text file as the reference's record list:
     * `(line_id LONG, line STRING, offset LONG)` for each non-blank line,
@@ -42,8 +75,8 @@ object TextRecords {
     // either way (pass 1 materializes on collect), and a persist here has
     // no safe unpersist point — the returned DataFrame is lazy — so it
     // would pin the corpus in block storage for the session's lifetime
-    val raw =
-      if (minPartitions > 0) sc.textFile(path, minPartitions) else sc.textFile(path)
+    val raw = sc.textFile(path,
+      if (minPartitions > 0) minPartitions else sc.defaultParallelism)
 
     // Pass 1: per-partition (lines, offset-contribution) totals.
     val partTotals: Array[(Long, Long)] = raw
@@ -70,8 +103,12 @@ object TextRecords {
         val id = lineId
         val off = offset
         lineId += 1
-        offset += contribution(l)
-        if (l.isEmpty) None else Some((id, cleanLine(l), off))
+        if (l.isEmpty) { offset += 1; None }
+        else {
+          val cleaned = cleanLine(l)
+          offset += cleaned.length
+          Some((id, cleaned, off))
+        }
       }
     }
 

@@ -47,6 +47,33 @@ class Extension6Spec extends SparkSpec {
     intercept[IllegalArgumentException] {
       graft.api.JobConfig.run(spark, unknown)
     }
+
+    // process counts: JSON numbers and numeric strings are accepted;
+    // anything present that is not a positive integer is rejected with
+    // the field and the config path in the message
+    val counts = write("d.json",
+      """{"job": "word_count", "input_file_location": "in.txt",
+        |"no_of_mappers": 3, "no_of_reducers": "2"}""".stripMargin)
+    val cspec = graft.api.JobConfig.load(spark, counts)
+    assert((cspec.mappers, cspec.reducers) == (3, 2))
+    assert(spec.mappers == 0 && spec.reducers == 0)
+    Seq(
+      "no_of_mappers" -> "\"three\"",
+      "no_of_mappers" -> "-2",
+      "no_of_mappers" -> "0",
+      "no_of_mappers" -> "\"\"",
+      "no_of_reducers" -> "\"2.5\"",
+      "no_of_reducers" -> "\"99999999999\"").zipWithIndex.foreach {
+      case ((field, value), i) =>
+        val p = write(s"bad_count_$i.json",
+          s"""{"job": "word_count", "input_file_location": "in.txt",
+             |"$field": $value}""".stripMargin)
+        val e = intercept[IllegalArgumentException] {
+          graft.api.JobConfig.load(spark, p)
+        }
+        assert(e.getMessage.contains(field) && e.getMessage.contains(p),
+          e.getMessage)
+    }
   }
 
   private val sf = "/root/testdata/sf0.001"
