@@ -1,7 +1,14 @@
 package graft.io
 
+import java.io.FileNotFoundException
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.expr
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Loaders for the driver-generated parquet fixtures (TESTDATA.md).
   *
@@ -16,11 +23,15 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Required on every session that reads `events`: Spark 4 rejects
-    * parquet TIMESTAMP(NANOS) outright; with this legacy flag the column
+  /** Required on every session that reads an `events`-shaped table whose
+    * `ts` is parquet TIMESTAMP(NANOS) or a raw INT64 of epoch nanos: Spark 4
+    * rejects TIMESTAMP(NANOS) outright; with this legacy flag the column
     * arrives as LongType nanos and [[load]] converts it to timestamp_ntz
     * (microsecond truncation — the same thing DuckDB does on read, so the
-    * oracle sees identical values).
+    * oracle sees identical values). The generated fixtures themselves
+    * carry TIMESTAMP(MICROS, isAdjustedToUTC=false) at every scale factor
+    * and read as timestamp_ntz directly; the flag is for the raw-INT64
+    * sentinel files and the nanos tables tests write.
     */
   val requiredConfs: Map[String, String] =
     Map("spark.sql.legacy.parquet.nanosAsLong" -> "true")
@@ -30,13 +41,12 @@ object Tables {
     * real event time lands unambiguously on one side. The guard exists
     * because the UNIT of an epoch long read from parquet is a property of
     * the reader path, not the file: the batch reader (nanosAsLong flag)
-    * surfaces the fixture's TIMESTAMP(NANOS) column as nanos, while the
-    * streaming file source under an explicit LongType schema surfaces the
-    * SAME column already down-converted to micros (observed on Spark
-    * 4.1.2 — assuming nanos there collapsed 2024 event times to 1970 and
-    * broke every streaming gate in round 7). Deriving the unit per value
-    * makes both paths, plus raw-INT64 sentinel files, converge on the
-    * same instant.
+    * surfaces a TIMESTAMP(NANOS) column as nanos, while the streaming file
+    * source under an explicit LongType schema surfaces the SAME column
+    * already down-converted to micros (observed on Spark 4.1.2 — assuming
+    * nanos there collapsed 2024 event times to 1970 and broke every
+    * streaming gate in round 7). Deriving the unit per value makes both
+    * paths, plus raw-INT64 sentinel files, converge on the same instant.
     */
   val NanosGuard: Long = 300000000000000000L
 
@@ -60,11 +70,47 @@ object Tables {
     s"timestamp_micros(CASE WHEN abs($colName) >= ${NanosGuard}L " +
       s"THEN $colName div 1000 ELSE $colName END)"
 
+  /** Reads `<sfDir>/<name>.parquet` with its schema supplied, so the read
+    * launches no Spark job: a bare `spark.read.parquet` runs a
+    * schema-inference job per call, which costs more than the rest of
+    * the load (BENCH_NOTES.md).
+    * The schema comes from one footer via [[footerSchema]], so it is
+    * exactly what inference would give, including for the tables tests
+    * write with their own column sets.
+    */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
-    if (name == "events" && df.schema("ts").dataType == org.apache.spark.sql.types.LongType)
+    val path = s"$sfDir/$name.parquet"
+    val df = spark.read.schema(footerSchema(spark, path)).parquet(path)
+    if (name == "events" && df.schema("ts").dataType == LongType)
       df.withColumn("ts", expr(epochLongToTsSql("ts")).cast("timestamp_ntz"))
     else df
+  }
+
+  /** The schema Spark's non-merging parquet inference gives for `path`,
+    * read on the driver: the footer of the file itself or, for a
+    * directory, of its first data file by name (`_*` and `.*` entries
+    * skipped, as Spark's file index skips them), converted the way the
+    * inference job converts it (Spark's own row schema when the writer
+    * stored one, the session's `nanosAsLong` and other parquet confs).
+    * Throws FileNotFoundException naming `path` when there is no data
+    * file.
+    */
+  private def footerSchema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val file =
+      (if (!fs.exists(root)) None
+       else fs.listStatus(root).filter { s =>
+         val n = s.getPath.getName
+         s.isFile && !n.startsWith("_") && !n.startsWith(".")
+       }.sortBy(_.getPath.getName).headOption)
+        .getOrElse(throw new FileNotFoundException(
+          s"no parquet data file at $path"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
+    val meta = try reader.getFooter finally reader.close()
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, meta),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 
   /** High-cardinality key columns per fixture, the HASH repartition key

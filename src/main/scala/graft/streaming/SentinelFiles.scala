@@ -7,6 +7,8 @@ import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.MessageTypeParser
 
+import scala.jdk.CollectionConverters._
+
 /** Driver-side writer for the tiny sentinel parquet files the finite
   * streaming gates plant to flush their watermarks (round 15, guide §6).
   *
@@ -39,9 +41,24 @@ object SentinelFiles {
 
   /** Write `rows` as one small parquet file (`sentinel.parquet`) under
     * `dir`, in the raw events schema, without launching a Spark job.
+    * Replaces an earlier `sentinel.parquet` but never touches other files:
+    * any other `*.parquet` in `dir` would match the gates' `*.parquet`
+    * glob and count its sentinel rows twice, so it throws
+    * IllegalStateException naming them instead.
     */
   def writeEvents(dir: java.nio.file.Path,
                   rows: Seq[(Long, Long, Long, String, Double, String)]): Unit = {
+    val stray = {
+      val ls = java.nio.file.Files.list(dir)
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.endsWith(".parquet") && n != "sentinel.parquet")
+        .toSeq.sorted
+      finally ls.close()
+    }
+    if (stray.nonEmpty)
+      throw new IllegalStateException(
+        s"sentinel dir $dir already holds ${stray.mkString(", ")}; the " +
+          "*.parquet glob would read them with the sentinel")
     val file = dir.resolve("sentinel.parquet")
     java.nio.file.Files.deleteIfExists(file)
     val conf = new Configuration()

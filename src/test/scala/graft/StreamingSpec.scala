@@ -550,4 +550,25 @@ class StreamingSpec extends SparkSpec {
       graft.io.FsUtil.deleteRecursively(directDir)
     }
   }
+  test("SentinelFiles.writeEvents refuses a dir holding other *.parquet " +
+    "files and leaves them in place") {
+    // the gates read their sentinel dir with a *.parquet glob, so a stray
+    // parquet file there would be read as (more) sentinel rows
+    val dir = Files.createTempDirectory("graft_sent_stray")
+    try {
+      val row = Seq(
+        (-1L, EventStreams.FlushSentinelNanos, -1L, "__flush", 0.0, "{}"))
+      graft.streaming.SentinelFiles.writeEvents(dir, row)
+      // rewriting its own sentinel.parquet stays allowed
+      graft.streaming.SentinelFiles.writeEvents(dir, row)
+      val stray = dir.resolve("part-00000.parquet")
+      Files.copy(dir.resolve("sentinel.parquet"), stray)
+      val bytes = Files.readAllBytes(stray).toSeq
+      val e = intercept[IllegalStateException](
+        graft.streaming.SentinelFiles.writeFlushSentinel(dir))
+      assert(e.getMessage.contains("part-00000.parquet"), e.getMessage)
+      assert(Files.readAllBytes(stray).toSeq == bytes)
+      assert(Files.exists(dir.resolve("sentinel.parquet")))
+    } finally graft.io.FsUtil.deleteRecursively(dir)
+  }
 }
