@@ -38,38 +38,18 @@ object Engine {
     spark
   }
 
-  /** Expose the engine's custom Catalyst expressions to SQL:
+  /** Expose the engine's custom Catalyst expressions to SQL on an
+    * already-built session (`GraftExtensions` installs the same table,
+    * `GraftExtensions.functions`, into new ones):
     * `SELECT cosine_sim(a.embedding, b.embedding) FROM ...` etc. — the
     * same codegen'd expressions the Column API uses, so SQL users pay no
     * UDF penalty.
     */
-  def registerFunctions(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    import graft.functions._
-    Bridge.registerFunction(spark, "poly_hash", es => PolyHash(es.head))
-    Bridge.registerFunction(spark, "cosine_sim", es => CosineSimilarity(es(0), es(1)))
-    Bridge.registerFunction(spark, "dot_product", es => DotProduct(es(0), es(1)))
-    Bridge.registerFunction(spark, "shingle_hashes",
-      es => ShingleHashes(es.head, 3))
-    Bridge.registerFunction(spark, "tokenize_with_offsets",
-      es => TokenizeWithOffsets(es(0),
-        org.apache.spark.sql.catalyst.expressions.Cast(es(1),
-          org.apache.spark.sql.types.LongType)))
-    Bridge.registerFunction(spark, "lsh_bucket",
-      graft.ext.SimilaritySearch.lshBucketBuilder)
-    Bridge.registerFunction(spark, "word_ngrams", WordNgrams.builder)
-    Bridge.registerFunction(spark, "nfc_normalize", es => NfcNormalize(es.head))
-    Bridge.registerFunction(spark, "winnowed_fingerprints",
-      WinnowedFingerprints.builder)
-    Bridge.registerFunction(spark, "jaro_winkler",
-      es => JaroWinkler(es(0), es(1)))
-    Bridge.registerFunction(spark, "damerau_levenshtein",
-      es => DamerauLevenshtein(es(0), es(1)))
-    Bridge.registerFunction(spark, "l2_distance",
-      es => L2Distance(es(0), es(1)))
-    Bridge.registerFunction(spark, "hilbert_index",
-      HilbertIndex.builder)
-  }
+  def registerFunctions(spark: SparkSession): Unit =
+    GraftExtensions.functions.foreach { case (name, _, builder) =>
+      org.apache.spark.sql.graftbridge.Bridge
+        .registerFunction(spark, name, builder)
+    }
 
   /** Register every fixture table as a temp view so plain
     * `spark.sql("SELECT ... FROM lineitem")` works — the engine's SQL

@@ -17,8 +17,7 @@ import graft.functions._
   * }}}
   *
   * Installs the engine's custom Catalyst expressions as SQL functions via
-  * `injectFunction` (the public API; `Engine.registerFunctions` remains
-  * for already-built sessions), plus ONE resolution rule:
+  * `injectFunction` (the public API), plus ONE resolution rule:
   * [[graft.sources.GraftChangeFeedRule]], which substitutes the
   * change-feed plan for `readChangeFeed=true` graft-versioned relations
   * (a change feed is per-commit relational algebra, not a leaf scan —
@@ -27,55 +26,66 @@ import graft.functions._
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def info(name: String, usage: String): ExpressionInfo =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
-
   override def apply(e: SparkSessionExtensions): Unit = {
     // readChangeFeed=true reads substitute the change-feed plan for
     // the relation during analysis (the Delta CDF shape) — see
     // graft.sources.GraftChangeFeed
     e.injectResolutionRule(session =>
       new graft.sources.GraftChangeFeedRule(session))
-    e.injectFunction((FunctionIdentifier("poly_hash"),
-      info("poly_hash", "poly_hash(str) - oracle-replayable rolling hash"),
-      (es: Seq[Expression]) => PolyHash(es.head)))
-    e.injectFunction((FunctionIdentifier("cosine_sim"),
-      info("cosine_sim", "cosine_sim(array<float>, array<float>) - cosine similarity"),
-      (es: Seq[Expression]) => CosineSimilarity(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("dot_product"),
-      info("dot_product", "dot_product(array<float>, array<float>)"),
-      (es: Seq[Expression]) => DotProduct(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("shingle_hashes"),
-      info("shingle_hashes", "shingle_hashes(str) - distinct word-3gram hashes"),
-      (es: Seq[Expression]) => ShingleHashes(es.head, 3)))
-    e.injectFunction((FunctionIdentifier("tokenize_with_offsets"),
-      info("tokenize_with_offsets", "tokenize_with_offsets(str, base) - reference tokenizer"),
-      // int literals welcome: cast the base offset to bigint for the user
-      (es: Seq[Expression]) => TokenizeWithOffsets(es(0), Cast(es(1), LongType))))
-    e.injectFunction((FunctionIdentifier("lsh_bucket"),
-      info("lsh_bucket",
-        "lsh_bucket(vec, nPlanes, dim, seed) - hyperplane LSH bucket id (literal int args)"),
-      (es: Seq[Expression]) => graft.ext.SimilaritySearch.lshBucketBuilder(es)))
-    e.injectFunction((FunctionIdentifier("word_ngrams"),
-      info("word_ngrams",
-        "word_ngrams(str, n[, distinct]) - word n-grams, compiled (literal n/distinct)"),
-      (es: Seq[Expression]) => WordNgrams.builder(es)))
-    e.injectFunction((FunctionIdentifier("winnowed_fingerprints"),
-      info("winnowed_fingerprints",
-        "winnowed_fingerprints(str, k, w) - MOSS winnowed (hash, pos) fingerprints (literal k/w)"),
-      (es: Seq[Expression]) => WinnowedFingerprints.builder(es)))
-    e.injectFunction((FunctionIdentifier("jaro_winkler"),
-      info("jaro_winkler",
-        "jaro_winkler(str, str) - byte-oriented Jaro-Winkler similarity" +
-          " (DuckDB-pinned semantics)"),
-      (es: Seq[Expression]) => JaroWinkler(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("l2_distance"),
-      info("l2_distance",
-        "l2_distance(array<float>, array<float>) - Euclidean distance"),
-      (es: Seq[Expression]) => L2Distance(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("hilbert_index"),
-      info("hilbert_index",
-        "hilbert_index(x, y, order) - Hilbert-curve cell index (literal order)"),
-      (es: Seq[Expression]) => HilbertIndex.builder(es)))
+    GraftExtensions.functions.foreach { case (name, usage, builder) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, null, name,
+          usage, ""),
+        builder))
+    }
   }
+}
+
+object GraftExtensions {
+
+  /** The engine's SQL function table, `(name, usage, builder)`: the one
+    * list both install paths read — [[GraftExtensions]] injects it into
+    * new sessions and `Engine.registerFunctions` registers it as temp
+    * functions on an already-built one. Builders take literal arguments
+    * where the usage says so.
+    */
+  val functions: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
+    ("poly_hash", "poly_hash(str) - oracle-replayable rolling hash",
+      es => PolyHash(es.head)),
+    ("cosine_sim",
+      "cosine_sim(array<float>, array<float>) - cosine similarity",
+      es => CosineSimilarity(es(0), es(1))),
+    ("dot_product", "dot_product(array<float>, array<float>)",
+      es => DotProduct(es(0), es(1))),
+    ("shingle_hashes", "shingle_hashes(str) - distinct word-3gram hashes",
+      es => ShingleHashes(es.head, 3)),
+    // int literals welcome: cast the base offset to bigint for the user
+    ("tokenize_with_offsets",
+      "tokenize_with_offsets(str, base) - reference tokenizer",
+      es => TokenizeWithOffsets(es(0), Cast(es(1), LongType))),
+    ("lsh_bucket",
+      "lsh_bucket(vec, nPlanes, dim, seed) - hyperplane LSH bucket id (literal int args)",
+      graft.ext.SimilaritySearch.lshBucketBuilder),
+    ("word_ngrams",
+      "word_ngrams(str, n[, distinct]) - word n-grams, compiled (literal n/distinct)",
+      WordNgrams.builder),
+    ("nfc_normalize", "nfc_normalize(str) - Unicode NFC normalization",
+      es => NfcNormalize(es.head)),
+    ("winnowed_fingerprints",
+      "winnowed_fingerprints(str, k, w) - MOSS winnowed (hash, pos) fingerprints (literal k/w)",
+      WinnowedFingerprints.builder),
+    ("jaro_winkler",
+      "jaro_winkler(str, str) - byte-oriented Jaro-Winkler similarity" +
+        " (DuckDB-pinned semantics)",
+      es => JaroWinkler(es(0), es(1))),
+    ("damerau_levenshtein",
+      "damerau_levenshtein(str, str) - byte-oriented unrestricted" +
+        " Damerau-Levenshtein distance",
+      es => DamerauLevenshtein(es(0), es(1))),
+    ("l2_distance",
+      "l2_distance(array<float>, array<float>) - Euclidean distance",
+      es => L2Distance(es(0), es(1))),
+    ("hilbert_index",
+      "hilbert_index(x, y, order) - Hilbert-curve cell index (literal order)",
+      HilbertIndex.builder))
 }

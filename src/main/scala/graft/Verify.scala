@@ -18,15 +18,8 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     // clear any previous run's outputs: a failing query must not leave
     // stale parquet behind for the oracle compare to "pass" against
-    val outRoot = new java.io.File(outDir)
-    if (outRoot.exists()) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(); ()
-      }
-      rm(outRoot)
-    }
-    outRoot.mkdirs()
+    graft.io.FsUtil.deleteRecursively(outDir)
+    new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_VERIFY_ONLY=q128,q42 — dump a subset (dev iteration;
     // the driver always runs the full registry)
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")

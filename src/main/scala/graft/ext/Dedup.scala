@@ -310,11 +310,7 @@ object Dedup {
       val w = cleaned.write.mode(SaveMode.Overwrite)
       (if (partitioned) w.partitionBy("band") else w)
         .parquet(s"$path/${sub}_compact")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(s"$path/$sub"))
+      graft.io.FsUtil.deleteRecursively(s"$path/$sub")
       require(new java.io.File(s"$path/${sub}_compact")
         .renameTo(new java.io.File(s"$path/$sub")),
         s"compaction swap failed for $path/$sub")

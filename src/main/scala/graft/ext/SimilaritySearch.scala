@@ -58,10 +58,10 @@ object SimilaritySearch {
   def bucket(vec: Column, ps: Seq[Seq[Double]]): Column =
     VectorFunctions.hyperplaneBucket(vec, ps)
 
-  /** Shared SQL-function builder for `lsh_bucket(vec, nPlanes, dim,
-    * seed)` — used by both registration paths (Engine.registerFunctions
-    * and GraftExtensions) so they cannot diverge. The three int args
-    * must be literals: the plane matrix is generated at resolution time.
+  /** SQL-function builder for `lsh_bucket(vec, nPlanes, dim, seed)` in
+    * the engine's one function table (GraftExtensions.functions). The
+    * three int args must be literals: the plane matrix is generated at
+    * resolution time.
     */
   def lshBucketBuilder(
       es: Seq[org.apache.spark.sql.catalyst.expressions.Expression])

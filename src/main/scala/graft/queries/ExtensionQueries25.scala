@@ -17,9 +17,6 @@ import graft.io.Tables
   */
 object ExtensionQueries25 {
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    graft.io.FsUtil.deleteRecursively(p)
-
   val queries: Seq[Q] = Seq(
 
     // ------------------------------------------------------------------
@@ -101,7 +98,7 @@ object ExtensionQueries25 {
               e.filter(col("vec_id") < 5), idx.toString, 5, nProbe = 4)
             .orderBy("query_id", "rank")
             .localCheckpoint()
-        } finally deleteRecursively(idx)
+        } finally graft.io.FsUtil.deleteRecursively(idx)
       },
       Some(ExtensionQueries4.ivfPqOracleSql)),
 

@@ -14,9 +14,6 @@ import graft.io.Tables
   */
 object ExtensionQueries43 {
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    graft.io.FsUtil.deleteRecursively(p)
-
   val queries: Seq[Q] = Seq(
 
     // ------------------------------------------------------------------
@@ -49,7 +46,7 @@ object ExtensionQueries43 {
               e.filter(col("vec_id") < 5), idx.toString, 5, nProbe = 4)
             .orderBy("query_id", "rank")
             .localCheckpoint()
-        } finally deleteRecursively(idx)
+        } finally graft.io.FsUtil.deleteRecursively(idx)
       },
       Some(ExtensionQueries4.ivfPqOracleSqlPick("vec_id % 10 <> 0"))),
 
@@ -82,7 +79,7 @@ object ExtensionQueries43 {
               e.filter(col("vec_id") < 5), idx.toString, 5, nProbe = 4)
             .orderBy("query_id", "rank")
             .localCheckpoint()
-        } finally deleteRecursively(idx)
+        } finally graft.io.FsUtil.deleteRecursively(idx)
       },
       Some(ExtensionQueries4.ivfPqOracleSqlPick("vec_id % 10 <> 0",
         candWhere = "vec_id % 20 <> 5"))),
@@ -118,7 +115,7 @@ object ExtensionQueries43 {
               e.filter(col("vec_id") < 5), idx.toString, 5, nProbe = 4)
             .orderBy("query_id", "rank")
             .localCheckpoint()
-        } finally deleteRecursively(idx)
+        } finally graft.io.FsUtil.deleteRecursively(idx)
       },
       Some {
         import graft.functions.{PolyHash, Rounding}

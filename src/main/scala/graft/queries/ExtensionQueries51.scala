@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.ext.Ranking
 import graft.functions.{Rounding, ZOrder}
 import graft.io.Tables
+import graft.streaming.{EventStreams, SentinelFiles, StreamGate}
 
 /** Round-9 ninth wave: lambda-architecture reconciliation as a
   * first-class gate (q348 — the streaming path audited cell-by-cell
@@ -14,11 +15,6 @@ import graft.io.Tables
   * pairs with DuckDB oracle SQL replaying it.
   */
 object ExtensionQueries51 {
-
-  private val runId = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    graft.io.FsUtil.deleteRecursively(p)
 
   val queries: Seq[Q] = Seq(
 
@@ -39,36 +35,13 @@ object ExtensionQueries51 {
       "q348_lambda_reconcile",
       (s, dir) => {
         import s.implicits._
-        val id = runId.incrementAndGet()
-        if (id > 1) s.catalog.dropTempView(s"graft_stream_rec_${id - 1}")
-        val name = s"graft_stream_rec_$id"
-        val ckptDir = java.nio.file.Files.createTempDirectory("graft_rec2_ckpt")
-        val sentinelDir =
-          java.nio.file.Files.createTempDirectory("graft_rec2_sentinel")
-        // r15: driver-side constant-row write (no Spark job + commit
-        // protocol for one sentinel row; see graft.streaming.SentinelFiles)
-        graft.streaming.SentinelFiles.writeFlushSentinel(sentinelDir)
-        val q = graft.streaming.EventStreams.hourlyCounts(
-            graft.streaming.EventStreams
-              .readStream(s, dir, globFilter = Some("events.parquet"))
-              .unionByName(graft.streaming.EventStreams
-                .readStream(s, sentinelDir.toString,
-                  globFilter = Some("*.parquet"))))
-          .writeStream
-          .format("memory")
-          .queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", ckptDir.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try {
-          q.awaitTermination()
-        } finally {
-          q.stop()
-          deleteRecursively(ckptDir)
-          deleteRecursively(sentinelDir)
+        val out = StreamGate.withScratch("graft_rec2_sentinel") { case Seq(sentinelDir) =>
+          SentinelFiles.writeFlushSentinel(sentinelDir)
+          val plan = EventStreams.hourlyCounts(
+              EventStreams.readFlushed(s, dir, sentinelDir))
+          StreamGate.toMemory(s, "rec", plan, "append")
         }
-        val stream = s.table(name)
+        val stream = out
           .where(col("event_type") =!= "__flush")
           .select(col("hour").cast("string").as("hour"),
             col("event_type"), col("n").as("sn"),

@@ -1,12 +1,10 @@
 package graft.queries
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.functions._
 
 import graft.io.{Sources, Tables}
 import graft.ops.{MaterializedView, VersionedTable}
-import graft.streaming.{EventStreams, Milestones}
+import graft.streaming.{EventStreams, Milestones, SentinelFiles, StreamGate}
 
 /** Round-10 second wave — new-primitive content only (the r9 rule):
   * q463 introduces ZONE-MAP FILE SKIPPING (per-file min/max manifest
@@ -22,33 +20,6 @@ import graft.streaming.{EventStreams, Milestones}
   * contract these features must keep.
   */
 object ExtensionQueries81 {
-
-  private val msRunId = new AtomicInteger(0)
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    graft.io.FsUtil.deleteRecursively(p)
-
-  /** RocksDB provider for the transformWithState query — same rationale
-    * and shape as StreamingQueries' helper (the API additionally
-    * REQUIRES the RocksDB provider; heap provider is rejected at query
-    * start).
-    */
-  private def withRocksDbState[T](
-      s: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    val confs = Seq(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        "true",
-      "spark.sql.shuffle.partitions" -> "8")
-    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-  }
 
   val queries: Seq[Q] = Seq(
 
@@ -205,43 +176,20 @@ object ExtensionQueries81 {
       "q466_tws_milestones",
       (s, dir) => {
         import s.implicits._
-        val id = msRunId.incrementAndGet()
-        if (id > 1) s.catalog.dropTempView(s"graft_tws_ms_${id - 1}")
-        val name = s"graft_tws_ms_$id"
-        val ckptDir =
-          java.nio.file.Files.createTempDirectory("graft_tws_ckpt")
-        val sentinelDir =
-          java.nio.file.Files.createTempDirectory("graft_tws_sentinel")
-        // r15: driver-side constant-row write (no Spark job + commit
-        // protocol for one sentinel row; see graft.streaming.SentinelFiles)
-        graft.streaming.SentinelFiles.writeFlushSentinel(sentinelDir)
-        val stream = EventStreams
-          .readStream(s, dir, globFilter = Some("events.parquet"))
-          .unionByName(EventStreams.readStream(s, sentinelDir.toString,
-            globFilter = Some("*.parquet")))
-          .withWatermark("ts", "2 hours")
-          .selectExpr("user_id", "ts", "unix_micros(ts) AS ts_us",
-            "event_id", "value")
-          .as[Milestones.MsEvent]
-        val q = withRocksDbState(s) {
-          Milestones.milestones(stream, 4L)
+        val out = StreamGate.withScratch("graft_tws_sentinel") { case Seq(sentinelDir) =>
+          SentinelFiles.writeFlushSentinel(sentinelDir)
+          val stream = EventStreams.readFlushed(s, dir, sentinelDir)
+            .withWatermark("ts", "2 hours")
+            .selectExpr("user_id", "ts", "unix_micros(ts) AS ts_us",
+              "event_id", "value")
+            .as[Milestones.MsEvent]
+          val plan = Milestones.milestones(stream, 4L)
             .filter(col("user_id") >= 0)
-            .writeStream
-            .format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckptDir.toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
+          StreamGate.rocksDbState(s) {
+            StreamGate.toMemory(s, "tws_ms", plan, "append")
+          }
         }
-        try {
-          q.awaitTermination()
-        } finally {
-          q.stop()
-          deleteRecursively(ckptDir)
-          deleteRecursively(sentinelDir)
-        }
-        s.table(name).orderBy("user_id", "milestone")
+        out.orderBy("user_id", "milestone")
       },
       Some("""WITH ordered AS (
              |  SELECT user_id,

@@ -1,13 +1,11 @@
 package graft.queries
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
 import graft.ops.{MaterializedView, VersionedTable}
-import graft.streaming.{EventStreams, FirstSeen}
+import graft.streaming.{EventStreams, FirstSeen, SentinelFiles, StreamGate}
 
 /** Round-10 third wave — new-primitive content only: q467 EXACTLY-ONCE
   * STREAMING MV MAINTENANCE (`foreachBatch` + atomic batch-id commits —
@@ -19,27 +17,6 @@ import graft.streaming.{EventStreams, FirstSeen}
   * `transformWithState` (per-user first-seen event-type dictionary).
   */
 object ExtensionQueries82 {
-
-  private val fsRunId = new AtomicInteger(0)
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    graft.io.FsUtil.deleteRecursively(p)
-
-  private def withRocksDbState[T](s: SparkSession)(body: => T): T = {
-    val confs = Seq(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        "true",
-      "spark.sql.shuffle.partitions" -> "8")
-    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-  }
 
   val queries: Seq[Q] = Seq(
 
@@ -63,42 +40,31 @@ object ExtensionQueries82 {
         val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
         val path =
           s"${System.getProperty("java.io.tmpdir")}/graft_smv$tag"
-        val deltaDir =
-          java.nio.file.Files.createTempDirectory("graft_smv_delta")
-        val ckptDir =
-          java.nio.file.Files.createTempDirectory("graft_smv_ckpt")
-        val ev = Tables.load(s, dir, "events")
-          .select(col("user_id"), col("event_id"),
-            floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-        MaterializedView.create(ev.where(col("event_id") % 10 =!= 3),
-          Seq("user_id"), "cents", path)
-        val delta = ev.where(col("event_id") % 10 === 3)
-          .select("user_id", "cents")
-        delta.repartition(2).write.mode("overwrite")
-          .parquet(deltaDir.toString)
-        val apply = (df: DataFrame, id: Long) =>
-          MaterializedView.applyDeltaIdempotent(s, path,
-            df.withColumn("op", lit(1L)), Seq("user_id"), "cents", "op", id)
-        val q = s.readStream.schema(delta.schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(deltaDir.toString)
-          .writeStream
-          .foreachBatch(apply)
-          .option("checkpointLocation", ckptDir.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try {
-          q.awaitTermination()
-          // at-least-once redelivery drill: replay every batch id the
-          // stream just committed — each must be a no-op
-          MaterializedView.appliedBatches(path).foreach(id =>
-            MaterializedView.applyDeltaIdempotent(s, path,
-              delta.withColumn("op", lit(1L)),
-              Seq("user_id"), "cents", "op", id))
-        } finally {
-          q.stop()
-          deleteRecursively(ckptDir)
-          deleteRecursively(deltaDir)
+        StreamGate.withScratch("graft_smv_delta", "graft_smv_ckpt") {
+          case Seq(deltaDir, ckptDir) =>
+            val ev = Tables.load(s, dir, "events")
+              .select(col("user_id"), col("event_id"),
+                floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+            MaterializedView.create(ev.where(col("event_id") % 10 =!= 3),
+              Seq("user_id"), "cents", path)
+            val delta = ev.where(col("event_id") % 10 === 3)
+              .select("user_id", "cents")
+            delta.repartition(2).write.mode("overwrite")
+              .parquet(deltaDir.toString)
+            val apply = (df: DataFrame, id: Long) =>
+              MaterializedView.applyDeltaIdempotent(s, path,
+                df.withColumn("op", lit(1L)), Seq("user_id"), "cents", "op", id)
+            StreamGate.run(s.readStream.schema(delta.schema)
+              .option("maxFilesPerTrigger", 1)
+              .parquet(deltaDir.toString)
+              .writeStream
+              .foreachBatch(apply), ckptDir)
+            // at-least-once redelivery drill: replay every batch id the
+            // stream just committed — each must be a no-op
+            MaterializedView.appliedBatches(path).foreach(id =>
+              MaterializedView.applyDeltaIdempotent(s, path,
+                delta.withColumn("op", lit(1L)),
+                Seq("user_id"), "cents", "op", id))
         }
         MaterializedView.read(s, path)
           .select(col("user_id"), col("mv_n"), col("mv_sum"))
@@ -179,43 +145,20 @@ object ExtensionQueries82 {
       "q469_tws_first_seen_dict",
       (s, dir) => {
         import s.implicits._
-        val id = fsRunId.incrementAndGet()
-        if (id > 1) s.catalog.dropTempView(s"graft_tws_fs_${id - 1}")
-        val name = s"graft_tws_fs_$id"
-        val ckptDir =
-          java.nio.file.Files.createTempDirectory("graft_fs_ckpt")
-        val sentinelDir =
-          java.nio.file.Files.createTempDirectory("graft_fs_sentinel")
-        // r15: driver-side constant-row write (no Spark job + commit
-        // protocol for one sentinel row; see graft.streaming.SentinelFiles)
-        graft.streaming.SentinelFiles.writeFlushSentinel(sentinelDir)
-        val stream = EventStreams
-          .readStream(s, dir, globFilter = Some("events.parquet"))
-          .unionByName(EventStreams.readStream(s, sentinelDir.toString,
-            globFilter = Some("*.parquet")))
-          .withWatermark("ts", "2 hours")
-          .selectExpr("user_id", "ts", "unix_micros(ts) AS ts_us",
-            "event_type")
-          .as[FirstSeen.FsEvent]
-        val q = withRocksDbState(s) {
-          FirstSeen.firstSeen(stream)
+        val out = StreamGate.withScratch("graft_fs_sentinel") { case Seq(sentinelDir) =>
+          SentinelFiles.writeFlushSentinel(sentinelDir)
+          val stream = EventStreams.readFlushed(s, dir, sentinelDir)
+            .withWatermark("ts", "2 hours")
+            .selectExpr("user_id", "ts", "unix_micros(ts) AS ts_us",
+              "event_type")
+            .as[FirstSeen.FsEvent]
+          val plan = FirstSeen.firstSeen(stream)
             .filter(col("user_id") >= 0)
-            .writeStream
-            .format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckptDir.toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
+          StreamGate.rocksDbState(s) {
+            StreamGate.toMemory(s, "tws_fs", plan, "append")
+          }
         }
-        try {
-          q.awaitTermination()
-        } finally {
-          q.stop()
-          deleteRecursively(ckptDir)
-          deleteRecursively(sentinelDir)
-        }
-        s.table(name).orderBy("user_id", "event_type")
+        out.orderBy("user_id", "event_type")
       },
       Some("""SELECT user_id, event_type,
              |  CAST(count(*) AS BIGINT) AS n,

@@ -1,12 +1,9 @@
 package graft.queries
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.io.{Sources, Tables}
-import graft.streaming.{EventStreams, WarmStart}
+import graft.streaming.{EventStreams, SentinelFiles, StreamGate, WarmStart}
 
 /** Round-10 fourth wave — new-primitive content only: q470 TWO-D
   * zone-map skipping over a Z-ORDER-clustered layout (conjunctive box
@@ -18,27 +15,6 @@ import graft.streaming.{EventStreams, WarmStart}
   * engine hadn't exercised).
   */
 object ExtensionQueries83 {
-
-  private val wsRunId = new AtomicInteger(0)
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    graft.io.FsUtil.deleteRecursively(p)
-
-  private def withRocksDbState[T](s: SparkSession)(body: => T): T = {
-    val confs = Seq(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        "true",
-      "spark.sql.shuffle.partitions" -> "8")
-    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-  }
 
   val queries: Seq[Q] = Seq(
 
@@ -96,58 +72,35 @@ object ExtensionQueries83 {
       "q471_tws_state_bootstrap",
       (s, dir) => {
         import s.implicits._
-        val id = wsRunId.incrementAndGet()
-        if (id > 1) s.catalog.dropTempView(s"graft_tws_ws_${id - 1}")
-        val name = s"graft_tws_ws_$id"
-        val ckptDir =
-          java.nio.file.Files.createTempDirectory("graft_ws_ckpt")
-        val sentinelDir =
-          java.nio.file.Files.createTempDirectory("graft_ws_sentinel")
-        // r15: driver-side constant-row write (no Spark job + commit
-        // protocol for one sentinel row; see graft.streaming.SentinelFiles)
-        graft.streaming.SentinelFiles.writeFlushSentinel(sentinelDir)
-        val ev = Tables.load(s, dir, "events")
-          .select(col("user_id"), col("event_id"), col("ts"),
-            floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-        // the batch-era rollup (group-count-sized seed, not history)
-        val history = ev.where(col("event_id") % 10 =!= 3)
-          .groupBy("user_id")
-          .agg(count(lit(1)).cast("long").as("n"),
-            sum("cents").cast("long").as("cents"))
-          .as[WarmStart.WsInit]
-          .groupByKey(_.user_id)
-        // flush once the watermark passes the last real event
-        val flushAtMs = ev
-          .agg(max(unix_micros(col("ts").cast("timestamp")))).head()
-          .getLong(0) / 1000 + 1
-        val stream = EventStreams
-          .readStream(s, dir, globFilter = Some("events.parquet"))
-          .unionByName(EventStreams.readStream(s, sentinelDir.toString,
-            globFilter = Some("*.parquet")))
-          .withWatermark("ts", "2 hours")
-          .where(col("user_id") < 0 || col("event_id") % 10 === 3)
-          .selectExpr("user_id", "ts", "unix_micros(ts) AS ts_us",
-            "CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents")
-          .as[WarmStart.WsEvent]
-        val q = withRocksDbState(s) {
-          WarmStart.lifetimeTotals(stream, history, flushAtMs)
+        val out = StreamGate.withScratch("graft_ws_sentinel") { case Seq(sentinelDir) =>
+          SentinelFiles.writeFlushSentinel(sentinelDir)
+          val ev = Tables.load(s, dir, "events")
+            .select(col("user_id"), col("event_id"), col("ts"),
+              floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+          // the batch-era rollup (group-count-sized seed, not history)
+          val history = ev.where(col("event_id") % 10 =!= 3)
+            .groupBy("user_id")
+            .agg(count(lit(1)).cast("long").as("n"),
+              sum("cents").cast("long").as("cents"))
+            .as[WarmStart.WsInit]
+            .groupByKey(_.user_id)
+          // flush once the watermark passes the last real event
+          val flushAtMs = ev
+            .agg(max(unix_micros(col("ts").cast("timestamp")))).head()
+            .getLong(0) / 1000 + 1
+          val stream = EventStreams.readFlushed(s, dir, sentinelDir)
+            .withWatermark("ts", "2 hours")
+            .where(col("user_id") < 0 || col("event_id") % 10 === 3)
+            .selectExpr("user_id", "ts", "unix_micros(ts) AS ts_us",
+              "CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents")
+            .as[WarmStart.WsEvent]
+          val plan = WarmStart.lifetimeTotals(stream, history, flushAtMs)
             .filter(col("user_id") >= 0)
-            .writeStream
-            .format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckptDir.toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
+          StreamGate.rocksDbState(s) {
+            StreamGate.toMemory(s, "tws_ws", plan, "append")
+          }
         }
-        try {
-          q.awaitTermination()
-        } finally {
-          q.stop()
-          deleteRecursively(ckptDir)
-          deleteRecursively(sentinelDir)
-        }
-        s.table(name).orderBy("user_id")
+        out.orderBy("user_id")
       },
       Some("""WITH ev AS (
              |  SELECT user_id,

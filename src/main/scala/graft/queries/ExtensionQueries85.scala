@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.io.Tables
 import graft.ops.VersionedTable
+import graft.streaming.StreamGate
 
 /** Round-11 first wave — the storage-layer upgrades the r10 verdict
   * directed, each gated on BOTH logical correctness (DuckDB oracle
@@ -163,44 +164,33 @@ object ExtensionQueries85 {
         val id = vsaRunId.incrementAndGet()
         val path =
           s"${System.getProperty("java.io.tmpdir")}/graft_vsa${tag}_$id"
-        val deltaDir =
-          java.nio.file.Files.createTempDirectory("graft_vsa_delta")
-        val ckptDir =
-          java.nio.file.Files.createTempDirectory("graft_vsa_ckpt")
-        val ev = Tables.load(s, dir, "events")
-          .select(col("event_id"), col("event_type"),
-            floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-        VersionedTable.init(ev.where(col("event_id") % 4 === 0), path)
-        val delta = ev.where(col("event_id") % 4 =!= 0)
-        delta.repartition(3).write.mode("overwrite")
-          .parquet(deltaDir.toString)
-        val apply = (df: DataFrame, batchId: Long) => {
-          VersionedTable.appendIdempotent(df, path, batchId); ()
-        }
-        val q = s.readStream.schema(delta.schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(deltaDir.toString)
-          .writeStream
-          .foreachBatch(apply)
-          .option("checkpointLocation", ckptDir.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
         val replayNoop =
-          try {
-            q.awaitTermination()
-            // at-least-once redelivery drill: replay every committed
-            // batch id — each must refuse (false) and mint no version
-            val vBefore = VersionedTable.latestVersion(path)
-            val refused = VersionedTable.appliedBatches(path).toSeq
-              .map(b => !VersionedTable.appendIdempotent(delta, path, b))
-            val vAfter = VersionedTable.latestVersion(path)
-            if (refused.nonEmpty && refused.forall(identity) &&
-              vBefore == vAfter) 1L
-            else 0L
-          } finally {
-            q.stop()
-            graft.io.FsUtil.deleteRecursively(ckptDir)
-            graft.io.FsUtil.deleteRecursively(deltaDir)
+          StreamGate.withScratch("graft_vsa_delta", "graft_vsa_ckpt") {
+            case Seq(deltaDir, ckptDir) =>
+              val ev = Tables.load(s, dir, "events")
+                .select(col("event_id"), col("event_type"),
+                  floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+              VersionedTable.init(ev.where(col("event_id") % 4 === 0), path)
+              val delta = ev.where(col("event_id") % 4 =!= 0)
+              delta.repartition(3).write.mode("overwrite")
+                .parquet(deltaDir.toString)
+              val apply = (df: DataFrame, batchId: Long) => {
+                VersionedTable.appendIdempotent(df, path, batchId); ()
+              }
+              StreamGate.run(s.readStream.schema(delta.schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(deltaDir.toString)
+                .writeStream
+                .foreachBatch(apply), ckptDir)
+              // at-least-once redelivery drill: replay every committed
+              // batch id — each must refuse (false) and mint no version
+              val vBefore = VersionedTable.latestVersion(path)
+              val refused = VersionedTable.appliedBatches(path).toSeq
+                .map(b => !VersionedTable.appendIdempotent(delta, path, b))
+              val vAfter = VersionedTable.latestVersion(path)
+              if (refused.nonEmpty && refused.forall(identity) &&
+                vBefore == vAfter) 1L
+              else 0L
           }
         VersionedTable.read(s, path)
           .groupBy("event_type")

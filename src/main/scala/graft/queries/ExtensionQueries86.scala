@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ext.{Dedup, Sampling}
 import graft.io.Tables
+import graft.streaming.StreamGate
 
 /** Round-11 second wave — exactly-once streaming ingest for the
   * persisted MinHash band index (q478): the last at-least-once write
@@ -44,48 +45,37 @@ object ExtensionQueries86 {
         val id = bsaRunId.incrementAndGet()
         val path = s"${System.getProperty("java.io.tmpdir")}" +
           s"/graft_bandsa${tag}_$id"
-        val deltaDir =
-          java.nio.file.Files.createTempDirectory("graft_bandsa_delta")
-        val ckptDir =
-          java.nio.file.Files.createTempDirectory("graft_bandsa_ckpt")
         val d = Sampling.hashSplit(Tables.load(s, dir, "documents"),
           "doc_id", "inc", Seq(("corpus", 0.8), ("incoming", 0.2)))
         val incoming = d.filter(col("split") === "incoming")
           .select("doc_id", "text")
         val corpus = d.filter(col("split") === "corpus")
           .select("doc_id", "text")
-        Dedup.writeBandIndex(corpus.where(col("doc_id") % 7 =!= 0),
-          "text", "doc_id", path)
-        val delta = corpus.where(col("doc_id") % 7 === 0)
-        delta.repartition(2).write.mode("overwrite")
-          .parquet(deltaDir.toString)
-        val apply = (df: DataFrame, batchId: Long) => {
-          Dedup.appendToBandIndexIdempotent(df, "text", "doc_id",
-            path, batchId)
-          ()
-        }
-        val q = s.readStream.schema(delta.schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(deltaDir.toString)
-          .writeStream
-          .foreachBatch(apply)
-          .option("checkpointLocation", ckptDir.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try {
-          q.awaitTermination()
-          // at-least-once redelivery drill: every committed id refuses
-          val batches = Dedup.bandIndexAppliedBatches(path)
-          require(batches.size == 2,
-            s"expected 2 streamed batches, got ${batches.size}")
-          batches.foreach(b => require(
-            !Dedup.appendToBandIndexIdempotent(delta, "text", "doc_id",
-              path, b),
-            s"replayed batch $b appended again"))
-        } finally {
-          q.stop()
-          graft.io.FsUtil.deleteRecursively(ckptDir)
-          graft.io.FsUtil.deleteRecursively(deltaDir)
+        StreamGate.withScratch("graft_bandsa_delta", "graft_bandsa_ckpt") {
+          case Seq(deltaDir, ckptDir) =>
+            Dedup.writeBandIndex(corpus.where(col("doc_id") % 7 =!= 0),
+              "text", "doc_id", path)
+            val delta = corpus.where(col("doc_id") % 7 === 0)
+            delta.repartition(2).write.mode("overwrite")
+              .parquet(deltaDir.toString)
+            val apply = (df: DataFrame, batchId: Long) => {
+              Dedup.appendToBandIndexIdempotent(df, "text", "doc_id",
+                path, batchId)
+              ()
+            }
+            StreamGate.run(s.readStream.schema(delta.schema)
+              .option("maxFilesPerTrigger", 1)
+              .parquet(deltaDir.toString)
+              .writeStream
+              .foreachBatch(apply), ckptDir)
+            // at-least-once redelivery drill: every committed id refuses
+            val batches = Dedup.bandIndexAppliedBatches(path)
+            require(batches.size == 2,
+              s"expected 2 streamed batches, got ${batches.size}")
+            batches.foreach(b => require(
+              !Dedup.appendToBandIndexIdempotent(delta, "text", "doc_id",
+                path, b),
+              s"replayed batch $b appended again"))
         }
         Dedup.nearDupJoinIndexed(incoming, s, path, "text", "doc_id", 0.5)
           .orderBy("da", "db")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.io.Tables
 import graft.ops.VersionedTable
+import graft.streaming.StreamGate
 
 /** Round-11 third wave — the storage layer becomes a full SQL citizen:
   * q481 drives the versioned table's WRITE path through the DataSource
@@ -280,10 +281,6 @@ object ExtensionQueries87 {
         val id = vcdcRunId.incrementAndGet()
         val path = s"${System.getProperty("java.io.tmpdir")}" +
           s"/graft_vcdc${tag}_$id"
-        val deltaDir =
-          java.nio.file.Files.createTempDirectory("graft_vcdc_delta")
-        val ckptDir =
-          java.nio.file.Files.createTempDirectory("graft_vcdc_ckpt")
         val ev = Tables.load(s, dir, "events")
           .select(col("event_id"), col("event_type"),
             floor(col("value") * 100 + 0.5).cast("long").as("cents"))
@@ -296,35 +293,28 @@ object ExtensionQueries87 {
             .withColumn("op", lit(1)))
           .unionByName(base.where(col("event_type") === "error")
             .withColumn("op", lit(-1)))
-        cdc.repartition(3, col("event_id"))
-          .write.mode("overwrite").parquet(deltaDir.toString)
-        val apply = (df: org.apache.spark.sql.DataFrame, bid: Long) => {
-          VersionedTable.applyCdcIdempotent(s, path, df,
-            Seq("event_id"), "op", bid)
-          ()
-        }
-        val q = s.readStream.schema(cdc.schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(deltaDir.toString)
-          .writeStream
-          .foreachBatch(apply)
-          .option("checkpointLocation", ckptDir.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
         val replayNoop =
-          try {
-            q.awaitTermination()
-            val vBefore = VersionedTable.latestVersion(path)
-            val refused = VersionedTable.appliedBatches(path).toSeq
-              .map(b => !VersionedTable.applyCdcIdempotent(s, path, cdc,
-                Seq("event_id"), "op", b))
-            if (refused.nonEmpty && refused.forall(identity) &&
-              VersionedTable.latestVersion(path) == vBefore) 1L
-            else 0L
-          } finally {
-            q.stop()
-            graft.io.FsUtil.deleteRecursively(ckptDir)
-            graft.io.FsUtil.deleteRecursively(deltaDir)
+          StreamGate.withScratch("graft_vcdc_delta", "graft_vcdc_ckpt") {
+            case Seq(deltaDir, ckptDir) =>
+              cdc.repartition(3, col("event_id"))
+                .write.mode("overwrite").parquet(deltaDir.toString)
+              val apply = (df: org.apache.spark.sql.DataFrame, bid: Long) => {
+                VersionedTable.applyCdcIdempotent(s, path, df,
+                  Seq("event_id"), "op", bid)
+                ()
+              }
+              StreamGate.run(s.readStream.schema(cdc.schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(deltaDir.toString)
+                .writeStream
+                .foreachBatch(apply), ckptDir)
+              val vBefore = VersionedTable.latestVersion(path)
+              val refused = VersionedTable.appliedBatches(path).toSeq
+                .map(b => !VersionedTable.applyCdcIdempotent(s, path, cdc,
+                  Seq("event_id"), "op", b))
+              if (refused.nonEmpty && refused.forall(identity) &&
+                VersionedTable.latestVersion(path) == vBefore) 1L
+              else 0L
           }
         VersionedTable.read(s, path)
           .groupBy("event_type")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.io.Tables
 import graft.ops.VersionedTable
+import graft.streaming.StreamGate
 
 /** Round-11 fifth wave — manifest metadata drives the PLANNER, not
   * just the file listing: q490 pins that manifest file skipping feeds
@@ -183,28 +184,21 @@ object ExtensionQueries89 {
         val tmp = System.getProperty("java.io.tmpdir")
         val src = s"$tmp/graft_vstream_src$tag"
         val dst = s"$tmp/graft_vstream_dst$tag"
-        val ckpt =
-          java.nio.file.Files.createTempDirectory("graft_vstream_ckpt")
         val ev = Tables.load(s, dir, "events")
           .select(col("event_id"), col("event_type"),
             floor(col("value") * 100 + 0.5).cast("long").as("cents"))
         VersionedTable.init(ev.where(col("event_id") % 3 === 0), src)
         VersionedTable.append(ev.where(col("event_id") % 3 === 1), src)
         VersionedTable.init(ev.limit(0), dst)
-        def runOnce(): Unit = {
-          val q = s.readStream.format("graft-versioned").load(src)
-            .writeStream
-            .foreachBatch((df: org.apache.spark.sql.DataFrame,
-                           bid: Long) => {
-              VersionedTable.appendIdempotent(df, dst, bid); ()
-            })
-            .option("checkpointLocation", ckpt.toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          try q.awaitTermination() finally q.stop()
-        }
         val replayNoop =
-          try {
+          StreamGate.withScratch("graft_vstream_ckpt") { case Seq(ckpt) =>
+            def runOnce(): Unit = StreamGate.run(
+              s.readStream.format("graft-versioned").load(src)
+                .writeStream
+                .foreachBatch((df: org.apache.spark.sql.DataFrame,
+                               bid: Long) => {
+                  VersionedTable.appendIdempotent(df, dst, bid); ()
+                }), ckpt)
             runOnce() // batch 0: the two pre-stream commits
             VersionedTable.append(ev.where(col("event_id") % 3 === 2), src)
             runOnce() // batch 1: only the commit made while down
@@ -215,7 +209,7 @@ object ExtensionQueries89 {
             if (refused.nonEmpty && refused.forall(identity) &&
               VersionedTable.latestVersion(dst) == vBefore) 1L
             else 0L
-          } finally graft.io.FsUtil.deleteRecursively(ckpt)
+          }
         VersionedTable.read(s, dst)
           .groupBy("event_type")
           .agg(count(lit(1)).cast("long").as("n"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.io.Tables
 import graft.ops.VersionedTable
+import graft.streaming.StreamGate
 
 /** Round-12 first wave — SQL row-level DML through the catalog (the
   * r11 verdict's top item): q503 DELETE FROM on the deletion-vector
@@ -194,8 +195,6 @@ object ExtensionQueries92 {
         val tmp = System.getProperty("java.io.tmpdir")
         val src = s"$tmp/graft_adm_src$tag"
         val dst = s"$tmp/graft_adm_dst$tag"
-        val ckpt =
-          java.nio.file.Files.createTempDirectory("graft_adm_ckpt")
         val ev = Tables.load(s, dir, "events")
           .select(col("event_id"), col("event_type"),
             floor(col("value") * 100 + 0.5).cast("long").as("cents"))
@@ -203,25 +202,18 @@ object ExtensionQueries92 {
         VersionedTable.append(ev.where(col("event_id") % 4 === 1), src)
         VersionedTable.append(ev.where(col("event_id") % 4 === 2), src)
         VersionedTable.init(ev.limit(0), dst)
-        def runOnce(): String = {
-          val q = s.readStream.format("graft-versioned")
-            .option("maxVersionsPerTrigger", "1").load(src)
-            .writeStream
-            .foreachBatch((df: org.apache.spark.sql.DataFrame,
-                           bid: Long) => {
-              VersionedTable.appendIdempotent(df, dst, bid); ()
-            })
-            .option("checkpointLocation", ckpt.toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          try {
-            q.awaitTermination()
-            q.recentProgress.flatMap(_.sources.map(_.description))
-              .mkString("\n")
-          } finally q.stop()
-        }
         val (pacedOk, dsv2) =
-          try {
+          StreamGate.withScratch("graft_adm_ckpt") { case Seq(ckpt) =>
+            def runOnce(): String = StreamGate.run(
+              s.readStream.format("graft-versioned")
+                .option("maxVersionsPerTrigger", "1").load(src)
+                .writeStream
+                .foreachBatch((df: org.apache.spark.sql.DataFrame,
+                               bid: Long) => {
+                  VersionedTable.appendIdempotent(df, dst, bid); ()
+                }), ckpt)
+              .recentProgress.flatMap(_.sources.map(_.description))
+              .mkString("\n")
             val descr = runOnce() // 3 backlog versions, 1 per batch
             val afterCatchup = VersionedTable.appliedBatches(dst).size
             VersionedTable.append(ev.where(col("event_id") % 4 === 3), src)
@@ -230,7 +222,7 @@ object ExtensionQueries92 {
             (if (afterCatchup == 3 && afterResume == 4) 1L else 0L,
               if (descr.contains("GraftVersionedMicroBatchStream")) 1L
               else 0L)
-          } finally graft.io.FsUtil.deleteRecursively(ckpt)
+          }
         VersionedTable.read(s, dst)
           .groupBy("event_type")
           .agg(count(lit(1)).cast("long").as("n"),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.io.Tables
 import graft.ops.VersionedTable
+import graft.streaming.StreamGate
 
 /** Round-13 first wave — the r12 verdict's top two items:
   *
@@ -121,8 +122,6 @@ object ExtensionQueries93 {
         val dst = s"$tmp/graft_nss_dst${tag}_$id"
         graft.io.FsUtil.deleteRecursively(src)
         graft.io.FsUtil.deleteRecursively(dst)
-        val ckpt = java.nio.file.Files
-          .createTempDirectory("graft_nss_ckpt").toString
         val ev = Tables.load(s, dir, "events")
           .select(col("event_id"), col("event_type"),
             floor(col("value") * 100 + 0.5).cast("long").as("cents"))
@@ -132,44 +131,41 @@ object ExtensionQueries93 {
         // repartition(1) forces one schema-bearing part file (a
         // zero-partition empty frame would write none)
         VersionedTable.init(ev.limit(0).repartition(1), dst)
-        def run(): Unit = {
-          val q = s.readStream.format("graft-versioned")
-            .option("maxVersionsPerTrigger", 2).load(src)
-            .writeStream.format("graft-versioned")
-            .option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start(dst)
-          try q.awaitTermination() finally q.stop()
+        StreamGate.withScratch("graft_nss_ckpt") { case Seq(ckpt) =>
+          def run(): Unit = StreamGate.run(
+            s.readStream.format("graft-versioned")
+              .option("maxVersionsPerTrigger", 2).load(src)
+              .writeStream.format("graft-versioned")
+              .option("path", dst), ckpt)
+          run()
+          val paced = VersionedTable.appliedBatches(dst).size
+          val vAfter1 = VersionedTable.latestVersion(dst)
+          // restart with nothing new: no version minted
+          run()
+          val restartNoop =
+            if (VersionedTable.latestVersion(dst) == vAfter1) 1L else 0L
+          // two more source commits, resume incrementally
+          (4 to 5).foreach(i => VersionedTable.append(
+            ev.where(col("event_id") % 6 === i), src))
+          run()
+          // redelivery drill: every committed epoch refuses a replay
+          val vBefore = VersionedTable.latestVersion(dst)
+          val refused = VersionedTable.appliedBatches(dst).toSeq.map(b =>
+            !VersionedTable.appendIdempotent(ev.limit(1), dst, b))
+          val replayNoop =
+            if (refused.nonEmpty && refused.forall(identity) &&
+              VersionedTable.latestVersion(dst) == vBefore) 1L
+            else 0L
+          VersionedTable.read(s, dst)
+            .groupBy("event_type")
+            .agg(count(lit(1)).cast("long").as("n"),
+              sum("cents").as("sum_cents"))
+            .select(col("event_type"), col("n"), col("sum_cents"),
+              lit(if (paced >= 2) 1L else 0L).as("paced"),
+              lit(restartNoop).as("restart_noop"),
+              lit(replayNoop).as("replay_noop"))
+            .orderBy("event_type")
         }
-        run()
-        val paced = VersionedTable.appliedBatches(dst).size
-        val vAfter1 = VersionedTable.latestVersion(dst)
-        // restart with nothing new: no version minted
-        run()
-        val restartNoop =
-          if (VersionedTable.latestVersion(dst) == vAfter1) 1L else 0L
-        // two more source commits, resume incrementally
-        (4 to 5).foreach(i => VersionedTable.append(
-          ev.where(col("event_id") % 6 === i), src))
-        run()
-        // redelivery drill: every committed epoch refuses a replay
-        val vBefore = VersionedTable.latestVersion(dst)
-        val refused = VersionedTable.appliedBatches(dst).toSeq.map(b =>
-          !VersionedTable.appendIdempotent(ev.limit(1), dst, b))
-        val replayNoop =
-          if (refused.nonEmpty && refused.forall(identity) &&
-            VersionedTable.latestVersion(dst) == vBefore) 1L
-          else 0L
-        graft.io.FsUtil.deleteRecursively(ckpt)
-        VersionedTable.read(s, dst)
-          .groupBy("event_type")
-          .agg(count(lit(1)).cast("long").as("n"),
-            sum("cents").as("sum_cents"))
-          .select(col("event_type"), col("n"), col("sum_cents"),
-            lit(if (paced >= 2) 1L else 0L).as("paced"),
-            lit(restartNoop).as("restart_noop"),
-            lit(replayNoop).as("replay_noop"))
-          .orderBy("event_type")
       },
       Some("""WITH ev AS (
              |  SELECT event_type,
@@ -208,8 +204,6 @@ object ExtensionQueries93 {
         val out = s"$tmp/graft_scdf_out${tag}_$id"
         graft.io.FsUtil.deleteRecursively(path)
         graft.io.FsUtil.deleteRecursively(out)
-        val ckpt = java.nio.file.Files
-          .createTempDirectory("graft_scdf_ckpt").toString
         // a 1-in-5 slice: the gate's value is the per-commit diff
         // algebra, not sink volume — the full-table shape is q498's
         // (batch); restart is q520, batch-vs-stream algebra is q519
@@ -221,15 +215,12 @@ object ExtensionQueries93 {
         VersionedTable.append(ev.where(col("event_id") % 2 === 1), path)
         VersionedTable.deleteWhereDV(s, path,
           col("event_type") === "error")
-        val q = s.readStream.format("graft-versioned")
-          .option("readChangeFeed", "true").load(path)
-          .writeStream.format("parquet").outputMode("append")
-          .option("path", out)
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        graft.io.FsUtil.deleteRecursively(ckpt)
+        StreamGate.withScratch("graft_scdf_ckpt") { case Seq(ckpt) =>
+          StreamGate.run(s.readStream.format("graft-versioned")
+            .option("readChangeFeed", "true").load(path)
+            .writeStream.format("parquet").outputMode("append")
+            .option("path", out), ckpt)
+        }
         s.read.parquet(out)
           .groupBy("commit_version", "change", "event_type")
           .agg(count(lit(1)).cast("long").as("n"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.io.Tables
 import graft.ops.VersionedTable
+import graft.streaming.StreamGate
 
 /** Round-13 second wave — the r12 verdict's SQL-surface items:
   *
@@ -182,8 +183,6 @@ object ExtensionQueries94 {
         val out = s"$tmp/graft_cdcsc_out$tag"
         graft.io.FsUtil.deleteRecursively(path)
         graft.io.FsUtil.deleteRecursively(out)
-        val ckpt = java.nio.file.Files
-          .createTempDirectory("graft_cdcsc_ckpt").toString
         // 1-in-3 slice: the gate's value is CoW diffs recorded at
         // write time and served by the stream, not sink volume
         val ev = Tables.load(s, dir, "events")
@@ -198,15 +197,12 @@ object ExtensionQueries94 {
           ev.where(col("event_type") === "purchase")
             .withColumn("cents", col("cents") + 5L),
           Seq("event_id"))
-        val q = s.readStream.format("graft-versioned")
-          .option("readChangeFeed", "true").load(path)
-          .writeStream.format("parquet").outputMode("append")
-          .option("path", out)
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        graft.io.FsUtil.deleteRecursively(ckpt)
+        StreamGate.withScratch("graft_cdcsc_ckpt") { case Seq(ckpt) =>
+          StreamGate.run(s.readStream.format("graft-versioned")
+            .option("readChangeFeed", "true").load(path)
+            .writeStream.format("parquet").outputMode("append")
+            .option("path", out), ckpt)
+        }
         s.read.parquet(out)
           .groupBy("commit_version", "change", "event_type")
           .agg(count(lit(1)).cast("long").as("n"),

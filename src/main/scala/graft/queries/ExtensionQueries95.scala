@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.io.Tables
 import graft.ops.VersionedTable
+import graft.streaming.StreamGate
 
 /** Round-14 first wave — the r13 verdict's storage-scale items:
   *
@@ -294,8 +295,6 @@ object ExtensionQueries95 {
         val out = s"$tmp/graft_cdfr_out${tag}_$id"
         graft.io.FsUtil.deleteRecursively(path)
         graft.io.FsUtil.deleteRecursively(out)
-        val ckpt = java.nio.file.Files
-          .createTempDirectory("graft_cdfr_ckpt").toString
         // a 1-in-7 slice (odd ids included): restart exactness, not volume
         // (r15: a localCheckpoint staging here was measured 3.09s ->
         // 3.59-3.84s across 3 isolation runs and REVERTED — cheap-scan
@@ -306,35 +305,31 @@ object ExtensionQueries95 {
             floor(col("value") * 100 + 0.5).cast("long").as("cents"))
         VersionedTable.init(ev.where(col("event_id") % 2 === 0), path)
         VersionedTable.append(ev.where(col("event_id") % 2 === 1), path)
-        def run(): Unit = {
-          val q = s.readStream.format("graft-versioned")
-            .option("readChangeFeed", "true").load(path)
-            .writeStream.format("parquet").outputMode("append")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          try q.awaitTermination() finally q.stop()
+        StreamGate.withScratch("graft_cdfr_ckpt") { case Seq(ckpt) =>
+          def run(): Unit = StreamGate.run(
+            s.readStream.format("graft-versioned")
+              .option("readChangeFeed", "true").load(path)
+              .writeStream.format("parquet").outputMode("append")
+              .option("path", out), ckpt)
+          run()
+          val firstRows = s.read.parquet(out).count()
+          VersionedTable.append(
+            ev.where(col("event_type") === "view")
+              .withColumn("cents", col("cents") + 7L), path)
+          VersionedTable.deleteWhereDV(s, path,
+            col("event_type") === "error")
+          run()
+          val sink = s.read.parquet(out)
+          val restartOk =
+            if (sink.count() > firstRows && firstRows > 0) 1L else 0L
+          sink.groupBy("commit_version", "change", "event_type")
+            .agg(count(lit(1)).cast("long").as("n"),
+              sum("cents").as("sum_cents"))
+            .select(col("commit_version"), col("change"),
+              col("event_type"), col("n"), col("sum_cents"),
+              lit(restartOk).as("restart_ok"))
+            .orderBy("commit_version", "change", "event_type")
         }
-        run()
-        val firstRows = s.read.parquet(out).count()
-        VersionedTable.append(
-          ev.where(col("event_type") === "view")
-            .withColumn("cents", col("cents") + 7L), path)
-        VersionedTable.deleteWhereDV(s, path,
-          col("event_type") === "error")
-        run()
-        val sink = s.read.parquet(out)
-        val restartOk =
-          if (sink.count() > firstRows && firstRows > 0) 1L else 0L
-        graft.io.FsUtil.deleteRecursively(ckpt)
-        sink.groupBy("commit_version", "change", "event_type")
-          .agg(count(lit(1)).cast("long").as("n"),
-            sum("cents").as("sum_cents"))
-          .select(col("commit_version"), col("change"),
-            col("event_type"), col("n"), col("sum_cents"),
-            lit(restartOk).as("restart_ok"))
-          .orderBy("commit_version", "change", "event_type")
       },
       Some("""WITH ev AS (
              |  SELECT event_id, event_type,

@@ -1,11 +1,8 @@
 package graft.queries
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.streaming.{CdcUpsert, EventStreams}
+import graft.streaming.{CdcUpsert, EventStreams, SentinelFiles, StreamGate}
 import DriverSide._
 
 /** Oracle-gated streaming entries: the query fn drives a REAL
@@ -17,70 +14,6 @@ import DriverSide._
   */
 object StreamingQueries {
 
-  private val runId = new AtomicInteger(0)
-  private val dedupRunId = new AtomicInteger(0)
-  private val sessRunId = new AtomicInteger(0)
-  private val joinRunId = new AtomicInteger(0)
-  private val outerRunId = new AtomicInteger(0)
-  private val swRunId = new AtomicInteger(0)
-  private val enrichRunId = new AtomicInteger(0)
-  private val slideRunId = new AtomicInteger(0)
-  private val convRunId = new AtomicInteger(0)
-  private val dauRunId = new AtomicInteger(0)
-  private val rateRunId = new AtomicInteger(0)
-  private val anomRunId = new AtomicInteger(0)
-  private val ingestRunId = new AtomicInteger(0)
-  private val convRateRunId = new AtomicInteger(0)
-  private val hllDauRunId = new AtomicInteger(0)
-  private val funnelRunId = new AtomicInteger(0)
-  private val momentsRunId = new AtomicInteger(0)
-  private val scd2RunId = new AtomicInteger(0)
-  private val sprtRunId = new AtomicInteger(0)
-  private val lateRunId = new AtomicInteger(0)
-  private val cadRunId = new AtomicInteger(0)
-  private val srmRunId = new AtomicInteger(0)
-  private val balRunId = new AtomicInteger(0)
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    graft.io.FsUtil.deleteRecursively(p)
-
-  /** Run `body` with the RocksDB state store provider — the 100 TB
-    * configuration for keyed streaming state: RocksDB spills keyed state
-    * to local SSD instead of holding it on the executor heap, so state
-    * capacity scales with disk, not JVM memory, and snapshots upload to
-    * the checkpoint incrementally. The stateful gate queries (q74, q76)
-    * run under it so the scale path is what correctness is measured on;
-    * the provider is a per-query-start session conf, restored after so
-    * co-resident queries keep their own setting.
-    */
-  private def withRocksDbState[T](s: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    // escape hatch for A/B timing the providers (tools/QueryTimer):
-    // SPARK_GRAFT_STREAM_STATE=heap keeps the default heap provider
-    if (sys.env.get("SPARK_GRAFT_STREAM_STATE").contains("heap")) return body
-    val confs = Seq(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      // changelog checkpointing: commit uploads the batch's delta instead
-      // of a full SST snapshot — the production setting for frequent
-      // small commits (snapshots still happen, asynchronously, every
-      // `minDeltasForSnapshot` batches); measured q74 4.16s → 2.53s
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        "true",
-      // state partition count is fixed at the checkpoint's first batch —
-      // it is a SIZING knob, not a correctness one. Each partition is a
-      // RocksDB instance paying per-batch open/commit; size it to keyed-
-      // state volume (a cluster run sizes UP for state that exceeds one
-      // node's disk), not to the session's batch shuffle width
-      "spark.sql.shuffle.partitions" -> "8")
-    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-  }
-
   /** q54: EventStreams.hourlyCounts driven as a stream over the events
     * fixture; oracle = batch q21's SQL. Complete output mode emits every
     * window at the end, which on a finite input equals the batch
@@ -91,35 +24,14 @@ object StreamingQueries {
     Q(
       "q54_streaming_hourly",
       (s, dir) => {
-        // drop the previous invocation's memory-sink table (it pins the
-        // full result in driver memory; bench/verify call this fn
-        // repeatedly in one JVM)
-        val id = runId.incrementAndGet()
-        if (id > 1) s.catalog.dropTempView(s"graft_stream_hourly_${id - 1}")
-        val name = s"graft_stream_hourly_$id"
-        val ckptDir = java.nio.file.Files.createTempDirectory("graft_stream_ckpt")
         // AvailableNow: plan ONE micro-batch over everything currently in
         // the source, then self-terminate — drops the continuous-trigger
         // poll/commit cycles that dominated the r02 bench (5.65s); the
         // streaming machinery (source offsets, state store, sink commit)
         // is unchanged, so the oracle row still gates real streaming.
-        val q = EventStreams.hourlyCounts(
-            EventStreams.readStream(s, dir, globFilter = Some("events.parquet")))
-          .writeStream
-          .format("memory")
-          .queryName(name)
-          .outputMode("complete")
-          .option("checkpointLocation", ckptDir.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try {
-          q.awaitTermination()
-        } finally {
-          q.stop()
-          // the memory sink holds the data; the checkpoint is disposable
-          graft.io.FsUtil.deleteRecursively(ckptDir)
-        }
-        s.table(name)
+        StreamGate.toMemory(s, "hourly", EventStreams.hourlyCounts(
+            EventStreams.readStream(s, dir, globFilter = Some("events.parquet"))),
+            "complete")
           .withColumn("hour", col("hour").cast("timestamp_ntz"))
           .orderBy("hour", "event_type")
       },
@@ -144,32 +56,16 @@ object StreamingQueries {
     Q(
       "q74_streaming_dedup",
       (s, dir) => {
-        val id = dedupRunId.incrementAndGet()
-        if (id > 1) s.catalog.dropTempView(s"graft_stream_dedup_${id - 1}")
-        val name = s"graft_stream_dedup_$id"
-        val ckptDir = java.nio.file.Files.createTempDirectory("graft_dedup_ckpt")
-        val q = withRocksDbState(s) {
+        val deduped =
           EventStreams.readStream(s, dir, globFilter = Some("events.parquet"))
-          .withColumn("__copy", explode(array(lit(1), lit(2)))) // plant dups
-          .drop("__copy")
-          .withWatermark("ts", "2 hours")
-          .dropDuplicatesWithinWatermark("event_id")
-          .select("event_id", "user_id", "event_type", "value")
-          .writeStream
-          .format("memory")
-          .queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", ckptDir.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        }
-        try {
-          q.awaitTermination()
-        } finally {
-          q.stop()
-          deleteRecursively(ckptDir)
-        }
-        s.table(name).orderBy("event_id")
+            .withColumn("__copy", explode(array(lit(1), lit(2)))) // plant dups
+            .drop("__copy")
+            .withWatermark("ts", "2 hours")
+            .dropDuplicatesWithinWatermark("event_id")
+            .select("event_id", "user_id", "event_type", "value")
+        StreamGate.rocksDbState(s) {
+          StreamGate.toMemory(s, "dedup", deduped, "append")
+        }.orderBy("event_id")
       },
       Some("""SELECT event_id, user_id, event_type, value
              |FROM events
@@ -191,41 +87,19 @@ object StreamingQueries {
       "q76_streaming_sessions",
       (s, dir) => {
         import s.implicits._
-        val id = sessRunId.incrementAndGet()
-        if (id > 1) s.catalog.dropTempView(s"graft_stream_sessions_${id - 1}")
-        val name = s"graft_stream_sessions_$id"
-        val ckptDir = java.nio.file.Files.createTempDirectory("graft_sess_ckpt")
-        val sentinelDir = java.nio.file.Files.createTempDirectory("graft_sess_sentinel")
-        // raw-schema sentinel parquet: ts in NANOS like the fixture
-        // (2100-01-01 — far past any fixture event + watermark delay)
-        // r15: driver-side constant-row write (no Spark job + commit
-        // protocol for one sentinel row — measured 0.31s → 0.03s/gate)
-        graft.streaming.SentinelFiles.writeFlushSentinel(sentinelDir)
-        val stream = EventStreams
-          .readStream(s, dir, globFilter = Some("events.parquet"))
-          .unionByName(EventStreams.readStream(s, sentinelDir.toString,
-            globFilter = Some("*.parquet")))
-          .selectExpr("user_id", "ts", "unix_micros(ts) AS ts_us", "event_id", "value")
-          .as[EventStreams.SessionEvent]
-        val q = withRocksDbState(s) {
-          EventStreams.gapSessions(stream)
-            .filter(col("user_id") >= 0)
-            .writeStream
-            .format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckptDir.toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        }
-        try {
-          q.awaitTermination()
-        } finally {
-          q.stop()
-          deleteRecursively(ckptDir)
-          deleteRecursively(sentinelDir)
-        }
-        s.table(name).orderBy("user_id", "session_idx")
+        StreamGate.withScratch("graft_sess_sentinel") { case Seq(sentinelDir) =>
+          // raw-schema sentinel parquet: ts in NANOS like the fixture
+          // (2100-01-01 — far past any fixture event + watermark delay)
+          SentinelFiles.writeFlushSentinel(sentinelDir)
+          val stream = EventStreams.readFlushed(s, dir, sentinelDir)
+            .selectExpr("user_id", "ts", "unix_micros(ts) AS ts_us", "event_id", "value")
+            .as[EventStreams.SessionEvent]
+          StreamGate.rocksDbState(s) {
+            StreamGate.toMemory(s, "sessions",
+              EventStreams.gapSessions(stream).filter(col("user_id") >= 0),
+              "append")
+          }
+        }.orderBy("user_id", "session_idx")
       },
       // the oracle IS batch q29's sessionization SQL: gap > 3600
       // fractional-epoch seconds, per-user (ts, event_id) order
@@ -256,10 +130,6 @@ object StreamingQueries {
     Q(
       "q81_stream_stream_join",
       (s, dir) => {
-        val id = joinRunId.incrementAndGet()
-        if (id > 1) s.catalog.dropTempView(s"graft_stream_join_${id - 1}")
-        val name = s"graft_stream_join_$id"
-        val ckptDir = java.nio.file.Files.createTempDirectory("graft_ssj_ckpt")
         // r15: both join sides derive from ONE source stream (a
         // stream-stream SELF-join) instead of two independent
         // readStream instances — one FileStreamSource in the offset
@@ -275,28 +145,15 @@ object StreamingQueries {
           .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
             col("ts").as("p_ts"))
           .withWatermark("p_ts", "2 hours")
-        val q = withRocksDbState(s) {
-          clicks.join(purchases,
-              col("user_id") === col("p_user")
-                && col("p_ts") >= col("c_ts")
-                && col("p_ts") <= col("c_ts") + expr("INTERVAL 1 HOUR"))
-            .select(col("user_id"), col("click_id"), col("purchase_id"),
-              (unix_micros(col("p_ts")) - unix_micros(col("c_ts"))).as("gap_us"))
-            .writeStream
-            .format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckptDir.toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        }
-        try {
-          q.awaitTermination()
-        } finally {
-          q.stop()
-          deleteRecursively(ckptDir)
-        }
-        s.table(name).orderBy("user_id", "click_id", "purchase_id")
+        val joined = clicks.join(purchases,
+            col("user_id") === col("p_user")
+              && col("p_ts") >= col("c_ts")
+              && col("p_ts") <= col("c_ts") + expr("INTERVAL 1 HOUR"))
+          .select(col("user_id"), col("click_id"), col("purchase_id"),
+            (unix_micros(col("p_ts")) - unix_micros(col("c_ts"))).as("gap_us"))
+        StreamGate.rocksDbState(s) {
+          StreamGate.toMemory(s, "join", joined, "append")
+        }.orderBy("user_id", "click_id", "purchase_id")
       },
       Some("""SELECT c.user_id, c.event_id AS click_id, p.event_id AS purchase_id,
              |  CAST(epoch_us(p.ts) - epoch_us(c.ts) AS BIGINT) AS gap_us
@@ -326,63 +183,44 @@ object StreamingQueries {
       "q82_stream_outer_join",
       (s, dir) => {
         import s.implicits._
-        val id = outerRunId.incrementAndGet()
-        if (id > 1) s.catalog.dropTempView(s"graft_stream_outer_${id - 1}")
-        val name = s"graft_stream_outer_$id"
-        val ckptDir = java.nio.file.Files.createTempDirectory("graft_sso_ckpt")
-        val sentinelDir = java.nio.file.Files.createTempDirectory("graft_sso_sentinel")
-        // r15: driver-side constant-row write (see SentinelFiles)
-        graft.streaming.SentinelFiles.writeEvents(sentinelDir, Seq(
-          (-1L, EventStreams.FlushSentinelNanos, -1L, "click", 0.0, "{}"),
-          (-2L, EventStreams.FlushSentinelNanos, -2L, "purchase", 0.0, "{}")))
-        // r15: ONE events source + ONE sentinel source shared by both
-        // sides (a self-join over the union) instead of four
-        // FileStreamSource instances — half the offset-log entries and
-        // per-batch directory listings; watermark semantics unchanged
-        // (each side still carries its own watermark node, global
-        // watermark = min, and each side's typed sentinel survives the
-        // event_type filter exactly as before)
-        val base = EventStreams
-          .readStream(s, dir, globFilter = Some("events.parquet"))
-          .unionByName(EventStreams.readStream(s, sentinelDir.toString,
-            globFilter = Some("*.parquet")))
-        def side(eventType: String) =
-          base.where(col("event_type") === eventType)
-        val clicks = side("click")
-          .select(col("user_id"), col("event_id").as("click_id"), col("ts").as("c_ts"))
-          .withWatermark("c_ts", "2 hours")
-        val purchases = side("purchase")
-          .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-            col("ts").as("p_ts"))
-          .withWatermark("p_ts", "2 hours")
-        val q = withRocksDbState(s) {
-          clicks.join(purchases,
+        val out = StreamGate.withScratch("graft_sso_sentinel") { case Seq(sentinelDir) =>
+          // r15: driver-side constant-row write (see SentinelFiles)
+          SentinelFiles.writeEvents(sentinelDir, Seq(
+            (-1L, EventStreams.FlushSentinelNanos, -1L, "click", 0.0, "{}"),
+            (-2L, EventStreams.FlushSentinelNanos, -2L, "purchase", 0.0, "{}")))
+          // r15: ONE events source + ONE sentinel source shared by both
+          // sides (a self-join over the union) instead of four
+          // FileStreamSource instances — half the offset-log entries and
+          // per-batch directory listings; watermark semantics unchanged
+          // (each side still carries its own watermark node, global
+          // watermark = min, and each side's typed sentinel survives the
+          // event_type filter exactly as before)
+          val base = EventStreams.readFlushed(s, dir, sentinelDir)
+          def side(eventType: String) =
+            base.where(col("event_type") === eventType)
+          val clicks = side("click")
+            .select(col("user_id"), col("event_id").as("click_id"), col("ts").as("c_ts"))
+            .withWatermark("c_ts", "2 hours")
+          val purchases = side("purchase")
+            .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
+              col("ts").as("p_ts"))
+            .withWatermark("p_ts", "2 hours")
+          val plan = clicks.join(purchases,
               col("user_id") === col("p_user")
                 && col("p_ts") >= col("c_ts")
                 && col("p_ts") <= col("c_ts") + expr("INTERVAL 1 HOUR"),
               "left_outer")
             .select(col("user_id"), col("click_id"), col("purchase_id"),
               (unix_micros(col("p_ts")) - unix_micros(col("c_ts"))).as("gap_us"))
-            .writeStream
-            .format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckptDir.toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        }
-        try {
-          q.awaitTermination()
-        } finally {
-          q.stop()
-          deleteRecursively(ckptDir)
-          deleteRecursively(sentinelDir)
+          StreamGate.rocksDbState(s) {
+            StreamGate.toMemory(s, "outer", plan, "append")
+          }
         }
         // batch-side sentinel filter (see scaladoc above — it must not
         // enter the streaming plan); the sentinel click never actually
         // emits (nothing later advances the watermark past its window),
         // so this is belt-and-braces
-        s.table(name).where(col("user_id") >= 0)
+        out.where(col("user_id") >= 0)
           .orderBy("user_id", "click_id", "purchase_id")
       },
       Some("""SELECT c.user_id, c.event_id AS click_id, p.event_id AS purchase_id,
@@ -408,21 +246,11 @@ object StreamingQueries {
       "q102_streaming_session_window",
       (s, dir) => {
         import s.implicits._
-        val id = swRunId.incrementAndGet()
-        if (id > 1) s.catalog.dropTempView(s"graft_stream_sw_${id - 1}")
-        val name = s"graft_stream_sw_$id"
-        val ckptDir = java.nio.file.Files.createTempDirectory("graft_sw_ckpt")
-        val sentinelDir = java.nio.file.Files.createTempDirectory("graft_sw_sentinel")
-        // r15: driver-side constant-row write (no Spark job + commit
-        // protocol for one sentinel row — measured 0.31s → 0.03s/gate)
-        graft.streaming.SentinelFiles.writeFlushSentinel(sentinelDir)
-        val stream = EventStreams
-          .readStream(s, dir, globFilter = Some("events.parquet"))
-          .unionByName(EventStreams.readStream(s, sentinelDir.toString,
-            globFilter = Some("*.parquet")))
-          .withWatermark("ts", "2 hours")
-        val q = withRocksDbState(s) {
-          stream
+        val out = StreamGate.withScratch("graft_sw_sentinel") { case Seq(sentinelDir) =>
+          SentinelFiles.writeFlushSentinel(sentinelDir)
+          val stream = EventStreams.readFlushed(s, dir, sentinelDir)
+            .withWatermark("ts", "2 hours")
+          val plan = stream
             .groupBy(col("user_id"), session_window(col("ts"), "1 hour").as("sw"))
             .agg(count(lit(1)).cast("long").as("n_events"),
               round(sum("value"), 2).as("session_value"))
@@ -430,22 +258,11 @@ object StreamingQueries {
               col("sw.start").cast("timestamp_ntz").as("session_start"),
               col("sw.end").cast("timestamp_ntz").as("session_end"),
               col("n_events"), col("session_value"))
-            .writeStream
-            .format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckptDir.toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
+          StreamGate.rocksDbState(s) {
+            StreamGate.toMemory(s, "sw", plan, "append")
+          }
         }
-        try {
-          q.awaitTermination()
-        } finally {
-          q.stop()
-          deleteRecursively(ckptDir)
-          deleteRecursively(sentinelDir)
-        }
-        s.table(name).where(col("user_id") >= 0)
+        out.where(col("user_id") >= 0)
           .orderBy("user_id", "session_start")
       },
       Some("""WITH marked AS (
@@ -480,32 +297,16 @@ object StreamingQueries {
     Q(
       "q109_stream_static_enrich",
       (s, dir) => {
-        val id = enrichRunId.incrementAndGet()
-        if (id > 1) s.catalog.dropTempView(s"graft_stream_enrich_${id - 1}")
-        val name = s"graft_stream_enrich_$id"
-        val ckptDir = java.nio.file.Files.createTempDirectory("graft_enrich_ckpt")
         val dim = broadcast(graft.io.Tables.load(s, dir, "customer")
           .select(col("c_custkey"), col("c_mktsegment")))
-        val q = EventStreams
+        val plan = EventStreams
           .readStream(s, dir, globFilter = Some("events.parquet"))
           .join(dim, col("user_id") === col("c_custkey"))
           .groupBy("c_mktsegment", "event_type")
           .agg(count(lit(1)).cast("long").as("n"),
             round(sum("value"), 2).as("sum_value"))
-          .writeStream
-          .format("memory")
-          .queryName(name)
-          .outputMode("complete")
-          .option("checkpointLocation", ckptDir.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try {
-          q.awaitTermination()
-        } finally {
-          q.stop()
-          deleteRecursively(ckptDir)
-        }
-        s.table(name).orderBy("c_mktsegment", "event_type")
+        StreamGate.toMemory(s, "enrich", plan, "complete")
+          .orderBy("c_mktsegment", "event_type")
       },
       Some("""SELECT c.c_mktsegment, e.event_type,
              |  CAST(count(*) AS BIGINT) AS n,
@@ -524,11 +325,7 @@ object StreamingQueries {
     Q(
       "q120_streaming_sliding",
       (s, dir) => {
-        val id = slideRunId.incrementAndGet()
-        if (id > 1) s.catalog.dropTempView(s"graft_stream_slide_${id - 1}")
-        val name = s"graft_stream_slide_$id"
-        val ckptDir = java.nio.file.Files.createTempDirectory("graft_slide_ckpt")
-        val q = EventStreams
+        val plan = EventStreams
           .readStream(s, dir, globFilter = Some("events.parquet"))
           .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"),
             col("event_type"))
@@ -536,20 +333,8 @@ object StreamingQueries {
             round(sum("value"), 2).as("sum_value"))
           .select(col("w.start").cast("timestamp_ntz").as("w_start"),
             col("event_type"), col("n"), col("sum_value"))
-          .writeStream
-          .format("memory")
-          .queryName(name)
-          .outputMode("complete")
-          .option("checkpointLocation", ckptDir.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try {
-          q.awaitTermination()
-        } finally {
-          q.stop()
-          deleteRecursively(ckptDir)
-        }
-        s.table(name).orderBy("w_start", "event_type")
+        StreamGate.toMemory(s, "slide", plan, "complete")
+          .orderBy("w_start", "event_type")
       },
       Some("""SELECT w_start, event_type,
              |  CAST(count(*) AS BIGINT) AS n, round(sum(value), 2) AS sum_value
@@ -577,41 +362,20 @@ object StreamingQueries {
       "q139_streaming_conversions",
       (s, dir) => {
         import s.implicits._
-        val id = convRunId.incrementAndGet()
-        if (id > 1) s.catalog.dropTempView(s"graft_stream_conv_${id - 1}")
-        val name = s"graft_stream_conv_$id"
-        val ckptDir = java.nio.file.Files.createTempDirectory("graft_conv_ckpt")
-        val sentinelDir = java.nio.file.Files.createTempDirectory("graft_conv_sentinel")
-        // r15: driver-side constant-row write (no Spark job + commit
-        // protocol for one sentinel row — measured 0.31s → 0.03s/gate)
-        graft.streaming.SentinelFiles.writeFlushSentinel(sentinelDir)
-        val stream = EventStreams
-          .readStream(s, dir, globFilter = Some("events.parquet"))
-          .unionByName(EventStreams.readStream(s, sentinelDir.toString,
-            globFilter = Some("*.parquet")))
-          .where(col("event_type").isin("view", "purchase") || col("user_id") < 0)
-          .selectExpr("user_id", "ts", "unix_micros(ts) AS ts_us",
-            "event_id", "event_type")
-          .as[EventStreams.FlowEvent]
-        val q = withRocksDbState(s) {
-          EventStreams.conversionTimeouts(stream)
+        val out = StreamGate.withScratch("graft_conv_sentinel") { case Seq(sentinelDir) =>
+          SentinelFiles.writeFlushSentinel(sentinelDir)
+          val stream = EventStreams.readFlushed(s, dir, sentinelDir)
+            .where(col("event_type").isin("view", "purchase") || col("user_id") < 0)
+            .selectExpr("user_id", "ts", "unix_micros(ts) AS ts_us",
+              "event_id", "event_type")
+            .as[EventStreams.FlowEvent]
+          val plan = EventStreams.conversionTimeouts(stream)
             .filter(col("user_id") >= 0)
-            .writeStream
-            .format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckptDir.toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
+          StreamGate.rocksDbState(s) {
+            StreamGate.toMemory(s, "conv", plan, "append")
+          }
         }
-        try {
-          q.awaitTermination()
-        } finally {
-          q.stop()
-          deleteRecursively(ckptDir)
-          deleteRecursively(sentinelDir)
-        }
-        s.table(name).orderBy("view_event_id")
+        out.orderBy("view_event_id")
       },
       Some("""WITH v AS (
              |  SELECT user_id, event_id, ts FROM events WHERE event_type = 'view'),
@@ -641,19 +405,9 @@ object StreamingQueries {
       "q140_streaming_daily_active",
       (s, dir) => {
         import s.implicits._
-        val id = dauRunId.incrementAndGet()
-        if (id > 1) s.catalog.dropTempView(s"graft_stream_dau_${id - 1}")
-        val name = s"graft_stream_dau_$id"
-        val ckptDir = java.nio.file.Files.createTempDirectory("graft_dau_ckpt")
-        val sentinelDir = java.nio.file.Files.createTempDirectory("graft_dau_sentinel")
-        // r15: driver-side constant-row write (no Spark job + commit
-        // protocol for one sentinel row — measured 0.31s → 0.03s/gate)
-        graft.streaming.SentinelFiles.writeFlushSentinel(sentinelDir)
-        val q = withRocksDbState(s) {
-          EventStreams
-            .readStream(s, dir, globFilter = Some("events.parquet"))
-            .unionByName(EventStreams.readStream(s, sentinelDir.toString,
-              globFilter = Some("*.parquet")))
+        val out = StreamGate.withScratch("graft_dau_sentinel") { case Seq(sentinelDir) =>
+          SentinelFiles.writeFlushSentinel(sentinelDir)
+          val plan = EventStreams.readFlushed(s, dir, sentinelDir)
             .withColumn("day", to_date(col("ts")))
             .withWatermark("ts", "2 hours")
             .dropDuplicatesWithinWatermark("user_id", "event_type", "day")
@@ -661,22 +415,11 @@ object StreamingQueries {
             .agg(count(lit(1)).cast("long").as("active_users"))
             .select(col("w.start").cast("date").as("day"),
               col("event_type"), col("active_users"))
-            .writeStream
-            .format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckptDir.toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
+          StreamGate.rocksDbState(s) {
+            StreamGate.toMemory(s, "dau", plan, "append")
+          }
         }
-        try {
-          q.awaitTermination()
-        } finally {
-          q.stop()
-          deleteRecursively(ckptDir)
-          deleteRecursively(sentinelDir)
-        }
-        s.table(name).where(col("event_type") =!= "__flush")
+        out.where(col("event_type") =!= "__flush")
           .orderBy("day", "event_type")
       },
       Some("""SELECT CAST(ts AS DATE) AS day, event_type,
@@ -699,39 +442,18 @@ object StreamingQueries {
       "q167_streaming_rate_limit",
       (s, dir) => {
         import s.implicits._
-        val id = rateRunId.incrementAndGet()
-        if (id > 1) s.catalog.dropTempView(s"graft_stream_rate_${id - 1}")
-        val name = s"graft_stream_rate_$id"
-        val ckptDir = java.nio.file.Files.createTempDirectory("graft_rate_ckpt")
-        val sentinelDir = java.nio.file.Files.createTempDirectory("graft_rate_sentinel")
-        // r15: driver-side constant-row write (no Spark job + commit
-        // protocol for one sentinel row — measured 0.31s → 0.03s/gate)
-        graft.streaming.SentinelFiles.writeFlushSentinel(sentinelDir)
-        val stream = EventStreams
-          .readStream(s, dir, globFilter = Some("events.parquet"))
-          .unionByName(EventStreams.readStream(s, sentinelDir.toString,
-            globFilter = Some("*.parquet")))
-          .selectExpr("user_id", "ts", "unix_micros(ts) AS ts_us", "event_id")
-          .as[EventStreams.RateEvent]
-        val q = withRocksDbState(s) {
-          EventStreams.rateLimit(stream)
+        val out = StreamGate.withScratch("graft_rate_sentinel") { case Seq(sentinelDir) =>
+          SentinelFiles.writeFlushSentinel(sentinelDir)
+          val stream = EventStreams.readFlushed(s, dir, sentinelDir)
+            .selectExpr("user_id", "ts", "unix_micros(ts) AS ts_us", "event_id")
+            .as[EventStreams.RateEvent]
+          val plan = EventStreams.rateLimit(stream)
             .filter(col("user_id") >= 0)
-            .writeStream
-            .format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckptDir.toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
+          StreamGate.rocksDbState(s) {
+            StreamGate.toMemory(s, "rate", plan, "append")
+          }
         }
-        try {
-          q.awaitTermination()
-        } finally {
-          q.stop()
-          deleteRecursively(ckptDir)
-          deleteRecursively(sentinelDir)
-        }
-        s.table(name).orderBy("event_id")
+        out.orderBy("event_id")
       },
       Some("""WITH RECURSIVE ev AS (
              |  SELECT user_id, event_id, epoch_us(ts) AS t,
@@ -771,40 +493,19 @@ object StreamingQueries {
       "q174_streaming_anomalies",
       (s, dir) => {
         import s.implicits._
-        val id = anomRunId.incrementAndGet()
-        if (id > 1) s.catalog.dropTempView(s"graft_stream_anom_${id - 1}")
-        val name = s"graft_stream_anom_$id"
-        val ckptDir = java.nio.file.Files.createTempDirectory("graft_anom_ckpt")
-        val sentinelDir = java.nio.file.Files.createTempDirectory("graft_anom_sentinel")
-        // r15: driver-side constant-row write (no Spark job + commit
-        // protocol for one sentinel row — measured 0.31s → 0.03s/gate)
-        graft.streaming.SentinelFiles.writeFlushSentinel(sentinelDir)
-        val stream = EventStreams
-          .readStream(s, dir, globFilter = Some("events.parquet"))
-          .unionByName(EventStreams.readStream(s, sentinelDir.toString,
-            globFilter = Some("*.parquet")))
-          .selectExpr("user_id", "ts", "unix_micros(ts) AS ts_us",
-            "event_id", "value")
-          .as[EventStreams.ValueEvent]
-        val q = withRocksDbState(s) {
-          EventStreams.ewmaAnomalies(stream)
+        val out = StreamGate.withScratch("graft_anom_sentinel") { case Seq(sentinelDir) =>
+          SentinelFiles.writeFlushSentinel(sentinelDir)
+          val stream = EventStreams.readFlushed(s, dir, sentinelDir)
+            .selectExpr("user_id", "ts", "unix_micros(ts) AS ts_us",
+              "event_id", "value")
+            .as[EventStreams.ValueEvent]
+          val plan = EventStreams.ewmaAnomalies(stream)
             .filter(col("user_id") >= 0)
-            .writeStream
-            .format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckptDir.toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
+          StreamGate.rocksDbState(s) {
+            StreamGate.toMemory(s, "anom", plan, "append")
+          }
         }
-        try {
-          q.awaitTermination()
-        } finally {
-          q.stop()
-          deleteRecursively(ckptDir)
-          deleteRecursively(sentinelDir)
-        }
-        s.table(name).orderBy("event_id")
+        out.orderBy("event_id")
       },
       Some("""WITH RECURSIVE ev AS (
              |  SELECT user_id, event_id, value, epoch_us(ts) AS t,
@@ -843,49 +544,34 @@ object StreamingQueries {
       "q209_streaming_topk",
       (s, dir) => {
         import s.implicits._
-        val ckptDir = java.nio.file.Files.createTempDirectory("graft_topk_ckpt")
-        val sentinelDir = java.nio.file.Files.createTempDirectory("graft_topk_sentinel")
-        // r15: driver-side constant-row write (no Spark job + commit
-        // protocol for one sentinel row — measured 0.31s → 0.03s/gate)
-        graft.streaming.SentinelFiles.writeFlushSentinel(sentinelDir)
         val acc = new scala.collection.mutable.ArrayBuffer[
           (java.sql.Date, Long, Long, Long)]()
-        val q = withRocksDbState(s) {
-          EventStreams
-            .readStream(s, dir, globFilter = Some("events.parquet"))
-            .unionByName(EventStreams.readStream(s, sentinelDir.toString,
-              globFilter = Some("*.parquet")))
-            .withWatermark("ts", "2 hours")
-            .groupBy(window(col("ts"), "1 day").as("w"), col("user_id"))
-            .agg(count(lit(1)).as("n"))
-            .select(col("w.start").cast("date").as("day"),
-              col("user_id"), col("n"))
-            .writeStream
-            .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-                org.apache.spark.sql.Row], _: Long) =>
-              val byDay = org.apache.spark.sql.expressions.Window
-                .partitionBy("day").orderBy(desc("n"), col("user_id"))
-              val top = batch.where(col("user_id") >= 0)
-                .withColumn("rank", row_number().over(byDay))
-                .where(col("rank") <= 10)
-                .select("day", "rank", "user_id", "n")
-                .collectBounded("per-day top-10 rows")
-                .map(r => (r.getDate(0), r.getInt(1).toLong, r.getLong(2),
-                  r.getLong(3)))
-              acc.synchronized { acc ++= top }
-              ()
-            }
-            .outputMode("append")
-            .option("checkpointLocation", ckptDir.toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        }
-        try {
-          q.awaitTermination()
-        } finally {
-          q.stop()
-          deleteRecursively(ckptDir)
-          deleteRecursively(sentinelDir)
+        StreamGate.withScratch("graft_topk_ckpt", "graft_topk_sentinel") {
+          case Seq(ckptDir, sentinelDir) =>
+            SentinelFiles.writeFlushSentinel(sentinelDir)
+            val writer = EventStreams.readFlushed(s, dir, sentinelDir)
+              .withWatermark("ts", "2 hours")
+              .groupBy(window(col("ts"), "1 day").as("w"), col("user_id"))
+              .agg(count(lit(1)).as("n"))
+              .select(col("w.start").cast("date").as("day"),
+                col("user_id"), col("n"))
+              .writeStream
+              .foreachBatch { (batch: org.apache.spark.sql.Dataset[
+                  org.apache.spark.sql.Row], _: Long) =>
+                val byDay = org.apache.spark.sql.expressions.Window
+                  .partitionBy("day").orderBy(desc("n"), col("user_id"))
+                val top = batch.where(col("user_id") >= 0)
+                  .withColumn("rank", row_number().over(byDay))
+                  .where(col("rank") <= 10)
+                  .select("day", "rank", "user_id", "n")
+                  .collectBounded("per-day top-10 rows")
+                  .map(r => (r.getDate(0), r.getInt(1).toLong, r.getLong(2),
+                    r.getLong(3)))
+                acc.synchronized { acc ++= top }
+                ()
+              }
+              .outputMode("append")
+            StreamGate.rocksDbState(s)(StreamGate.run(writer, ckptDir))
         }
         acc.synchronized { acc.toSeq }
           .toDF("day", "rank", "user_id", "n")
@@ -920,38 +606,30 @@ object StreamingQueries {
       "q219_streaming_conversion_rate",
       (s, dir) => {
         import s.implicits._
-        val id = convRateRunId.incrementAndGet()
-        if (id > 1) s.catalog.dropTempView(s"graft_stream_convrate_${id - 1}")
-        val name = s"graft_stream_convrate_$id"
-        val ckptDir = java.nio.file.Files.createTempDirectory("graft_cvr_ckpt")
-        val sentinelDir = java.nio.file.Files.createTempDirectory("graft_cvr_sentinel")
-        // r15: driver-side constant-row write (see SentinelFiles)
-        graft.streaming.SentinelFiles.writeEvents(sentinelDir, Seq(
-          (-1L, EventStreams.FlushSentinelNanos, -1L, "click", 0.0, "{}"),
-          (-2L, EventStreams.FlushSentinelNanos, -2L, "purchase", 0.0, "{}")))
-        // r15: ONE events source + ONE sentinel source shared by both
-        // sides (a self-join over the union) instead of four
-        // FileStreamSource instances — half the offset-log entries and
-        // per-batch directory listings; watermark semantics unchanged
-        // (each side still carries its own watermark node, global
-        // watermark = min, and each side's typed sentinel survives the
-        // event_type filter exactly as before)
-        val base = EventStreams
-          .readStream(s, dir, globFilter = Some("events.parquet"))
-          .unionByName(EventStreams.readStream(s, sentinelDir.toString,
-            globFilter = Some("*.parquet")))
-        def side(eventType: String) =
-          base.where(col("event_type") === eventType)
-        val clicks = side("click")
-          .select(col("user_id"), col("event_id").as("click_id"),
-            col("ts").as("c_ts"))
-          .withWatermark("c_ts", "2 hours")
-        val purchases = side("purchase")
-          .select(col("user_id").as("p_user"),
-            col("event_id").as("purchase_id"), col("ts").as("p_ts"))
-          .withWatermark("p_ts", "2 hours")
-        val q = withRocksDbState(s) {
-          clicks.join(purchases,
+        val out = StreamGate.withScratch("graft_cvr_sentinel") { case Seq(sentinelDir) =>
+          // r15: driver-side constant-row write (see SentinelFiles)
+          SentinelFiles.writeEvents(sentinelDir, Seq(
+            (-1L, EventStreams.FlushSentinelNanos, -1L, "click", 0.0, "{}"),
+            (-2L, EventStreams.FlushSentinelNanos, -2L, "purchase", 0.0, "{}")))
+          // r15: ONE events source + ONE sentinel source shared by both
+          // sides (a self-join over the union) instead of four
+          // FileStreamSource instances — half the offset-log entries and
+          // per-batch directory listings; watermark semantics unchanged
+          // (each side still carries its own watermark node, global
+          // watermark = min, and each side's typed sentinel survives the
+          // event_type filter exactly as before)
+          val base = EventStreams.readFlushed(s, dir, sentinelDir)
+          def side(eventType: String) =
+            base.where(col("event_type") === eventType)
+          val clicks = side("click")
+            .select(col("user_id"), col("event_id").as("click_id"),
+              col("ts").as("c_ts"))
+            .withWatermark("c_ts", "2 hours")
+          val purchases = side("purchase")
+            .select(col("user_id").as("p_user"),
+              col("event_id").as("purchase_id"), col("ts").as("p_ts"))
+            .withWatermark("p_ts", "2 hours")
+          val plan = clicks.join(purchases,
               col("user_id") === col("p_user")
                 && col("p_ts") >= col("c_ts")
                 && col("p_ts") <= col("c_ts") + expr("INTERVAL 1 HOUR"))
@@ -962,22 +640,11 @@ object StreamingQueries {
               sum("gap_us").cast("long").as("sum_gap_us"))
             .select(col("w.start").cast("timestamp_ntz").as("hour"),
               col("n_conversions"), col("sum_gap_us"))
-            .writeStream
-            .format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckptDir.toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
+          StreamGate.rocksDbState(s) {
+            StreamGate.toMemory(s, "convrate", plan, "append")
+          }
         }
-        try {
-          q.awaitTermination()
-        } finally {
-          q.stop()
-          deleteRecursively(ckptDir)
-          deleteRecursively(sentinelDir)
-        }
-        s.table(name).orderBy("hour")
+        out.orderBy("hour")
       },
       Some("""SELECT time_bucket(INTERVAL 1 HOUR, p.ts) AS hour,
              |  CAST(count(*) AS BIGINT) AS n_conversions,
@@ -1005,57 +672,35 @@ object StreamingQueries {
       "q220_streaming_hll_dau",
       (s, dir) => {
         import s.implicits._
-        val id = hllDauRunId.incrementAndGet()
-        if (id > 1) {
-          s.catalog.dropTempView(s"graft_stream_hlldau_ex_${id - 1}")
-          s.catalog.dropTempView(s"graft_stream_hlldau_es_${id - 1}")
-        }
-        val exName = s"graft_stream_hlldau_ex_$id"
-        val esName = s"graft_stream_hlldau_es_$id"
-        val sentinelDir = java.nio.file.Files.createTempDirectory("graft_hlldau_sentinel")
-        // r15: driver-side constant-row write (no Spark job + commit
-        // protocol for one sentinel row — measured 0.31s → 0.03s/gate)
-        graft.streaming.SentinelFiles.writeFlushSentinel(sentinelDir)
-        def source() = EventStreams
-          .readStream(s, dir, globFilter = Some("events.parquet"))
-          .unionByName(EventStreams.readStream(s, sentinelDir.toString,
-            globFilter = Some("*.parquet")))
-        def run(sink: String)(build: org.apache.spark.sql.DataFrame =>
-            org.apache.spark.sql.DataFrame): Unit = {
-          val ckpt = java.nio.file.Files.createTempDirectory("graft_hlldau_ckpt")
-          val q = withRocksDbState(s) {
-            build(source())
-              .writeStream.format("memory").queryName(sink)
-              .outputMode("append")
-              .option("checkpointLocation", ckpt.toString)
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start()
+        val (exact, sketch) =
+          StreamGate.withScratch("graft_hlldau_sentinel") { case Seq(sentinelDir) =>
+            SentinelFiles.writeFlushSentinel(sentinelDir)
+            val src = EventStreams.readFlushed(s, dir, sentinelDir)
+            StreamGate.rocksDbState(s) {
+              // exact chain (q140's shape)
+              val exact = StreamGate.toMemory(s, "hlldau_ex",
+                src.withColumn("day", to_date(col("ts")))
+                  .withWatermark("ts", "2 hours")
+                  .dropDuplicatesWithinWatermark("user_id", "event_type", "day")
+                  .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
+                  .agg(count(lit(1)).cast("long").as("active_users"))
+                  .select(col("w.start").cast("date").as("day"),
+                    col("event_type"), col("active_users")),
+                "append")
+              // sketch chain: constant-size state per (window, type)
+              val sketch = StreamGate.toMemory(s, "hlldau_es",
+                src.withWatermark("ts", "2 hours")
+                  .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
+                  .agg(hll_sketch_estimate(hll_sketch_agg(col("user_id")))
+                    .as("est"))
+                  .select(col("w.start").cast("date").as("day"),
+                    col("event_type"), col("est")),
+                "append")
+              (exact, sketch)
+            }
           }
-          try q.awaitTermination()
-          finally { q.stop(); deleteRecursively(ckpt) }
-        }
-        // exact chain (q140's shape)
-        run(exName) { src =>
-          src.withColumn("day", to_date(col("ts")))
-            .withWatermark("ts", "2 hours")
-            .dropDuplicatesWithinWatermark("user_id", "event_type", "day")
-            .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
-            .agg(count(lit(1)).cast("long").as("active_users"))
-            .select(col("w.start").cast("date").as("day"),
-              col("event_type"), col("active_users"))
-        }
-        // sketch chain: constant-size state per (window, type)
-        run(esName) { src =>
-          src.withWatermark("ts", "2 hours")
-            .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
-            .agg(hll_sketch_estimate(hll_sketch_agg(col("user_id")))
-              .as("est"))
-            .select(col("w.start").cast("date").as("day"),
-              col("event_type"), col("est"))
-        }
-        deleteRecursively(sentinelDir)
-        s.table(exName).where(col("event_type") =!= "__flush")
-          .join(s.table(esName), Seq("day", "event_type"))
+        exact.where(col("event_type") =!= "__flush")
+          .join(sketch, Seq("day", "event_type"))
           .select(col("day"), col("event_type"), col("active_users"),
             (abs(col("est").cast("double") /
               col("active_users").cast("double") - 1.0) <= 0.05)
@@ -1086,10 +731,6 @@ object StreamingQueries {
     Q(
       "q213_streaming_ingest_curation",
       (s, dir) => {
-        val id = ingestRunId.incrementAndGet()
-        if (id > 1) s.catalog.dropTempView(s"graft_stream_ingest_${id - 1}")
-        val name = s"graft_stream_ingest_$id"
-        val ckptDir = java.nio.file.Files.createTempDirectory("graft_ingest_ckpt")
         // static side: the eval slice's distinct winnowed hashes
         val evalHashes = graft.ext.Dedup.winnowedFingerprints(
             graft.io.Tables.load(s, dir, "documents")
@@ -1118,7 +759,7 @@ object StreamingQueries {
         val evalSet = s.sparkContext.broadcast(evalHashes.toSet)
         val nShared = udf((hs: Seq[Long]) =>
           if (hs == null) 0L else hs.toSet.count(evalSet.value.contains).toLong)
-        val q = s.readStream.schema(docsSchema)
+        val plan = s.readStream.schema(docsSchema)
           .option("pathGlobFilter", "documents.parquet")
           .parquet(dir)
           .where(graft.ext.Sampling.bucket(col("doc_id"), "winnow1") >= 2000)
@@ -1129,20 +770,8 @@ object StreamingQueries {
             size(col("fps")).cast("long").as("n_prints"),
             col("shared").as("n_shared"),
             (col("shared") > 0).as("flagged"))
-          .writeStream
-          .format("memory")
-          .queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", ckptDir.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try {
-          q.awaitTermination()
-        } finally {
-          q.stop()
-          deleteRecursively(ckptDir)
-        }
-        s.table(name).where(col("n_prints") > 0).orderBy("doc_id")
+        StreamGate.toMemory(s, "ingest", plan, "append")
+          .where(col("n_prints") > 0).orderBy("doc_id")
       },
       Some {
         val gram5 = (1 to 5).map(j => s"arr[i+$j]").mkString(" || ' ' || ")
@@ -1209,66 +838,51 @@ object StreamingQueries {
       "q202_streaming_histogram",
       (s, dir) => {
         import s.implicits._
-        val ckptDir = java.nio.file.Files.createTempDirectory("graft_hist_ckpt")
-        val sentinelDir = java.nio.file.Files.createTempDirectory("graft_hist_sentinel")
-        // r15: driver-side constant-row write (no Spark job + commit
-        // protocol for one sentinel row — measured 0.31s → 0.03s/gate)
-        graft.streaming.SentinelFiles.writeFlushSentinel(sentinelDir)
         // quantiles land here as (win_start, type, q, bin, est), appended
         // by the foreachBatch walk each time windows close; tiny by
         // construction (2 rows per closed (window, type))
         val acc = new scala.collection.mutable.ArrayBuffer[
           (java.sql.Timestamp, String, Double, Long, Double)]()
-        val q = withRocksDbState(s) {
-          EventStreams
-            .readStream(s, dir, globFilter = Some("events.parquet"))
-            .unionByName(EventStreams.readStream(s, sentinelDir.toString,
-              globFilter = Some("*.parquet")))
-            .withWatermark("ts", "2 hours")
-            .groupBy(window(col("ts"), "6 hours").as("w"), col("event_type"),
-              floor(col("value") / 50.0).cast("long").as("bin"))
-            .agg(count(lit(1)).as("c"))
-            .select(col("w.start").as("win_start"), col("event_type"),
-              col("bin"), col("c"))
-            .writeStream
-            .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-                org.apache.spark.sql.Row], _: Long) =>
-              // runs on the driver per micro-batch; the collect is the
-              // closed windows' bin counts only (sentinel's own window
-              // never closes, filtered defensively)
-              val rows = batch.where(col("event_type") =!= "__flush")
-                .collectBounded("closed-window bin counts")
-              val walked = rows
-                .groupBy(r => (r.getTimestamp(0), r.getString(1)))
-                .toSeq
-                .flatMap { case ((w, et), rs) =>
-                  val bins = rs.map(r => (r.getLong(2), r.getLong(3)))
-                    .sortBy(_._1)
-                  val total = bins.map(_._2).sum
-                  Seq(0.5, 0.9).map { qq =>
-                    // same comparison the oracle runs: first bin whose
-                    // cumulative count reaches q·total
-                    var cum = 0L
-                    val bin = bins.find { case (_, c) =>
-                      cum += c; cum.toDouble >= qq * total.toDouble
-                    }.get._1
-                    (w, et, qq, bin, (bin + 0.5) * 50.0)
+        StreamGate.withScratch("graft_hist_ckpt", "graft_hist_sentinel") {
+          case Seq(ckptDir, sentinelDir) =>
+            SentinelFiles.writeFlushSentinel(sentinelDir)
+            val writer = EventStreams.readFlushed(s, dir, sentinelDir)
+              .withWatermark("ts", "2 hours")
+              .groupBy(window(col("ts"), "6 hours").as("w"), col("event_type"),
+                floor(col("value") / 50.0).cast("long").as("bin"))
+              .agg(count(lit(1)).as("c"))
+              .select(col("w.start").as("win_start"), col("event_type"),
+                col("bin"), col("c"))
+              .writeStream
+              .foreachBatch { (batch: org.apache.spark.sql.Dataset[
+                  org.apache.spark.sql.Row], _: Long) =>
+                // runs on the driver per micro-batch; the collect is the
+                // closed windows' bin counts only (sentinel's own window
+                // never closes, filtered defensively)
+                val rows = batch.where(col("event_type") =!= "__flush")
+                  .collectBounded("closed-window bin counts")
+                val walked = rows
+                  .groupBy(r => (r.getTimestamp(0), r.getString(1)))
+                  .toSeq
+                  .flatMap { case ((w, et), rs) =>
+                    val bins = rs.map(r => (r.getLong(2), r.getLong(3)))
+                      .sortBy(_._1)
+                    val total = bins.map(_._2).sum
+                    Seq(0.5, 0.9).map { qq =>
+                      // same comparison the oracle runs: first bin whose
+                      // cumulative count reaches q·total
+                      var cum = 0L
+                      val bin = bins.find { case (_, c) =>
+                        cum += c; cum.toDouble >= qq * total.toDouble
+                      }.get._1
+                      (w, et, qq, bin, (bin + 0.5) * 50.0)
+                    }
                   }
-                }
-              acc.synchronized { acc ++= walked }
-              ()
-            }
-            .outputMode("append")
-            .option("checkpointLocation", ckptDir.toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        }
-        try {
-          q.awaitTermination()
-        } finally {
-          q.stop()
-          deleteRecursively(ckptDir)
-          deleteRecursively(sentinelDir)
+                acc.synchronized { acc ++= walked }
+                ()
+              }
+              .outputMode("append")
+            StreamGate.rocksDbState(s)(StreamGate.run(writer, ckptDir))
         }
         acc.synchronized { acc.toSeq }
           .toDF("win_start", "event_type", "q", "bin", "est")
@@ -1307,42 +921,21 @@ object StreamingQueries {
       "q231_streaming_funnel",
       (s, dir) => {
         import s.implicits._
-        val id = funnelRunId.incrementAndGet()
-        if (id > 1) s.catalog.dropTempView(s"graft_stream_funnel_${id - 1}")
-        val name = s"graft_stream_funnel_$id"
-        val ckptDir = java.nio.file.Files.createTempDirectory("graft_funnel_ckpt")
-        val sentinelDir = java.nio.file.Files.createTempDirectory("graft_funnel_sentinel")
-        // r15: driver-side constant-row write (no Spark job + commit
-        // protocol for one sentinel row — measured 0.31s → 0.03s/gate)
-        graft.streaming.SentinelFiles.writeFlushSentinel(sentinelDir)
-        val stream = EventStreams
-          .readStream(s, dir, globFilter = Some("events.parquet"))
-          .unionByName(EventStreams.readStream(s, sentinelDir.toString,
-            globFilter = Some("*.parquet")))
-          .where(col("event_type").isin("view", "click", "purchase") ||
-            col("user_id") < 0)
-          .selectExpr("user_id", "ts", "unix_micros(ts) AS ts_us",
-            "event_id", "event_type")
-          .as[EventStreams.FlowEvent]
-        val q = withRocksDbState(s) {
-          EventStreams.funnelStages(stream)
+        val out = StreamGate.withScratch("graft_funnel_sentinel") { case Seq(sentinelDir) =>
+          SentinelFiles.writeFlushSentinel(sentinelDir)
+          val stream = EventStreams.readFlushed(s, dir, sentinelDir)
+            .where(col("event_type").isin("view", "click", "purchase") ||
+              col("user_id") < 0)
+            .selectExpr("user_id", "ts", "unix_micros(ts) AS ts_us",
+              "event_id", "event_type")
+            .as[EventStreams.FlowEvent]
+          val plan = EventStreams.funnelStages(stream)
             .filter(col("user_id") >= 0)
-            .writeStream
-            .format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckptDir.toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
+          StreamGate.rocksDbState(s) {
+            StreamGate.toMemory(s, "funnel", plan, "append")
+          }
         }
-        try {
-          q.awaitTermination()
-        } finally {
-          q.stop()
-          deleteRecursively(ckptDir)
-          deleteRecursively(sentinelDir)
-        }
-        s.table(name).groupBy("stage")
+        out.groupBy("stage")
           .agg(count(lit(1)).cast("long").as("users"))
           .orderBy("stage")
       },
@@ -1375,10 +968,8 @@ object StreamingQueries {
     Q(
       "q232_streaming_cdc_upsert",
       (s, dir) => {
-        val stagedDir = java.nio.file.Files.createTempDirectory("graft_cdc_staged")
-        val snapDir = java.nio.file.Files.createTempDirectory("graft_cdc_snap")
-        val ckptDir = java.nio.file.Files.createTempDirectory("graft_cdc_ckpt")
-        try {
+        StreamGate.withScratch("graft_cdc_staged", "graft_cdc_snap",
+            "graft_cdc_ckpt") { case Seq(stagedDir, snapDir, ckptDir) =>
           val events = graft.io.Tables.load(s, dir, "events")
             .select("event_id", "ts", "user_id", "event_type", "value",
               "props")
@@ -1387,7 +978,7 @@ object StreamingQueries {
           events.where(col("event_id") % 2 === 1)
             .coalesce(1).write.mode("append").parquet(stagedDir.toString)
           val stagedSchema = events.schema
-          val q = s.readStream.schema(stagedSchema)
+          StreamGate.run(s.readStream.schema(stagedSchema)
             .option("maxFilesPerTrigger", "1")
             .parquet(stagedDir.toString)
             .writeStream
@@ -1395,19 +986,10 @@ object StreamingQueries {
               (batch: org.apache.spark.sql.Dataset[
                 org.apache.spark.sql.Row], _: Long) =>
                 CdcUpsert.mergeBatch(s, batch.toDF(), snapDir.toString)
-            }
-            .option("checkpointLocation", ckptDir.toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          try q.awaitTermination()
-          finally q.stop()
+            }, ckptDir)
           CdcUpsert.readSnapshot(s, snapDir.toString)
             .orderBy("user_id")
             .localCheckpoint()
-        } finally {
-          deleteRecursively(stagedDir)
-          deleteRecursively(snapDir)
-          deleteRecursively(ckptDir)
         }
       },
       Some("""SELECT user_id, CAST(user_id % 8 AS BIGINT) AS bucket,
@@ -1434,40 +1016,19 @@ object StreamingQueries {
       "q237_streaming_moments",
       (s, dir) => {
         import s.implicits._
-        val id = momentsRunId.incrementAndGet()
-        if (id > 1) s.catalog.dropTempView(s"graft_stream_mom_${id - 1}")
-        val name = s"graft_stream_mom_$id"
-        val ckptDir = java.nio.file.Files.createTempDirectory("graft_mom_ckpt")
-        val sentinelDir = java.nio.file.Files.createTempDirectory("graft_mom_sentinel")
-        // r15: driver-side constant-row write (no Spark job + commit
-        // protocol for one sentinel row — measured 0.31s → 0.03s/gate)
-        graft.streaming.SentinelFiles.writeFlushSentinel(sentinelDir)
-        val stream = EventStreams
-          .readStream(s, dir, globFilter = Some("events.parquet"))
-          .unionByName(EventStreams.readStream(s, sentinelDir.toString,
-            globFilter = Some("*.parquet")))
-          .selectExpr("event_type AS etype", "ts",
-            "unix_micros(ts) AS ts_us", "event_id", "value")
-          .as[EventStreams.MomentsEvent]
-        val q = withRocksDbState(s) {
-          EventStreams.runningMoments(stream)
+        val out = StreamGate.withScratch("graft_mom_sentinel") { case Seq(sentinelDir) =>
+          SentinelFiles.writeFlushSentinel(sentinelDir)
+          val stream = EventStreams.readFlushed(s, dir, sentinelDir)
+            .selectExpr("event_type AS etype", "ts",
+              "unix_micros(ts) AS ts_us", "event_id", "value")
+            .as[EventStreams.MomentsEvent]
+          val plan = EventStreams.runningMoments(stream)
             .filter(col("event_type") =!= "__flush")
-            .writeStream
-            .format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckptDir.toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
+          StreamGate.rocksDbState(s) {
+            StreamGate.toMemory(s, "mom", plan, "append")
+          }
         }
-        try {
-          q.awaitTermination()
-        } finally {
-          q.stop()
-          deleteRecursively(ckptDir)
-          deleteRecursively(sentinelDir)
-        }
-        s.table(name)
+        out
           .select(col("event_type"), col("n"),
             graft.functions.Rounding.stableRound6(col("mean")).as("mean"),
             graft.functions.Rounding.stableRound6(col("m2") / col("n"))
@@ -1496,10 +1057,6 @@ object StreamingQueries {
     Q(
       "q240_streaming_scd2_enrich",
       (s, dir) => {
-        val id = scd2RunId.incrementAndGet()
-        if (id > 1) s.catalog.dropTempView(s"graft_stream_scd2_${id - 1}")
-        val name = s"graft_stream_scd2_$id"
-        val ckptDir = java.nio.file.Files.createTempDirectory("graft_scd2_ckpt")
         val wu = org.apache.spark.sql.expressions.Window
           .partitionBy("du").orderBy("t", "event_id")
         val dim = broadcast(graft.io.Tables.load(s, dir, "events")
@@ -1512,7 +1069,7 @@ object StreamingQueries {
           .withColumn("valid_to", lead("t", 1).over(wu))
           .select(col("du"), col("t").as("valid_from"), col("valid_to"),
             col("version_no"), col("balance")))
-        val q = EventStreams
+        val plan = EventStreams
           .readStream(s, dir, globFilter = Some("events.parquet"))
           .where(col("event_type") === "click")
           .selectExpr("user_id", "event_id AS click_id",
@@ -1525,20 +1082,8 @@ object StreamingQueries {
             col("version_no").as("n_prior"),
             graft.functions.Rounding.stableRound6(col("balance"))
               .as("balance"))
-          .writeStream
-          .format("memory")
-          .queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", ckptDir.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try {
-          q.awaitTermination()
-        } finally {
-          q.stop()
-          deleteRecursively(ckptDir)
-        }
-        s.table(name).orderBy("click_id")
+        StreamGate.toMemory(s, "scd2", plan, "append")
+          .orderBy("click_id")
       },
       Some(s"""WITH hist AS (
              |  SELECT user_id, epoch_us(ts) AS t, event_id,
@@ -1577,10 +1122,8 @@ object StreamingQueries {
     Q(
       "q241_cdc_tombstone_compaction",
       (s, dir) => {
-        val stagedDir = java.nio.file.Files.createTempDirectory("graft_cdc2_staged")
-        val snapDir = java.nio.file.Files.createTempDirectory("graft_cdc2_snap")
-        val ckptDir = java.nio.file.Files.createTempDirectory("graft_cdc2_ckpt")
-        try {
+        StreamGate.withScratch("graft_cdc2_staged", "graft_cdc2_snap",
+            "graft_cdc2_ckpt") { case Seq(stagedDir, snapDir, ckptDir) =>
           val events = graft.io.Tables.load(s, dir, "events")
             .select("event_id", "ts", "user_id", "event_type", "value",
               "props")
@@ -1588,7 +1131,7 @@ object StreamingQueries {
             .coalesce(1).write.mode("overwrite").parquet(stagedDir.toString)
           events.where(col("event_id") % 2 === 1)
             .coalesce(1).write.mode("append").parquet(stagedDir.toString)
-          val q = s.readStream.schema(events.schema)
+          StreamGate.run(s.readStream.schema(events.schema)
             .option("maxFilesPerTrigger", "1")
             .parquet(stagedDir.toString)
             .writeStream
@@ -1596,20 +1139,11 @@ object StreamingQueries {
               (batch: org.apache.spark.sql.Dataset[
                 org.apache.spark.sql.Row], _: Long) =>
                 CdcUpsert.mergeBatch(s, batch.toDF(), snapDir.toString)
-            }
-            .option("checkpointLocation", ckptDir.toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          try q.awaitTermination()
-          finally q.stop()
+            }, ckptDir)
           CdcUpsert.compact(s, snapDir.toString)
           CdcUpsert.readSnapshot(s, snapDir.toString)
             .orderBy("user_id")
             .localCheckpoint()
-        } finally {
-          deleteRecursively(stagedDir)
-          deleteRecursively(snapDir)
-          deleteRecursively(ckptDir)
         }
       },
       Some("""SELECT user_id, CAST(user_id % 8 AS BIGINT) AS bucket,
@@ -1641,11 +1175,6 @@ object StreamingQueries {
       (s, dir) => {
         import s.implicits._
         val P = graft.functions.PolyHash.Mod
-        val ckptDir = java.nio.file.Files.createTempDirectory("graft_scm_ckpt")
-        val sentinelDir = java.nio.file.Files.createTempDirectory("graft_scm_sentinel")
-        // r15: driver-side constant-row write (no Spark job + commit
-        // protocol for one sentinel row — measured 0.31s → 0.03s/gate)
-        graft.streaming.SentinelFiles.writeFlushSentinel(sentinelDir)
         def cellOf(j: Int, uid: Long): Long = {
           val h = graft.functions.PolyHash.hash(s"cm$j#$uid")
           h * h % P % 256
@@ -1657,56 +1186,46 @@ object StreamingQueries {
             col("j").cast("string"), lit("#"), col("user_id").cast("string")))
           h * h % P % 256
         }
-        val q = withRocksDbState(s) {
-          EventStreams
-            .readStream(s, dir, globFilter = Some("events.parquet"))
-            .unionByName(EventStreams.readStream(s, sentinelDir.toString,
-              globFilter = Some("*.parquet")))
-            .withWatermark("ts", "2 hours")
-            .select(col("ts"), col("user_id"),
-              explode(sequence(lit(0), lit(3))).as("j"))
-            .withColumn("cell", cellExpr)
-            .groupBy(window(col("ts"), "6 hours").as("w"), col("j"),
-              col("cell"))
-            .agg(count(lit(1)).as("c"))
-            .select(col("w.start").as("win_start"), col("j"), col("cell"),
-              col("c"))
-            .writeStream
-            .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-                org.apache.spark.sql.Row], _: Long) =>
-              // closed windows only reach append output; the sentinel's
-              // own 2100 window never closes (filtered defensively)
-              val rows = batch
-                .where(col("win_start") <
-                  lit("2090-01-01 00:00:00").cast("timestamp"))
-                // cap: windows x sketch depth x active cells -- a
-                // sketch-sized domain, larger than the default cap but
-                // still corpus-independent
-                .collectBounded("closed-window sketch rows", cap = 1000000)
-              val sketch = rows.map(r => (r.getTimestamp(0), r.getInt(1),
-                r.getLong(2)) -> r.getLong(3)).toMap
-              val probed = rows.map(_.getTimestamp(0)).distinct.flatMap {
-                win =>
-                  (0L until 10L).map { uid =>
-                    val est = (0 until 4).map(j =>
-                      sketch.getOrElse((win, j, cellOf(j, uid)), 0L)).min
-                    (win, uid, est)
-                  }
+        StreamGate.withScratch("graft_scm_ckpt", "graft_scm_sentinel") {
+          case Seq(ckptDir, sentinelDir) =>
+            SentinelFiles.writeFlushSentinel(sentinelDir)
+            val writer = EventStreams.readFlushed(s, dir, sentinelDir)
+              .withWatermark("ts", "2 hours")
+              .select(col("ts"), col("user_id"),
+                explode(sequence(lit(0), lit(3))).as("j"))
+              .withColumn("cell", cellExpr)
+              .groupBy(window(col("ts"), "6 hours").as("w"), col("j"),
+                col("cell"))
+              .agg(count(lit(1)).as("c"))
+              .select(col("w.start").as("win_start"), col("j"), col("cell"),
+                col("c"))
+              .writeStream
+              .foreachBatch { (batch: org.apache.spark.sql.Dataset[
+                  org.apache.spark.sql.Row], _: Long) =>
+                // closed windows only reach append output; the sentinel's
+                // own 2100 window never closes (filtered defensively)
+                val rows = batch
+                  .where(col("win_start") <
+                    lit("2090-01-01 00:00:00").cast("timestamp"))
+                  // cap: windows x sketch depth x active cells -- a
+                  // sketch-sized domain, larger than the default cap but
+                  // still corpus-independent
+                  .collectBounded("closed-window sketch rows", cap = 1000000)
+                val sketch = rows.map(r => (r.getTimestamp(0), r.getInt(1),
+                  r.getLong(2)) -> r.getLong(3)).toMap
+                val probed = rows.map(_.getTimestamp(0)).distinct.flatMap {
+                  win =>
+                    (0L until 10L).map { uid =>
+                      val est = (0 until 4).map(j =>
+                        sketch.getOrElse((win, j, cellOf(j, uid)), 0L)).min
+                      (win, uid, est)
+                    }
+                }
+                acc.synchronized { acc ++= probed }
+                ()
               }
-              acc.synchronized { acc ++= probed }
-              ()
-            }
-            .outputMode("append")
-            .option("checkpointLocation", ckptDir.toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        }
-        try {
-          q.awaitTermination()
-        } finally {
-          q.stop()
-          deleteRecursively(ckptDir)
-          deleteRecursively(sentinelDir)
+              .outputMode("append")
+            StreamGate.rocksDbState(s)(StreamGate.run(writer, ckptDir))
         }
         acc.synchronized { acc.toSeq }
           .toDF("win_start", "user_id", "est")
@@ -1754,46 +1273,25 @@ object StreamingQueries {
       "q268_streaming_sprt",
       (s, dir) => {
         import s.implicits._
-        val id = sprtRunId.incrementAndGet()
-        if (id > 1) s.catalog.dropTempView(s"graft_stream_sprt_${id - 1}")
-        val name = s"graft_stream_sprt_$id"
-        val ckptDir = java.nio.file.Files.createTempDirectory("graft_sprt_ckpt")
-        val sentinelDir = java.nio.file.Files.createTempDirectory("graft_sprt_sentinel")
-        // r15: driver-side constant-row write (no Spark job + commit
-        // protocol for one sentinel row — measured 0.31s → 0.03s/gate)
-        graft.streaming.SentinelFiles.writeFlushSentinel(sentinelDir)
-        // the same grid constants the batch twin derives in-plan
-        val a9 = math.floor(math.log(0.20 / 0.10) * 1e9 + 0.5).toLong
-        val b9 = math.floor(math.log(0.80 / 0.90) * 1e9 + 0.5).toLong
-        val t9 = math.floor(math.log(0.95 / 0.05) * 1e9 + 0.5).toLong
-        val stream = EventStreams
-          .readStream(s, dir, globFilter = Some("events.parquet"))
-          .unionByName(EventStreams.readStream(s, sentinelDir.toString,
-            globFilter = Some("*.parquet")))
-          .selectExpr(
-            "CASE WHEN user_id < 0 THEN user_id ELSE user_id % 2 END AS variant",
-            "ts", "unix_micros(ts) AS ts_us", "event_id",
-            "event_type = 'purchase' AS success")
-          .as[EventStreams.SprtEvent]
-        val q = withRocksDbState(s) {
-          EventStreams.sprtWalk(stream, a9, b9, t9)
+        val out = StreamGate.withScratch("graft_sprt_sentinel") { case Seq(sentinelDir) =>
+          SentinelFiles.writeFlushSentinel(sentinelDir)
+          // the same grid constants the batch twin derives in-plan
+          val a9 = math.floor(math.log(0.20 / 0.10) * 1e9 + 0.5).toLong
+          val b9 = math.floor(math.log(0.80 / 0.90) * 1e9 + 0.5).toLong
+          val t9 = math.floor(math.log(0.95 / 0.05) * 1e9 + 0.5).toLong
+          val stream = EventStreams.readFlushed(s, dir, sentinelDir)
+            .selectExpr(
+              "CASE WHEN user_id < 0 THEN user_id ELSE user_id % 2 END AS variant",
+              "ts", "unix_micros(ts) AS ts_us", "event_id",
+              "event_type = 'purchase' AS success")
+            .as[EventStreams.SprtEvent]
+          val plan = EventStreams.sprtWalk(stream, a9, b9, t9)
             .filter(col("variant") >= 0)
-            .writeStream
-            .format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckptDir.toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
+          StreamGate.rocksDbState(s) {
+            StreamGate.toMemory(s, "sprt", plan, "append")
+          }
         }
-        try {
-          q.awaitTermination()
-        } finally {
-          q.stop()
-          deleteRecursively(ckptDir)
-          deleteRecursively(sentinelDir)
-        }
-        s.table(name)
+        out
           .select(col("variant"), col("n_total").as("n_total"),
             col("n_success").as("n_purchases"), col("n_at_decision"),
             col("decision"),
@@ -1866,11 +1364,6 @@ object StreamingQueries {
       "q277_streaming_psi",
       (s, dir) => {
         import s.implicits._
-        val ckptDir = java.nio.file.Files.createTempDirectory("graft_psi_ckpt")
-        val sentinelDir = java.nio.file.Files.createTempDirectory("graft_psi_sentinel")
-        // r15: driver-side constant-row write (no Spark job + commit
-        // protocol for one sentinel row — measured 0.31s → 0.03s/gate)
-        graft.streaming.SentinelFiles.writeFlushSentinel(sentinelDir)
         // frozen reference profile: global value-bucket counts ordered
         // by bin (bounded: value domain / 50)
         val ref = graft.io.Tables.load(s, dir, "events")
@@ -1882,55 +1375,45 @@ object StreamingQueries {
         val bins = ref.keys.toSeq.sorted
         val acc = new scala.collection.mutable.ArrayBuffer[
           (java.sql.Timestamp, Long, Double, Boolean)]()
-        val q = withRocksDbState(s) {
-          EventStreams
-            .readStream(s, dir, globFilter = Some("events.parquet"))
-            .unionByName(EventStreams.readStream(s, sentinelDir.toString,
-              globFilter = Some("*.parquet")))
-            .withWatermark("ts", "2 hours")
-            .groupBy(window(col("ts"), "6 hours").as("w"),
-              floor(col("value") / 50.0).cast("long").as("bin"))
-            .agg(count(lit(1)).as("c"))
-            .select(col("w.start").as("win_start"), col("bin"), col("c"))
-            .writeStream
-            .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-                org.apache.spark.sql.Row], _: Long) =>
-              val rows = batch
-                .where(col("win_start") <
-                  lit("2090-01-01 00:00:00").cast("timestamp"))
-                .collectBounded("closed-window rows")
-              val walked = rows.groupBy(_.getTimestamp(0)).toSeq.map {
-                case (win, rs) =>
-                  val cnt = rs.map(r => r.getLong(1) -> r.getLong(2)).toMap
-                  val n = cnt.values.sum
-                  // add-half smoothing over the REFERENCE bin set, bins
-                  // folded in sorted order — the exact op sequence the
-                  // oracle replays, term-gridded so sum order is moot
-                  val b = bins.size
-                  val psi9 = bins.map { bin =>
-                    val pw = (cnt.getOrElse(bin, 0L) + 0.5) /
-                      (n + 0.5 * b)
-                    val pr = (ref(bin) + 0.5) / (refN + 0.5 * b)
-                    math.floor((pw - pr) * math.log(pw / pr) * 1e9 + 0.5)
-                      .toLong
-                  }.sum
-                  val psi = math.floor(psi9.toDouble / 1e9 * 1e6 + 0.5) / 1e6
-                  (win, n, psi, psi > 0.2)
+        StreamGate.withScratch("graft_psi_ckpt", "graft_psi_sentinel") {
+          case Seq(ckptDir, sentinelDir) =>
+            SentinelFiles.writeFlushSentinel(sentinelDir)
+            val writer = EventStreams.readFlushed(s, dir, sentinelDir)
+              .withWatermark("ts", "2 hours")
+              .groupBy(window(col("ts"), "6 hours").as("w"),
+                floor(col("value") / 50.0).cast("long").as("bin"))
+              .agg(count(lit(1)).as("c"))
+              .select(col("w.start").as("win_start"), col("bin"), col("c"))
+              .writeStream
+              .foreachBatch { (batch: org.apache.spark.sql.Dataset[
+                  org.apache.spark.sql.Row], _: Long) =>
+                val rows = batch
+                  .where(col("win_start") <
+                    lit("2090-01-01 00:00:00").cast("timestamp"))
+                  .collectBounded("closed-window rows")
+                val walked = rows.groupBy(_.getTimestamp(0)).toSeq.map {
+                  case (win, rs) =>
+                    val cnt = rs.map(r => r.getLong(1) -> r.getLong(2)).toMap
+                    val n = cnt.values.sum
+                    // add-half smoothing over the REFERENCE bin set, bins
+                    // folded in sorted order — the exact op sequence the
+                    // oracle replays, term-gridded so sum order is moot
+                    val b = bins.size
+                    val psi9 = bins.map { bin =>
+                      val pw = (cnt.getOrElse(bin, 0L) + 0.5) /
+                        (n + 0.5 * b)
+                      val pr = (ref(bin) + 0.5) / (refN + 0.5 * b)
+                      math.floor((pw - pr) * math.log(pw / pr) * 1e9 + 0.5)
+                        .toLong
+                    }.sum
+                    val psi = math.floor(psi9.toDouble / 1e9 * 1e6 + 0.5) / 1e6
+                    (win, n, psi, psi > 0.2)
+                }
+                acc.synchronized { acc ++= walked }
+                ()
               }
-              acc.synchronized { acc ++= walked }
-              ()
-            }
-            .outputMode("append")
-            .option("checkpointLocation", ckptDir.toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        }
-        try {
-          q.awaitTermination()
-        } finally {
-          q.stop()
-          deleteRecursively(ckptDir)
-          deleteRecursively(sentinelDir)
+              .outputMode("append")
+            StreamGate.rocksDbState(s)(StreamGate.run(writer, ckptDir))
         }
         acc.synchronized { acc.toSeq }
           .toDF("win_start", "n_events", "psi", "drifted")
@@ -1986,43 +1469,22 @@ object StreamingQueries {
       "q292_streaming_lateness",
       (s, dir) => {
         import s.implicits._
-        val id = lateRunId.incrementAndGet()
-        if (id > 1) s.catalog.dropTempView(s"graft_stream_late_${id - 1}")
-        val name = s"graft_stream_late_$id"
-        val ckptDir = java.nio.file.Files.createTempDirectory("graft_late_ckpt")
-        val sentinelDir = java.nio.file.Files.createTempDirectory("graft_late_sentinel")
-        // r15: driver-side constant-row write (no Spark job + commit
-        // protocol for one sentinel row — measured 0.31s → 0.03s/gate)
-        graft.streaming.SentinelFiles.writeFlushSentinel(sentinelDir)
-        val stream = EventStreams
-          .readStream(s, dir, globFilter = Some("events.parquet"))
-          .unionByName(EventStreams.readStream(s, sentinelDir.toString,
-            globFilter = Some("*.parquet")))
-          .selectExpr("user_id",
-            "timestamp_micros(unix_micros(ts) + (event_id % 4) * 30000000)" +
-              " AS arr",
-            "unix_micros(ts) + (event_id % 4) * 30000000 AS arr_us",
-            "unix_micros(ts) AS ts_us", "event_id")
-          .as[EventStreams.LateEvent]
-        val q = withRocksDbState(s) {
-          EventStreams.latenessRouter(stream)
+        val out = StreamGate.withScratch("graft_late_sentinel") { case Seq(sentinelDir) =>
+          SentinelFiles.writeFlushSentinel(sentinelDir)
+          val stream = EventStreams.readFlushed(s, dir, sentinelDir)
+            .selectExpr("user_id",
+              "timestamp_micros(unix_micros(ts) + (event_id % 4) * 30000000)" +
+                " AS arr",
+              "unix_micros(ts) + (event_id % 4) * 30000000 AS arr_us",
+              "unix_micros(ts) AS ts_us", "event_id")
+            .as[EventStreams.LateEvent]
+          val plan = EventStreams.latenessRouter(stream)
             .filter(col("user_id") >= 0)
-            .writeStream
-            .format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckptDir.toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
+          StreamGate.rocksDbState(s) {
+            StreamGate.toMemory(s, "late", plan, "append")
+          }
         }
-        try {
-          q.awaitTermination()
-        } finally {
-          q.stop()
-          deleteRecursively(ckptDir)
-          deleteRecursively(sentinelDir)
-        }
-        s.table(name)
+        out
           .select(col("user_id"), col("n_events"), col("n_admit"),
             col("n_drop"), col("max_late_us"))
           .orderBy("user_id")
@@ -2068,40 +1530,19 @@ object StreamingQueries {
       "q311_streaming_cadence",
       (s, dir) => {
         import s.implicits._
-        val id = cadRunId.incrementAndGet()
-        if (id > 1) s.catalog.dropTempView(s"graft_stream_cad_${id - 1}")
-        val name = s"graft_stream_cad_$id"
-        val ckptDir = java.nio.file.Files.createTempDirectory("graft_cad_ckpt")
-        val sentinelDir = java.nio.file.Files.createTempDirectory("graft_cad_sentinel")
-        // r15: driver-side constant-row write (no Spark job + commit
-        // protocol for one sentinel row — measured 0.31s → 0.03s/gate)
-        graft.streaming.SentinelFiles.writeFlushSentinel(sentinelDir)
-        val stream = EventStreams
-          .readStream(s, dir, globFilter = Some("events.parquet"))
-          .unionByName(EventStreams.readStream(s, sentinelDir.toString,
-            globFilter = Some("*.parquet")))
-          .selectExpr("user_id", "ts", "unix_micros(ts) AS ts_us",
-            "event_id")
-          .as[EventStreams.CadenceEvent]
-        val q = withRocksDbState(s) {
-          EventStreams.cadenceMonitor(stream)
+        val out = StreamGate.withScratch("graft_cad_sentinel") { case Seq(sentinelDir) =>
+          SentinelFiles.writeFlushSentinel(sentinelDir)
+          val stream = EventStreams.readFlushed(s, dir, sentinelDir)
+            .selectExpr("user_id", "ts", "unix_micros(ts) AS ts_us",
+              "event_id")
+            .as[EventStreams.CadenceEvent]
+          val plan = EventStreams.cadenceMonitor(stream)
             .filter(col("user_id") >= 0)
-            .writeStream
-            .format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckptDir.toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
+          StreamGate.rocksDbState(s) {
+            StreamGate.toMemory(s, "cad", plan, "append")
+          }
         }
-        try {
-          q.awaitTermination()
-        } finally {
-          q.stop()
-          deleteRecursively(ckptDir)
-          deleteRecursively(sentinelDir)
-        }
-        s.table(name)
+        out
           .where(col("n_gaps") >= 5 && col("sg") > 0)
           .withColumn("cv",
             sqrt((col("n_gaps") * col("sg2") - col("sg") * col("sg"))
@@ -2152,20 +1593,9 @@ object StreamingQueries {
       "q342_streaming_srm",
       (s, dir) => {
         import s.implicits._
-        val id = srmRunId.incrementAndGet()
-        if (id > 1) s.catalog.dropTempView(s"graft_stream_srm_${id - 1}")
-        val name = s"graft_stream_srm_$id"
-        val ckptDir = java.nio.file.Files.createTempDirectory("graft_srm_ckpt")
-        val sentinelDir =
-          java.nio.file.Files.createTempDirectory("graft_srm_sentinel")
-        // r15: driver-side constant-row write (no Spark job + commit
-        // protocol for one sentinel row — measured 0.31s → 0.03s/gate)
-        graft.streaming.SentinelFiles.writeFlushSentinel(sentinelDir)
-        val q = withRocksDbState(s) {
-          EventStreams
-            .readStream(s, dir, globFilter = Some("events.parquet"))
-            .unionByName(EventStreams.readStream(s, sentinelDir.toString,
-              globFilter = Some("*.parquet")))
+        val out = StreamGate.withScratch("graft_srm_sentinel") { case Seq(sentinelDir) =>
+          SentinelFiles.writeFlushSentinel(sentinelDir)
+          val plan = EventStreams.readFlushed(s, dir, sentinelDir)
             .withColumn("day", to_date(col("ts")))
             .withColumn("arm", pmod(col("user_id"), lit(2)))
             .withWatermark("ts", "2 hours")
@@ -2180,26 +1610,15 @@ object StreamingQueries {
                 .otherwise(0L)).as("n1"))
             .select(col("w.start").cast("date").as("day"),
               col("n0"), col("n1"))
-            .writeStream
-            .format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckptDir.toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        }
-        try {
-          q.awaitTermination()
-        } finally {
-          q.stop()
-          deleteRecursively(ckptDir)
-          deleteRecursively(sentinelDir)
+          StreamGate.rocksDbState(s) {
+            StreamGate.toMemory(s, "srm", plan, "append")
+          }
         }
         // postlude over the memory sink only (no event re-scan): fold
         // each closed day into the chi-square; drop the sentinel's
         // empty far-future day
         val e = (col("n0") + col("n1")).cast("double") / 2.0
-        s.table(name)
+        out
           .where(col("n0") + col("n1") > 0)
           .select(col("day"), col("n0").cast("long").as("n0"),
             col("n1").cast("long").as("n1"),
@@ -2247,47 +1666,25 @@ object StreamingQueries {
       "q366_streaming_balance",
       (s, dir) => {
         import s.implicits._
-        val id = balRunId.incrementAndGet()
-        if (id > 1) s.catalog.dropTempView(s"graft_stream_bal_${id - 1}")
-        val name = s"graft_stream_bal_$id"
-        val ckptDir = java.nio.file.Files.createTempDirectory("graft_bal_ckpt")
-        val sentinelDir =
-          java.nio.file.Files.createTempDirectory("graft_bal_sentinel")
-        // r15: driver-side constant-row write (no Spark job + commit
-        // protocol for one sentinel row — measured 0.31s → 0.03s/gate)
-        graft.streaming.SentinelFiles.writeFlushSentinel(sentinelDir)
-        val stream = EventStreams
-          .readStream(s, dir, globFilter = Some("events.parquet"))
-          .unionByName(EventStreams.readStream(s, sentinelDir.toString,
-            globFilter = Some("*.parquet")))
-          .where(col("event_type")
-            .isin("purchase", "click", "view", "__flush"))
-          .select(col("user_id"), col("ts"),
-            expr("unix_micros(ts)").as("ts_us"), col("event_id"),
-            when(col("event_type") === "purchase",
-              floor(col("value") * 100 + 0.5).cast("long"))
-              .otherwise(-floor(col("value") * 100 + 0.5).cast("long"))
-              .as("dx"))
-          .as[EventStreams.BalanceEvent]
-        val q = withRocksDbState(s) {
-          EventStreams.clampedBalance(stream)
+        val out = StreamGate.withScratch("graft_bal_sentinel") { case Seq(sentinelDir) =>
+          SentinelFiles.writeFlushSentinel(sentinelDir)
+          val stream = EventStreams.readFlushed(s, dir, sentinelDir)
+            .where(col("event_type")
+              .isin("purchase", "click", "view", "__flush"))
+            .select(col("user_id"), col("ts"),
+              expr("unix_micros(ts)").as("ts_us"), col("event_id"),
+              when(col("event_type") === "purchase",
+                floor(col("value") * 100 + 0.5).cast("long"))
+                .otherwise(-floor(col("value") * 100 + 0.5).cast("long"))
+                .as("dx"))
+            .as[EventStreams.BalanceEvent]
+          val plan = EventStreams.clampedBalance(stream)
             .filter(col("user_id") >= 0)
-            .writeStream
-            .format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckptDir.toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
+          StreamGate.rocksDbState(s) {
+            StreamGate.toMemory(s, "bal", plan, "append")
+          }
         }
-        try {
-          q.awaitTermination()
-        } finally {
-          q.stop()
-          deleteRecursively(ckptDir)
-          deleteRecursively(sentinelDir)
-        }
-        s.table(name)
+        out
           .select(col("user_id"), col("n_tx"), col("final_cents"),
             col("peak_cents"), col("floor_hits"))
           .orderBy("user_id")

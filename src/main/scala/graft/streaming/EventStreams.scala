@@ -73,6 +73,17 @@ object EventStreams {
       .withColumn("ts", expr(graft.io.Tables.epochLongToTsSql("ts")))
   }
 
+  /** The events fixture under `dir` as one stream with the flush
+    * sentinel files under `sentinelDir` (SentinelFiles) unioned in: the
+    * source of every finite gate whose state only emits once the
+    * watermark passes it.
+    */
+  def readFlushed(spark: SparkSession, dir: String,
+                  sentinelDir: java.nio.file.Path): DataFrame =
+    readStream(spark, dir, globFilter = Some("events.parquet"))
+      .unionByName(readStream(spark, sentinelDir.toString,
+        globFilter = Some("*.parquet")))
+
   /** Tumbling 1-hour windowed counts with a 2-hour watermark — the
     * streaming twin of batch q21.
     */

@@ -35,6 +35,22 @@ class SqlSurfaceSpec extends SparkSpec {
     assert(sqlBkt == apiBkt)
   }
 
+  test("every engine SQL function resolves from the extension alone") {
+    // a new session shares no temp functions with this suite's session,
+    // so only GraftExtensions' injected table is in scope
+    val fresh = spark.newSession()
+    val names = Seq("poly_hash", "cosine_sim", "dot_product",
+      "shingle_hashes", "tokenize_with_offsets", "lsh_bucket", "word_ngrams",
+      "nfc_normalize", "winnowed_fingerprints", "jaro_winkler",
+      "damerau_levenshtein", "l2_distance", "hilbert_index")
+    assert(GraftExtensions.functions.map(_._1) == names)
+    names.foreach(n => assert(fresh.catalog.functionExists(n), n))
+    val r = fresh.sql(
+      "SELECT nfc_normalize('cafe\u0301') AS n, " +
+        "damerau_levenshtein('ab', 'ba') AS d").first()
+    assert(r.getString(0) == "caf\u00e9" && r.getInt(1) == 1)
+  }
+
   test("registered views answer plain SQL (wordcount in one statement)") {
     Engine.registerFunctions(spark)
     Engine.registerViews(spark, sf0001)
