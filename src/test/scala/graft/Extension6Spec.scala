@@ -11,8 +11,11 @@ class Extension6Spec extends SparkSpec {
     // the reference's OWN config file, unmodified: relative input path,
     // stringly-typed counts, python script names — the dispatcher must
     // resolve all of it (input_info.json names mapper_inverted_index.py)
+    val infoPath = "/root/reference/input_info.json"
+    assume(java.nio.file.Files.isRegularFile(java.nio.file.Paths.get(infoPath)),
+      s"$infoPath is absent")
     val out = graft.api.JobConfig
-      .run(spark, "/root/reference/input_info.json")
+      .run(spark, infoPath)
     assert(out.columns.toSeq == Seq("word", "postings"))
     // same result as driving the job directly
     val direct = graft.jobs.InvertedIndex(
@@ -485,14 +488,20 @@ class Extension6Spec extends SparkSpec {
     graft.api.JobConfig.register("line_count",
       records => records.agg(count(lit(1)).as("n")))
     val dir = java.nio.file.Files.createTempDirectory("graft_jobspec_c")
-    val cfg = dir.resolve("spec.json")
-    java.nio.file.Files.writeString(cfg,
-      """{"job": "line_count",
-        |"input_file_location": "/root/reference/input.txt"}""".stripMargin)
-    val n = graft.api.JobConfig.run(spark, cfg.toString)
-      .head().getLong(0)
-    val expected = graft.io.TextRecords
-      .read(spark, "/root/reference/input.txt").count()
-    assert(n == expected && n > 0)
+    try {
+      // own input: a few lines, blank ones among them
+      val input = dir.resolve("input.txt")
+      java.nio.file.Files.writeString(input,
+        "The quick brown fox.\n\njumps over\n\n\nthe lazy dog!\nend\n")
+      val cfg = dir.resolve("spec.json")
+      java.nio.file.Files.writeString(cfg,
+        s"""{"job": "line_count",
+          |"input_file_location": "$input"}""".stripMargin)
+      val n = graft.api.JobConfig.run(spark, cfg.toString)
+        .head().getLong(0)
+      val expected = graft.io.TextRecords
+        .read(spark, input.toString).count()
+      assert(n == expected && n > 0)
+    } finally graft.io.FsUtil.deleteRecursively(dir)
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import scala.io.Source
 
 import graft.io.TextRecords
@@ -10,6 +12,8 @@ import graft.jobs.{InvertedIndex, WordCount}
   * semantics (readlines keeps "\n"; blank-drop; regex clean; cumulative
   * cleaned offset with +1 per blank; per-word offset advancing len+1 for
   * non-empty tokens only) compared against the distributed pipelines.
+  * The three corpus goldens are canceled, naming the path, where the
+  * reference corpus is absent; the offset-quirk test needs no corpus.
   */
 class TextGoldenSpec extends SparkSpec {
 
@@ -58,6 +62,7 @@ class TextGoldenSpec extends SparkSpec {
   lazy val goldenTokens: Seq[(String, Long)] = naiveTokens(goldenRecords)
 
   test("TextRecords.read reproduces the reference's (line, offset) records") {
+    assume(Files.isRegularFile(Paths.get(inputPath)), s"$inputPath is absent")
     val got = TextRecords
       .read(spark, inputPath, minPartitions = 7)
       .orderBy("line_id")
@@ -69,6 +74,7 @@ class TextGoldenSpec extends SparkSpec {
   }
 
   test("word count over input.txt matches the naive golden") {
+    assume(Files.isRegularFile(Paths.get(inputPath)), s"$inputPath is absent")
     val golden = goldenTokens.groupBy(_._1).view.mapValues(_.size.toLong).toMap
     val got = WordCount(TextRecords.read(spark, inputPath, minPartitions = 7))
       .collect()
@@ -79,6 +85,7 @@ class TextGoldenSpec extends SparkSpec {
   }
 
   test("inverted index over input.txt matches the naive golden (sorted postings)") {
+    assume(Files.isRegularFile(Paths.get(inputPath)), s"$inputPath is absent")
     val golden = goldenTokens
       .groupBy(_._1)
       .view.mapValues(_.map(_._2).sorted)
