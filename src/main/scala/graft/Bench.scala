@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times every registered query at
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
@@ -33,26 +31,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmupDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // r10 verdict item 8 (tier-1 streaming spread): the state-store
-      // maintenance thread fires every 60s by default — mid-bench it
-      // snapshots/cleans RocksDB instances of EARLIER queries while a
-      // LATER one is being timed, which is pure cross-query noise.
-      // Parking it for the bench's lifetime keeps each streaming gate's
-      // cost its own; correctness is unaffected (maintenance is an
-      // optimization, and every bench query's state dies with its
-      // checkpoint anyway).
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "1h")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session()
 
     // label every run's jobs (guide §1.5) so a UI/eventlog reading of a
     // bench pass attributes stages to queries without guesswork

@@ -2,39 +2,47 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** SparkSession factory for the graft engine.
+/** The one SparkSession factory: Bench, Verify, the test suites and the
+  * diagnostic tools all build their session here.
   *
   * The reference's "cluster lifecycle" (`/root/reference/driver.py:86-154` —
   * GCP VM provisioning, scp code shipping, XML-RPC endpoints) is entirely
   * subsumed by Spark's cluster manager; the only engine-side concern left is
-  * session configuration. Defaults are tuned for the local[32] test rig but
-  * every choice is the one you'd make on a 1000-executor cluster too:
+  * session configuration:
   *
-  *  - AQE on: runtime coalescing of shuffle partitions, skew-join splitting.
-  *  - shuffle.partitions sized to cores locally; on a real cluster this is
-  *    overridden by AQE's target advisory size anyway.
+  *  - `local[cores]` with shuffle.partitions = cores; AQE (coalescing,
+  *    skew-join splitting) is on by Spark's own default and is not
+  *    restated here.
   *  - UTC session timezone so timestamp semantics match the DuckDB oracle.
+  *  - `nanosAsLong`: raw INT64-nanos `ts` columns (streaming flush
+  *    sentinels, events files the tests write) read as longs, which
+  *    `graft.io.Tables.load` converts under its unit guard.
+  *  - `GraftExtensions` injects the SQL function table into every session.
   */
 object Engine {
   def session(
-      master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
-      shufflePartitions: Int = Runtime.getRuntime.availableProcessors(),
+      cores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt,
       appName: String = "graft"): SparkSession = {
     val spark = SparkSession
       .builder()
-      .master(master)
+      .master(s"local[$cores]")
       .appName(appName)
       .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // r10 verdict item 8 (tier-1 streaming spread): the state-store
+      // maintenance thread fires every 60s by default — mid-bench it
+      // snapshots/cleans RocksDB instances of EARLIER queries while a
+      // LATER one is being timed, which is pure cross-query noise.
+      // Parking it for the session's lifetime keeps each streaming gate's
+      // cost its own; correctness is unaffected (maintenance is an
+      // optimization, and every gate's state dies with its checkpoint
+      // anyway).
+      .config("spark.sql.streaming.stateStore.maintenanceInterval", "1h")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    registerFunctions(spark)
     spark
   }
 

@@ -76,10 +76,4 @@ object SparkEntry {
     * records a weaker rows-only check for those). */
   def oracleSql: Map[String, String] =
     all.flatMap(q => q.oracle.map(sql => q.name -> sql)).toMap
-
-  /** Headline subset (`Q(bench = true)`) — used as tools.Explain's
-    * default plan-review list. graft.Bench times ALL registered queries,
-    * not just these.
-    */
-  def benchQueries: Seq[Q] = all.filter(_.bench)
 }

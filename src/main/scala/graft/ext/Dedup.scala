@@ -4,6 +4,7 @@ import scala.util.Random
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.LogicalRDD
 
 import graft.functions.{PolyHash, Rounding}
 
@@ -625,6 +626,10 @@ object Dedup {
     // storage), which truncates lineage the same way; persist is the
     // wrong tool either way.
     def pin(df: DataFrame): DataFrame = df.localCheckpoint()
+    def unpin(df: DataFrame): Unit = df.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
     val g = groupCols.map(col)
     val edges = pairs.select(g ++ Seq(
       col("da").cast("long").as("src"), col("db").cast("long").as("dst")): _*)
@@ -673,6 +678,10 @@ object Dedup {
           groupCols :+ "id")
         .where(col("label") =!= col("old"))
         .limit(1).count()
+      // free the superseded round's blocks now rather than whenever GC
+      // lets ContextCleaner find them: nextP is pinned, so nothing reads
+      // the old labels again (und and the returned frame stay pinned)
+      unpin(labels)
       labels = nextP
       done = changed == 0
       iter += 1

@@ -201,9 +201,9 @@ object SimilaritySearch {
 
   /** The candidate-pair stage of [[multiProbeTopK]]: the DISTINCT
     * (query_id, neighbor_id, qv, cv) pairs reached through the probed
-    * bucket union, before scoring/ranking. Exposed separately so tooling
-    * (MultiProbeScaleProbe) can measure the TRUE candidate volume — the
-    * bucket-union size after dedup — rather than an upper bound.
+    * bucket union, before scoring/ranking. Exposed separately so the TRUE
+    * candidate volume — the bucket-union size after dedup — can be
+    * measured rather than an upper bound.
     */
   def multiProbeCandidates(queries: DataFrame, corpus: DataFrame,
                            idCol: String = "vec_id",

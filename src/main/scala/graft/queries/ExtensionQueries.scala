@@ -244,8 +244,7 @@ object ExtensionQueries {
              |FROM (SELECT doc_id,
              |        md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS fp
              |      FROM documents)
-             |ORDER BY doc_id""".stripMargin),
-      bench = true),
+             |ORDER BY doc_id""".stripMargin)),
 
     // ------------------------------------------------------------------
     // q44: exact n-gram Jaccard near-dup pairs (shingle inverted index).
@@ -311,8 +310,7 @@ object ExtensionQueries {
       (s, dir) =>
         Dedup.nearDupPairs(Tables.load(s, dir, "documents"), "text", "doc_id", 0.5)
           .orderBy("da", "db"),
-      Some(NearDupPairsOracle + "\nORDER BY da, db"),
-      bench = true),
+      Some(NearDupPairsOracle + "\nORDER BY da, db")),
 
     // ------------------------------------------------------------------
     // q59: near-dup pairs → cluster-canonical assignment via connected
@@ -441,8 +439,7 @@ object ExtensionQueries {
              |  FROM scored)
              |SELECT query_id, rank, neighbor_id, cos
              |FROM ranked WHERE rank <= 10
-             |ORDER BY query_id, rank""".stripMargin),
-      bench = true),
+             |ORDER BY query_id, rank""".stripMargin)),
 
     // ------------------------------------------------------------------
     // q49: LSH-bucketed ANN top-5 — candidates only meet inside their

@@ -262,7 +262,7 @@ object ExtensionQueries3 {
     // q101: Z-order layout key — the Morton interleave of (l_partkey,
     // l_suppkey) that gives BOTH columns min/max-pruning locality when
     // the table is range-partitioned and sorted by it (a plain sort
-    // favors only its leading column; tools.ZOrderProbe measures point
+    // favors only its leading column; tools.ZOrderProbe measured point
     // filters touching 32%/23% of partitions vs 100% for the non-leading
     // column). Each dimension is min-max-stretched into the full 16-bit
     // domain first — without that, a narrow key contributes only
@@ -399,8 +399,7 @@ object ExtensionQueries3 {
              |  FROM scored)
              |SELECT query_id, rank, neighbor_id, score
              |FROM ranked WHERE rank <= 5
-             |ORDER BY query_id, rank""".stripMargin),
-      bench = true),
+             |ORDER BY query_id, rank""".stripMargin)),
 
     // ------------------------------------------------------------------
     // q105: per-key EWMA (α = 1/2) — the time-series smoothing op

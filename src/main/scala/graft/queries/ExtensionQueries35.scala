@@ -63,8 +63,7 @@ object ExtensionQueries35 {
              |FROM t a JOIN t b
              |  ON a.lang = b.lang AND a.blk = b.blk AND a.doc_id < b.doc_id
              |WHERE jaro_winkler_similarity(a.s40, b.s40) >= 0.75
-             |ORDER BY id_a, id_b""".stripMargin),
-      bench = true),
+             |ORDER BY id_a, id_b""".stripMargin)),
 
     // ------------------------------------------------------------------
     // q299: top principal component of the embedding block via the

@@ -288,8 +288,7 @@ object ExtensionQueries63 {
                     "1.0 - n_sample_candidates::DOUBLE" +
                       " / n_sample_pairs::DOUBLE")}
              |  END AS pruning_ratio_sample
-             |FROM ag CROSS JOIN ap""".stripMargin),
-      bench = true),
+             |FROM ag CROSS JOIN ap""".stripMargin)),
 
     // ------------------------------------------------------------------
     // q393: two-hop reach — for each part, how many parts are within

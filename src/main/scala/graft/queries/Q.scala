@@ -23,6 +23,4 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final case class Q(
     name: String,
     fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String],
-    /** Included in the Bench headline set. */
-    bench: Boolean = false)
+    oracle: Option[String])

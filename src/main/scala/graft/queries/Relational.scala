@@ -92,8 +92,7 @@ object Relational {
              |FROM lineitem
              |WHERE l_shipdate <= TIMESTAMP '2000-09-02'
              |GROUP BY l_returnflag, l_linestatus
-             |ORDER BY l_returnflag, l_linestatus""".stripMargin),
-      bench = true),
+             |ORDER BY l_returnflag, l_linestatus""".stripMargin)),
 
     // ------------------------------------------------------------------
     // q02: filter + narrow projection. The point at scale: .explain must
@@ -142,8 +141,7 @@ object Relational {
              |  AND l_shipdate > TIMESTAMP '1998-01-01'
              |GROUP BY l_orderkey, o_orderdate, o_orderpriority
              |ORDER BY revenue DESC, l_orderkey
-             |LIMIT 10""".stripMargin),
-      bench = true),
+             |LIMIT 10""".stripMargin)),
 
     // ------------------------------------------------------------------
     // q04: EXISTS → left-semi join (no row multiplication, lineitem side
@@ -204,8 +202,7 @@ object Relational {
              |  AND o_orderdate >= TIMESTAMP '1996-01-01'
              |  AND o_orderdate < TIMESTAMP '1998-01-01'
              |GROUP BY n_name
-             |ORDER BY revenue DESC, n_name""".stripMargin),
-      bench = true),
+             |ORDER BY revenue DESC, n_name""".stripMargin)),
 
     // ------------------------------------------------------------------
     // q06: selective scalar aggregate (TPC-H Q6). Fully pushed-down scan,
@@ -225,8 +222,7 @@ object Relational {
              |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
              |  AND l_shipdate < TIMESTAMP '1997-01-01'
              |  AND l_discount BETWEEN 0.05 AND 0.07
-             |  AND l_quantity < 24""".stripMargin),
-      bench = true),
+             |  AND l_quantity < 24""".stripMargin)),
 
     // ------------------------------------------------------------------
     // q07: window function — top-3 lineitems per supplier. One shuffle on
@@ -250,8 +246,7 @@ object Relational {
              |      ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber) AS rn
              |  FROM lineitem)
              |WHERE rn <= 3
-             |ORDER BY l_suppkey, rn""".stripMargin),
-      bench = true),
+             |ORDER BY l_suppkey, rn""".stripMargin)),
 
     // ------------------------------------------------------------------
     // q08: distinct (shuffle dedup on the composite key).
@@ -468,8 +463,7 @@ object Relational {
              |      FROM lineitem GROUP BY 1 HAVING sum(l_quantity) > 250) big
              |  ON o_orderkey = big_orderkey
              |JOIN customer ON o_custkey = c_custkey
-             |ORDER BY o_totalprice DESC, o_orderkey""".stripMargin),
-      bench = true),
+             |ORDER BY o_totalprice DESC, o_orderkey""".stripMargin)),
 
     // ------------------------------------------------------------------
     // q19: NOT EXISTS → left-anti join (customers with no pending order).

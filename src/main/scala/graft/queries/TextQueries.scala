@@ -40,8 +40,7 @@ object TextQueries {
              |      FROM documents)
              |WHERE word <> ''
              |GROUP BY word
-             |ORDER BY word""".stripMargin),
-      bench = true),
+             |ORDER BY word""".stripMargin)),
 
     // ------------------------------------------------------------------
     // q31: inverted index, postings-with-term-frequency form
@@ -138,8 +137,7 @@ object TextQueries {
              |  FROM read_text('${TextQueries.ReferenceCorpus}'))
              |WHERE word <> ''
              |GROUP BY word
-             |ORDER BY word""".stripMargin),
-      bench = true),
+             |ORDER BY word""".stripMargin)),
 
     // ------------------------------------------------------------------
     // q35: inverted index WITH the reference's quirky character offsets

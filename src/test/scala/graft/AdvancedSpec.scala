@@ -22,7 +22,7 @@ class AdvancedSpec extends SparkSpec {
   }
 
   test("csv and json round-trip preserves data") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_io").toString
+    val dir = scratch("graft_io").toString
     val orig = Tables.load(spark, sf0001, "nation")
     Sources.writeCsv(orig, s"$dir/nation_csv")
     Sources.writeJsonLines(orig, s"$dir/nation_json")
@@ -35,7 +35,7 @@ class AdvancedSpec extends SparkSpec {
   }
 
   test("orc round-trip preserves data, schema, and pushes filters") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_orc").toString
+    val dir = scratch("graft_orc").toString
     val orig = Tables.load(spark, sf0001, "nation")
     Sources.writeOrc(orig, s"$dir/nation_orc")
     val back = Sources.readOrc(spark, s"$dir/nation_orc")
@@ -49,7 +49,7 @@ class AdvancedSpec extends SparkSpec {
   }
 
   test("writeCompacted sizes the file count to the target") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString
+    val dir = scratch("graft_compact").toString
     val li = Tables.load(spark, sf0001, "lineitem")
     def parquetFiles(p: String): Int =
       new java.io.File(p).listFiles().count(_.getName.endsWith(".parquet"))
@@ -64,7 +64,7 @@ class AdvancedSpec extends SparkSpec {
   }
 
   test("partitioned write prunes partitions at the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val dir = scratch("graft_part").toString
     val orders = Tables.load(spark, sf0001, "orders")
     Sources.writePartitionedParquet(orders, s"$dir/orders_p", "o_orderstatus")
     val back = Sources.readParquet(spark, s"$dir/orders_p")

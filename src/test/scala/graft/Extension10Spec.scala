@@ -36,7 +36,7 @@ class Extension10Spec extends SparkSpec {
 
   test("cdc compaction: latest event wins, a latest error tombstones " +
     "the user") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cdc")
+    val dir = scratch("graft_cdc")
     // user 1: latest is a purchase (kept, value rides along); user 2:
     // latest is an error (tombstoned); user 3: single signup (kept);
     // same-ts tie for user 1 breaks by event_id
@@ -60,7 +60,7 @@ class Extension10Spec extends SparkSpec {
 
   test("leakage-safe split: every member of a duplicate group gets its " +
     "canonical id's split; splits cover train/val/test on real data") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_split")
+    val dir = scratch("graft_split")
     // docs 0,1,7 are one group (whitespace/case variants) -> all three
     // must share doc 0's split; 2..6 singletons
     val rows = Seq(

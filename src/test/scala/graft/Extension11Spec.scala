@@ -10,7 +10,7 @@ class Extension11Spec extends SparkSpec {
   import spark.implicits._
 
   private def writeDocs(rows: Seq[(Long, String, String, String, Long)]) = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ext11")
+    val dir = scratch("graft_ext11")
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     dir.toString

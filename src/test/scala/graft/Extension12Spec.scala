@@ -42,7 +42,7 @@ class Extension12Spec extends SparkSpec {
 
   test("embedding audit: planted corrupt and ragged vectors fire the " +
     "n_corrupt and dim-bound columns") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_embaudit")
+    val dir = scratch("graft_embaudit")
     val unit = Array.fill(4)(0.5f) // norm 1
     val zeroish = Array(0.1f, 0.0f, 0.0f, 0.0f) // norm 0.1 -> corrupt
     val ragged = Array(1.0f, 0.0f) // 2 dims

@@ -11,7 +11,7 @@ class Extension13Spec extends SparkSpec {
 
   test("partition planner: exact ceiling file counts and the 4x-mean " +
     "skew flag on a planted layout") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pplan")
+    val dir = scratch("graft_pplan")
     // eight 1000-byte cells + a 4096 exact-multiple cell + a 10000-byte
     // hot cell: total 22096 over 10 cells, 4x-mean 8838 -> only the hot
     // cell flags; 10000 -> ceil(10000/4096) = 3 files
@@ -33,7 +33,7 @@ class Extension13Spec extends SparkSpec {
 
   test("curation impact: planted dup and contaminated docs are counted " +
     "once each and once in the union") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cimpact")
+    val dir = scratch("graft_cimpact")
     val banner = "one two three four five six"
     // doc 0 (id%25==0) is the benchmark; doc 1 embeds its grams
     // (contaminated); docs 2,3 are exact dups (3 removed, 2 kept);
@@ -69,8 +69,8 @@ class Extension13Spec extends SparkSpec {
     def nanos(epochS: Long): Long = epochS * 1000000000L
     val base = java.time.LocalDateTime.parse("2024-05-01T10:00:00")
       .toEpochSecond(java.time.ZoneOffset.UTC)
-    val dir = Files.createTempDirectory("graft_anom_dir")
-    val staging = Files.createTempDirectory("graft_anom_stage")
+    val dir = scratch("graft_anom_dir")
+    val staging = scratch("graft_anom_stage")
     def writeBatch(name: String, rows: Seq[(Long, Long, Long, String, Double, String)]): Unit = {
       val stage = staging.resolve(name)
       rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")

@@ -11,7 +11,7 @@ class Extension14Spec extends SparkSpec {
 
   test("k-anonymity ladder: generalization monotonically shrinks the " +
     "suppressed set; planted small group fires only at level 0") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_kanon")
+    val dir = scratch("graft_kanon")
     // (en, s1) x6 (safe), (en, s2) x2 (small at level 0); level 1 (en)
     // has 8 (safe); level 2 has 8 (safe)
     val rows = (0 until 6).map(i => (i.toLong, "t", "en", "s1", 1L)) ++
@@ -28,7 +28,7 @@ class Extension14Spec extends SparkSpec {
 
   test("multi-touch attribution: dyadic weights sum to exactly 1 per " +
     "purchase, recency order, window cutoff") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mta")
+    val dir = scratch("graft_mta")
     def ev(id: Long, uid: Long, tS: Long, typ: String, v: Double) =
       (id, tS * 1000000000L + 1714558400L * 1000000000L, uid, typ, v, "{}")
     // user 1: views at t-100, t-50, t-10 before purchase at t; a view
@@ -59,7 +59,7 @@ class Extension14Spec extends SparkSpec {
 
   test("temporal join: click sees the balance as of its instant, never " +
     "the future; n_prior counts history rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tjoin")
+    val dir = scratch("graft_tjoin")
     def ev(id: Long, uid: Long, tS: Long, typ: String, v: Double) =
       (id, tS * 1000000000L + 1714558400L * 1000000000L, uid, typ, v, "{}")
     Seq(

@@ -41,7 +41,7 @@ class Extension16Spec extends SparkSpec {
 
   test("vocab coverage: planted OOV-heavy source floors the rate; " +
     "all-vocab source hits 1.0") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_vocab")
+    val dir = scratch("graft_vocab")
     // 'common' dominates the counts -> it IS the vocab (top-10 of 11
     // distinct); rare1..10 + common = 11 words, the ten next words tie
     // at 1 so the (n DESC, w) tiebreak keeps rare01..rare09 and drops

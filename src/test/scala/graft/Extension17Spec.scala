@@ -30,7 +30,7 @@ class Extension17Spec extends SparkSpec {
 
   test("label kappa: hand-computed kappa on a planted confusion matrix; " +
     "kappa <= raw agreement") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_kappa")
+    val dir = scratch("graft_kappa")
     // source s1: 6 docs en-labeled: 4 predicted en ('the' marker), 2
     // predicted fr ('le la est' markers); 2 docs fr-labeled predicted
     // fr. Contingency: en:{en:4, fr:2}, fr:{fr:2}

@@ -36,7 +36,7 @@ class Extension18Spec extends SparkSpec {
 
   test("cluster purity: planted mixed cluster scores its majority " +
     "fraction with smallest-lang tie rule") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_purity")
+    val dir = scratch("graft_purity")
     val vec = Seq(1.0f, 0.0f)
     // cluster 0: langs en,en,fr -> purity 2/3 en; cluster 1: de,fr tie
     // -> majority 'de' (smallest lang), purity 1/2
@@ -59,7 +59,7 @@ class Extension18Spec extends SparkSpec {
 
   test("lag correlation: planted shifted-copy series peaks exactly at " +
     "its lag") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_lagcorr")
+    val dir = scratch("graft_lagcorr")
     // views pulse on hours {2,5,9,14,20} of Jan 1; purchases pulse
     // exactly 2 hours later -> r(lag=2) = 1.0 on the pulse pattern
     val base = java.time.LocalDateTime.parse("2024-01-01T00:00:00")

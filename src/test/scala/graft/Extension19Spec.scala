@@ -9,7 +9,7 @@ class Extension19Spec extends SparkSpec {
 
   test("trending terms: a word planted only in odd docs tops the lift " +
     "ranking; floor kills one-off noise") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_trend")
+    val dir = scratch("graft_trend")
     // 'spamword' x6 in odd (h1) docs only; 'noise' once in an odd doc
     // (under the c1 >= 5 floor); balanced filler everywhere
     val rows = (0 until 10).map { i =>

@@ -9,7 +9,7 @@ class Extension20Spec extends SparkSpec {
 
   test("event cadence: planted regular stream lands its quantiles in " +
     "the right 60s bin; cross-type streams independent") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cadence")
+    val dir = scratch("graft_cadence")
     val base = java.time.LocalDateTime.parse("2024-03-01T00:00:00")
       .toEpochSecond(java.time.ZoneOffset.UTC)
     // user 1 clicks every 90s (bin 1: 60-120s); user 1 views every

@@ -9,7 +9,7 @@ class Extension21Spec extends SparkSpec {
 
   test("twap: step-hold weighting beats plain avg on a planted burst; " +
     "hand-computed value exact") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_twap")
+    val dir = scratch("graft_twap")
     val base = java.time.LocalDateTime.parse("2024-06-01T00:00:00")
       .toEpochSecond(java.time.ZoneOffset.UTC)
     // user 1: value 10.00 held 100s, then a 1s burst at 99.00, then

@@ -16,7 +16,7 @@ class Extension22Spec extends SparkSpec {
       .toMap
     assert(clean.values.forall(_._2 == 0L), s"fixture is clean: $clean")
     // planted: one orphan lineitem, one orphan order
-    val dir = java.nio.file.Files.createTempDirectory("graft_refaudit")
+    val dir = scratch("graft_refaudit")
     Seq(Tuple1(1L)).toDF("c_custkey")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/customer.parquet")
     Seq((10L, 1L), (11L, 999L)).toDF("o_orderkey", "o_custkey")

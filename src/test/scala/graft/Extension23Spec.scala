@@ -10,7 +10,7 @@ class Extension23Spec extends SparkSpec {
   test("neyman allocation: seats sum exactly to the budget, high-spread " +
     "stratum beats equal-size low-spread stratum, hand-check on a " +
     "planted corpus") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_neyman")
+    val dir = scratch("graft_neyman")
     def doc(id: Long, n: Int, src: String) =
       (id, (1 to n).map(i => s"w$i").mkString(" "), "en", src, 1L)
     // s1: 10 docs alternating 10/90 tokens (high spread, sd = 40);

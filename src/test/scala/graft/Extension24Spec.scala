@@ -17,7 +17,7 @@ class Extension24Spec extends SparkSpec {
 
   test("group auc: perfect separation is 1, reversed is 0, tie case " +
     "matches the hand-computed Mann-Whitney value, one-class excluded") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_auc")
+    val dir = scratch("graft_auc")
     writeDocs(dir,
       // "sep": every en doc longer than every non-en doc -> AUC 1
       Seq((1L, "t", "en", "sep", 100L), (2L, "t", "en", "sep", 90L),
@@ -38,7 +38,7 @@ class Extension24Spec extends SparkSpec {
 
   test("calibration bins: bin ids in [0,9], counts cover the corpus, " +
     "gap is |avg_p - obs_rate|, ece is the count-weighted gap mean") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cal")
+    val dir = scratch("graft_cal")
     writeDocs(dir, (1 to 40).map { i =>
       (i.toLong, "t", if (i % 3 == 0) "en" else "de", "s", (i * 97).toLong)
     })
@@ -85,7 +85,7 @@ class Extension24Spec extends SparkSpec {
 
   test("rfm quintiles: tiles balanced over 10 customers, every segment " +
     "digit in 1..5, customer counts cover the population") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_rfm")
+    val dir = scratch("graft_rfm")
     // 10 customers, one order each: recency/frequency/monetary all
     // fully tiebroken by custkey -> each quintile holds exactly 2
     val day = 86400000L

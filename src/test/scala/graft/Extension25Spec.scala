@@ -78,8 +78,8 @@ class Extension25Spec extends SparkSpec {
     import spark.implicits._
     def nanos(s: String): Long =
       java.time.LocalDateTime.parse(s).toEpochSecond(java.time.ZoneOffset.UTC) * 1000000000L
-    val dir = java.nio.file.Files.createTempDirectory("graft_topk_fix")
-    val staging = java.nio.file.Files.createTempDirectory("graft_topk_stage")
+    val dir = scratch("graft_topk_fix")
+    val staging = scratch("graft_topk_stage")
     // day one: users 7 and 3 tie at 2 events, user 5 has 1 -> rank order
     // must be (3, 7, 5) by the (n DESC, user_id) rule
     Seq(
@@ -133,7 +133,7 @@ class Extension25Spec extends SparkSpec {
   test("l-diversity: homogeneous group flagged, diverse group passes, " +
     "rows_at_risk counts only risky-group members") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ldiv")
+    val dir = scratch("graft_ldiv")
     // group (1, A): 4 members all in band 0 -> risky (1 < 3 bands)
     // group (2, B): 3 members in bands 0/1/2 -> diverse
     Seq(
@@ -153,7 +153,7 @@ class Extension25Spec extends SparkSpec {
   test("ann ndcg: identical-direction corpus makes LSH == brute, " +
     "ndcg exactly 1.0 for every probe") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ndcg")
+    val dir = scratch("graft_ndcg")
     // 12 colinear vectors (same direction, different scales): cosine is
     // 1 for every pair so both rankings are the pure id tiebreak, and
     // one LSH bucket holds everyone -> the system run IS the ideal run
@@ -182,7 +182,7 @@ class Extension25Spec extends SparkSpec {
     assert(fps.count() == 0L)
     // empty corpus: the index builder must refuse (a silently empty
     // index would serve zero neighbors forever)
-    val idx = java.nio.file.Files.createTempDirectory("graft_empty_idx")
+    val idx = scratch("graft_empty_idx")
     try {
       val empty = spark.emptyDataFrame
         .withColumn("vec_id", lit(0L)).withColumn("embedding",
@@ -199,7 +199,7 @@ class Extension25Spec extends SparkSpec {
 
   test("source similarity: colinear sources score 1, orthogonal score 0") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_srcsim")
+    val dir = scratch("graft_srcsim")
     def vec(hot: Int, scale: Float): Array[Float] = {
       val a = Array.fill(64)(0.0f); a(hot) = scale; a
     }
@@ -225,7 +225,7 @@ class Extension25Spec extends SparkSpec {
   test("capped allocation: hand-checked water level, budget exactly " +
     "spent, nobody over availability") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_wfill")
+    val dir = scratch("graft_wfill")
     // availabilities (tokens = n_chars div 4): A=100, B1=10000, B2=10000
     // budget 20000: A drains (100), residual 19900 splits 9950/9950
     Seq((1L, "t", "en", "A", 400L), (2L, "t", "en", "B1", 20000L),
@@ -266,7 +266,7 @@ class Extension25Spec extends SparkSpec {
     import spark.implicits._
     def nanos(s: String): Long =
       java.time.LocalDateTime.parse(s).toEpochSecond(java.time.ZoneOffset.UTC) * 1000000000L
-    val dir = java.nio.file.Files.createTempDirectory("graft_dyngap")
+    val dir = scratch("graft_dyngap")
     Seq(
       // user 1: purchase at 10:00 (2h hold) + view at exactly 12:00 ->
       // ONE session (the q88 equality-merges rule, dynamic edition)
@@ -288,7 +288,7 @@ class Extension25Spec extends SparkSpec {
 
   test("gopher rules: each rule fires independently on a crafted doc") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_gopher")
+    val dir = scratch("graft_gopher")
     val good = ("the quick brown fox jumps over the lazy dog and runs " +
       "to a big field in the sun that shines bright every day now then")
     Seq(
@@ -315,7 +315,7 @@ class Extension25Spec extends SparkSpec {
   test("capped allocation, everything-fits branch: budget >= total " +
     "availability drains every source exactly") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_wfill2")
+    val dir = scratch("graft_wfill2")
     // availabilities 25 + 50 tokens, far under the 20000 budget: the
     // drain test must mark every source (k = S) and allocated == a
     Seq((1L, "t", "en", "A", 100L), (2L, "t", "en", "B", 200L))
@@ -346,7 +346,7 @@ class Extension25Spec extends SparkSpec {
       .sortBy(t => (t._1, t._2)).toSeq
     val inSession = canon(SimilaritySearch.ivfPqTopK(probes, e, 5,
       nCentroids = 16, nProbe = 4, m = 8, ksub = 16))
-    val idx = java.nio.file.Files.createTempDirectory("graft_rt_idx")
+    val idx = scratch("graft_rt_idx")
     try {
       SimilaritySearch.writeIvfPqIndex(e, idx.toString,
         nCentroids = 16, m = 8, ksub = 16)
@@ -387,8 +387,8 @@ class Extension25Spec extends SparkSpec {
     def rmAll(p: java.nio.file.Path): Unit =
       java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
         .foreach(f => java.nio.file.Files.deleteIfExists(f))
-    val idx1 = java.nio.file.Files.createTempDirectory("graft_inc1")
-    val idx2 = java.nio.file.Files.createTempDirectory("graft_inc2")
+    val idx1 = scratch("graft_inc1")
+    val idx2 = scratch("graft_inc2")
     try {
       SimilaritySearch.writeIvfPqIndex(base, idx1.toString,
         nCentroids = 16, m = 8, ksub = 16)
@@ -456,7 +456,7 @@ class Extension25Spec extends SparkSpec {
     def rmAll(p: java.nio.file.Path): Unit =
       java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
         .foreach(f => java.nio.file.Files.deleteIfExists(f))
-    val idx = java.nio.file.Files.createTempDirectory("graft_del1")
+    val idx = scratch("graft_del1")
     try {
       SimilaritySearch.writeIvfPqIndex(e, idx.toString,
         nCentroids = 16, m = 8, ksub = 16)

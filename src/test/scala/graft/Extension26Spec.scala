@@ -25,7 +25,7 @@ class Extension26Spec extends SparkSpec {
 
   test("streaming funnel: scrambled arrival order and click-before-view " +
     "users fold to the batch rule") {
-    val dir = Files.createTempDirectory("graft_funnel_fixture")
+    val dir = scratch("graft_funnel_fixture")
     try {
       // epoch NANOS (2024-01-15T00:00Z ≈ 1.7052768e18) — the raw-long
       // form EventStreams.readStream's unit guard classifies as nanos
@@ -63,7 +63,7 @@ class Extension26Spec extends SparkSpec {
 
   test("cdc upsert: second merge rewrites ONLY the affected buckets and " +
     "newer (ts, event_id) wins") {
-    val snap = Files.createTempDirectory("graft_cdc_spec_snap")
+    val snap = scratch("graft_cdc_spec_snap")
     try {
       def ts(s: String) = java.sql.Timestamp.valueOf(s)
       val batchA = (0L until 16L).map(u =>
@@ -99,7 +99,7 @@ class Extension26Spec extends SparkSpec {
 
   test("cdc compaction: drops tombstoned keys, removes a fully-deleted " +
     "bucket's directory, leaves clean buckets untouched") {
-    val snap = Files.createTempDirectory("graft_cdc_compact_snap")
+    val snap = scratch("graft_cdc_compact_snap")
     try {
       def ts(s: String) = java.sql.Timestamp.valueOf(s)
       // bucket 0: user 0 live, user 8 tombstoned; bucket 1: user 1
@@ -130,7 +130,7 @@ class Extension26Spec extends SparkSpec {
   }
 
   test("streaming moments: scrambled arrival folds to the batch moments") {
-    val dir = Files.createTempDirectory("graft_moments_fixture")
+    val dir = scratch("graft_moments_fixture")
     try {
       val base = 1705276800L * 1000000000L
       def ns(min: Long): Long = base + min * 60L * 1000000000L

@@ -17,7 +17,7 @@ class Extension38Spec extends SparkSpec {
 
   test("q311 streaming cadence folds scrambled arrival into exact " +
     "event-time gap sums (hand-computed CV)") {
-    val dir = Files.createTempDirectory("graft_cadence_fixture")
+    val dir = scratch("graft_cadence_fixture")
     try {
       val base = 1705276800L * 1000000000L // 2024-01-15T00:00Z in nanos
       def ns(min: Long): Long = base + min * 60L * 1000000000L

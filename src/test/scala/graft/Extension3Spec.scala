@@ -254,7 +254,7 @@ class Extension3Spec extends SparkSpec {
     // hand check on the fixture's smallest slice is impractical; build a
     // tiny parquet fixture instead: one user, values 2,4,8 in ts order
     // → f(f(2,4),8) = f(3,8) = 5.5
-    val dir = java.nio.file.Files.createTempDirectory("graft_ewma")
+    val dir = scratch("graft_ewma")
     val df = Seq(
       (1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 7L, "a", 2.0, "{}"),
       (2L, java.sql.Timestamp.valueOf("2024-01-01 00:01:00"), 7L, "a", 4.0, "{}"),

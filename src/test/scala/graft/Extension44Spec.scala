@@ -40,7 +40,7 @@ class Extension44Spec extends SparkSpec {
     val docs = (0L until 64L).map { d =>
       (d, (0 until 10).map(i => s"w${d}x$i").mkString(" "), "en", "s1", 0L)
     }.toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft_heaps")
+    val dir = scratch("graft_heaps")
     try {
       docs.coalesce(1).write.mode("overwrite")
         .parquet(s"$dir/documents.parquet")
@@ -156,7 +156,7 @@ class Extension44Spec extends SparkSpec {
     // compacting an index with NO pending tombstones is a no-op, not a
     // crash (and must not touch the files)
     val e = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
-    val idx = java.nio.file.Files.createTempDirectory("graft_noop_cmp")
+    val idx = scratch("graft_noop_cmp")
     try {
       graft.ext.SimilaritySearch.writeIvfPqIndex(e, idx.toString,
         nCentroids = 16, m = 8, ksub = 16)

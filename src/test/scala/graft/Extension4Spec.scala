@@ -103,7 +103,7 @@ class Extension4Spec extends SparkSpec {
 
   test("resample interpolates linearly and reproduces exact-grid events") {
     val q = SparkEntry.queries("q113_resample_interpolate")
-    val dir = java.nio.file.Files.createTempDirectory("graft_resample")
+    val dir = scratch("graft_resample")
     // events at 00:00 (v=10) and 02:00 (v=20): grid points 00:00, 01:00,
     // 02:00 → 10 (exact hit), 15 (midpoint), 20 (exact hit)
     val df = Seq(

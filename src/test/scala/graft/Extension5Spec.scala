@@ -132,7 +132,7 @@ class Extension5Spec extends SparkSpec {
 
   test("repeated spans recover a planted cross-doc duplicate exactly") {
     val q = SparkEntry.queries("q124_repeated_spans")
-    val dir = java.nio.file.Files.createTempDirectory("graft_spans")
+    val dir = scratch("graft_spans")
     // docs 1 and 2 share tokens 10..21 (a 12-token run: 5 overlapping
     // 8-grams in doc 1 at positions 10..14); all other tokens unique
     val shared = (0 until 12).map(i => s"dup$i").mkString(" ")

@@ -25,7 +25,7 @@ class Extension6Spec extends SparkSpec {
   }
 
   test("job spec parsing: job field wins, mismatched pair rejected") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_jobspec_t")
+    val dir = scratch("graft_jobspec_t")
     def write(name: String, body: String) = {
       val p = dir.resolve(name)
       java.nio.file.Files.writeString(p, body)
@@ -430,7 +430,7 @@ class Extension6Spec extends SparkSpec {
 
   test("debounce keeps the kept-anchor rule, not the lag rule") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_debounce")
+    val dir = scratch("graft_debounce")
     val t0 = 1704067200L * 1000000L // micros
     def ns(offsetUs: Long) = (t0 + offsetUs) * 1000L
     // chain 4 min apart: kept-anchor keeps {0, +8min}; the lag rule
@@ -452,7 +452,7 @@ class Extension6Spec extends SparkSpec {
 
   test("conversion window boundary: exactly 30min converts, 30min+1us not") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_conv_edge")
+    val dir = scratch("graft_conv_edge")
     val t0 = 1704067200L * 1000000000L // 2024-01-01 00:00:00 UTC, nanos
     def ns(offsetUs: Long) = t0 + offsetUs * 1000L
     // raw events schema: ts as int64 NANOS (the fixture's layout)
@@ -487,7 +487,7 @@ class Extension6Spec extends SparkSpec {
   test("custom registered jobs are spec-addressable") {
     graft.api.JobConfig.register("line_count",
       records => records.agg(count(lit(1)).as("n")))
-    val dir = java.nio.file.Files.createTempDirectory("graft_jobspec_c")
+    val dir = scratch("graft_jobspec_c")
     try {
       // own input: a few lines, blank ones among them
       val input = dir.resolve("input.txt")

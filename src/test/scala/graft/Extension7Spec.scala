@@ -39,7 +39,7 @@ class Extension7Spec extends SparkSpec {
   }
 
   test("ngram overlap: planted benchmark 5-gram is found, counts exact") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ngram")
+    val dir = scratch("graft_ngram")
     // doc 0 is benchmark (0 % 25 == 0); doc 1 shares exactly one of its
     // two 5-grams; doc 2 shares none; doc 3 is too short for any gram
     Seq(
@@ -70,7 +70,7 @@ class Extension7Spec extends SparkSpec {
     }
     // planted: marker-only texts make the prediction certain; zh has no
     // marker set so a zh label can never agree
-    val dir = java.nio.file.Files.createTempDirectory("graft_langaudit")
+    val dir = scratch("graft_langaudit")
     Seq(
       (0L, "the cat and the dog", "en", "s1", 19L), // pred en, agrees
       (1L, "der hund und die katze", "en", "s1", 22L), // pred de, disagrees

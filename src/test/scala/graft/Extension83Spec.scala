@@ -77,8 +77,8 @@ class Extension83Spec extends SparkSpec {
           .foreach(f => Files.deleteIfExists(f))
     val t0 = 1704067200L * 1000000000L // 2024-01-01T00:00Z ns
     // stream: only user 2 (+ sentinel); history: users 1 AND 2
-    val streamDir = Files.createTempDirectory("graft_ws_spec_stream")
-    val ckpt = Files.createTempDirectory("graft_ws_spec_ckpt")
+    val streamDir = scratch("graft_ws_spec_stream")
+    val ckpt = scratch("graft_ws_spec_ckpt")
     Seq(
       (201L, t0 + 60L * 1000000000L, 2L, "click", 3.50, "{}"),
       (202L, t0 + 120L * 1000000000L, 2L, "click", 1.25, "{}"),

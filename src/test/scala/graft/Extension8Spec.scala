@@ -13,7 +13,7 @@ class Extension8Spec extends SparkSpec {
 
   test("dsir weights: hand-computed add-1-smoothed log-ratios on a " +
     "planted corpus") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dsir")
+    val dir = scratch("graft_dsir")
     // vocab: cat (c_all=3, c_tgt=2), dog (c_all=3, c_tgt=0);
     // n_all=6, n_tgt=2, |V|=2
     Seq(
@@ -36,7 +36,7 @@ class Extension8Spec extends SparkSpec {
 
   test("dup rate by source: duplicate groups counted once per member, " +
     "cross-source flag, whitespace/case normalization") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_duprate")
+    val dir = scratch("graft_duprate")
     // fp(A) spans s1 (×2, one case/whitespace variant) and s2 (×1);
     // B and C are singletons
     Seq(
@@ -57,7 +57,7 @@ class Extension8Spec extends SparkSpec {
 
   test("rate limit: burst admits capacity, whole-period refills bank " +
     "the partial period") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ratelimit")
+    val dir = scratch("graft_ratelimit")
     // user 1: burst of 5 at 1s spacing (3 admitted), refill at +10 min
     // (1 admitted, then denied), double refill at +30 min (admitted);
     // user 2: isolated event (admitted) proves key isolation

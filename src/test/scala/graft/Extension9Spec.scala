@@ -10,7 +10,7 @@ class Extension9Spec extends SparkSpec {
   private def r6(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
 
   private def writeDocs(rows: Seq[(Long, String, String, String, Long)]) = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ext9")
+    val dir = scratch("graft_ext9")
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     dir.toString

@@ -201,6 +201,18 @@ class ExtensionSpec extends SparkSpec {
     (100L to 199L).foreach(i => assert(chainLabels(i) == 100L, s"chain $i → ${chainLabels(i)}"))
   }
 
+  test("canonicalize frees each superseded round's pinned labels") {
+    // a 40-node chain takes several rounds; only the pinned edge list
+    // and the returned labels may stay registered as persisted RDDs
+    val chain = (1L until 40L).map(i => (i, i + 1)).toDF("da", "db")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.size
+    val labels = Dedup.canonicalize(chain)
+    val grown = sc.getPersistentRDDs.size - before
+    assert(grown <= 2, s"$grown persisted RDDs left by one canonicalize")
+    assert(labels.where(col("label") =!= 1L).count() == 0)
+  }
+
   test("canonicalizeGrouped: per-group labels identical to per-group canonicalize runs") {
     // r14 optimization coverage: the grouped loop (one iterative pass
     // for all groups, keys widened by the group columns) must label

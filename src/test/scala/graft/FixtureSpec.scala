@@ -52,7 +52,7 @@ class FixtureSpec extends SparkSpec {
   test("Tables.load of a Spark-written events dir (3 part files, " +
     "_SUCCESS, raw nanos ts) == spark.read.parquet + the unit guard") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_load_parity")
+    val root = scratch("graft_load_parity")
     try {
       val base = 1704067200000000000L // 2024-01-01 in epoch nanos
       (0 until 60).map { i =>
@@ -96,7 +96,7 @@ class FixtureSpec extends SparkSpec {
   }
 
   test("Tables.load of a missing or empty location names the path") {
-    val root = Files.createTempDirectory("graft_load_missing")
+    val root = scratch("graft_load_missing")
     try {
       val missing = intercept[Exception](
         Tables.load(spark, root.toString, "orders"))

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -58,7 +56,7 @@ class GraftChangeFeedStreamSpec extends SparkSpec {
     VersionedTable.append(Seq((4L, 40L), (5L, 50L)).toDF("id", "v"), path)
     VersionedTable.deleteWhereDV(spark, path, col("id") === 2L)
     VersionedTable.append(Seq((6L, 60L)).toDF("id", "v"), path)
-    val ckpt = Files.createTempDirectory("graft_cdf_ck").toString
+    val ckpt = scratch("graft_cdf_ck").toString
     val out = tmp("graft_cdf_stream_out")
     val got = runFeed(path, ckpt, out)
     val expected = VersionedTable.tableChanges(spark, path, 0, 3)
@@ -94,7 +92,7 @@ class GraftChangeFeedStreamSpec extends SparkSpec {
     VersionedTable.applyCdc(spark, path,                         // v4 CoW
       Seq((4L, 0L, -1), (6L, 600L, 1)).toDF("id", "v", "op"),
       Seq("id"), "op")
-    val ckpt = Files.createTempDirectory("graft_cdfsc_ck").toString
+    val ckpt = scratch("graft_cdfsc_ck").toString
     val got = runFeed(path, ckpt, tmp("graft_cdf_sidecar_out"))
     val expected = VersionedTable.tableChanges(spark, path, 0, 4)
       .select("id", "v", "change", "commit_version")
@@ -143,7 +141,7 @@ class GraftChangeFeedStreamSpec extends SparkSpec {
     assert(cdcCdc == Set((1L, 10L, "removed")),
       s"no-op upsert leaked into the sidecar: $cdcCdc")
     // and the invariant the gates pin: stream == batch over the range
-    val ckpt = Files.createTempDirectory("graft_cdfno_ck").toString
+    val ckpt = scratch("graft_cdfno_ck").toString
     val got = runFeed(path, ckpt, tmp("graft_cdf_noop_out"))
     val expected = VersionedTable.tableChanges(spark, path, 0, 2)
       .select("id", "v", "change", "commit_version")
@@ -169,7 +167,7 @@ class GraftChangeFeedStreamSpec extends SparkSpec {
     assert(VersionedTable.changeDataFeedEnabled(path))
     VersionedTable.append(Seq((4L, 40L)).toDF("id", "v"), path) // v1
     spark.sql("UPDATE gcdf.t SET v = 999 WHERE id = 2")         // v2 CoW
-    val ckpt = Files.createTempDirectory("graft_cdfsql_ck").toString
+    val ckpt = scratch("graft_cdfsql_ck").toString
     val got = runFeed(path, ckpt, tmp("graft_cdf_sql_out"))
     val expected = VersionedTable.tableChanges(spark, path, 0, 2)
       .select("id", "v", "change", "commit_version")
@@ -192,7 +190,7 @@ class GraftChangeFeedStreamSpec extends SparkSpec {
     VersionedTable.append(Seq((3L, 30L)).toDF("id", "v"), path)
     VersionedTable.deleteWhere(spark, path, col("id") === 1L) // CoW: v2
     VersionedTable.append(Seq((4L, 40L)).toDF("id", "v"), path)
-    val ckpt1 = Files.createTempDirectory("graft_cdf_cow_ck1").toString
+    val ckpt1 = scratch("graft_cdf_cow_ck1").toString
     val e = intercept[org.apache.spark.sql.streaming
       .StreamingQueryException] {
       runFeed(path, ckpt1, tmp("graft_cdf_cow_fail_out"))
@@ -200,7 +198,7 @@ class GraftChangeFeedStreamSpec extends SparkSpec {
     assert(e.getCause.getMessage.contains("without CDC sidecars"),
       s"wrong refusal: ${e.getCause}")
     // skipChangeCommits: the CoW commit vanishes, appends still serve
-    val ckpt2 = Files.createTempDirectory("graft_cdf_cow_ck2").toString
+    val ckpt2 = scratch("graft_cdf_cow_ck2").toString
     val got = runFeed(path, ckpt2, tmp("graft_cdf_cow_skip_out"),
       Map("skipChangeCommits" -> "true", "maxVersionsPerTrigger" -> "1"))
       .map(t => (t._1, t._3, t._4))
@@ -219,7 +217,7 @@ class GraftChangeFeedStreamSpec extends SparkSpec {
     VersionedTable.append(Seq((3L, 30L)).toDF("id", "v"), path) // v2
     VersionedTable.deleteWhereDV(spark, path, col("id") === 1L) // v3
     VersionedTable.append(Seq((4L, 40L)).toDF("id", "v"), path) // v4
-    val ckpt = Files.createTempDirectory("graft_cdf_end_ck").toString
+    val ckpt = scratch("graft_cdf_end_ck").toString
     val out = tmp("graft_cdf_ending_out")
     val bounded = runFeed(path, ckpt, out,
       Map("endingVersion" -> "2"))
@@ -232,7 +230,7 @@ class GraftChangeFeedStreamSpec extends SparkSpec {
       (4L, 40L, "added", 4L)),
       s"unbounded continuation wrong: ${rest -- bounded}")
     // a bound below the start refuses loudly
-    val ckpt2 = Files.createTempDirectory("graft_cdf_end_ck2").toString
+    val ckpt2 = scratch("graft_cdf_end_ck2").toString
     val bad = intercept[Exception](
       runFeed(path, ckpt2, tmp("graft_cdf_ending_bad_out"),
         Map("startingVersion" -> "3", "endingVersion" -> "2")))
@@ -249,7 +247,7 @@ class GraftChangeFeedStreamSpec extends SparkSpec {
     VersionedTable.append(Seq((2L, 20L)).toDF("id", "v"), path) // v1
     VersionedTable.deleteWhereDV(spark, path, col("id") === 1L) // v2
     VersionedTable.append(Seq((3L, 30L)).toDF("id", "v"), path) // v3
-    val ckpt = Files.createTempDirectory("graft_cdf_pace_ck").toString
+    val ckpt = scratch("graft_cdf_pace_ck").toString
     val out = tmp("graft_cdf_paced_out")
     val q = spark.readStream.format("graft-versioned")
       .option("readChangeFeed", "true")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -37,7 +35,7 @@ class GraftMicroBatchSpec extends SparkSpec {
     "the V1 Source) and serves the whole history exactly once") {
     val path = tmp("graft_mb_engage")
     backlog(path, 4) // versions 0..4, 5 rows
-    val ckpt = Files.createTempDirectory("graft_mb_engage_ck").toString
+    val ckpt = scratch("graft_mb_engage_ck").toString
     val q = spark.readStream.format("graft-versioned").load(path)
       .groupBy().agg(count(lit(1)).as("n"), sum("v").as("s"))
       .writeStream.format("memory").queryName("mb_engage")
@@ -59,7 +57,7 @@ class GraftMicroBatchSpec extends SparkSpec {
     import spark.implicits._
     val path = tmp("graft_mb_pace")
     backlog(path, 7) // versions 0..7, 8 rows
-    val ckpt = Files.createTempDirectory("graft_mb_pace_ck").toString
+    val ckpt = scratch("graft_mb_pace_ck").toString
     val out = tmp("graft_mb_pace_out")
     val q = spark.readStream.format("graft-versioned")
       .option("maxVersionsPerTrigger", "2").load(path)
@@ -101,7 +99,7 @@ class GraftMicroBatchSpec extends SparkSpec {
     VersionedTable.append(
       (9L until 12L).map(i => (i, i)).toDF("id", "v")
         .repartition(3), path) // v2: 3 files
-    val ckpt = Files.createTempDirectory("graft_mb_files_ck").toString
+    val ckpt = scratch("graft_mb_files_ck").toString
     val out = tmp("graft_mb_files_out")
     val q = spark.readStream.format("graft-versioned")
       .option("maxFilesPerTrigger", "2").load(path)
@@ -122,7 +120,7 @@ class GraftMicroBatchSpec extends SparkSpec {
     import spark.implicits._
     val path = tmp("graft_mb_sem")
     backlog(path, 2)
-    val ckpt = Files.createTempDirectory("graft_mb_sem_ck").toString
+    val ckpt = scratch("graft_mb_sem_ck").toString
     // latest: the existing 3 versions are skipped, later commits serve
     val out = tmp("graft_mb_sem_out")
     val q = spark.readStream.format("graft-versioned")
@@ -147,7 +145,7 @@ class GraftMicroBatchSpec extends SparkSpec {
     val q3 = spark.readStream.format("graft-versioned").load(path)
       .writeStream.format("memory").queryName("mb_sem3")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft_mb_sem_ck3").toString)
+        scratch("graft_mb_sem_ck3").toString)
       .trigger(Trigger.AvailableNow()).start()
     val e = intercept[Exception] { q3.awaitTermination(120000) }
     def msgs(t: Throwable): Seq[String] =
@@ -164,7 +162,7 @@ class GraftMicroBatchSpec extends SparkSpec {
     val ts2 = VersionedTable.history(path)
       .find(_.version == 2).get.tsMillis.get
     def run(name: String, opts: Map[String, String]): Long = {
-      val ckpt = Files.createTempDirectory(s"graft_mbts_$name").toString
+      val ckpt = scratch(s"graft_mbts_$name").toString
       var r = spark.readStream.format("graft-versioned")
       opts.foreach { case (k, v) => r = r.option(k, v) }
       val q = r.load(path)

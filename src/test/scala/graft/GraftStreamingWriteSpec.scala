@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -35,7 +33,7 @@ class GraftStreamingWriteSpec extends SparkSpec {
     // sink table must exist (schema anchor), like Delta's toTable
     VersionedTable.init(
       Seq.empty[(Long, Long)].toDF("id", "v").repartition(1), dst)
-    val ckpt = Files.createTempDirectory("graft_sw_ck").toString
+    val ckpt = scratch("graft_sw_ck").toString
     val q = spark.readStream.format("graft-versioned")
       .option("maxVersionsPerTrigger", 2).load(src)
       .select(col("id"), (col("v") * 10).as("v"))
@@ -83,7 +81,7 @@ class GraftStreamingWriteSpec extends SparkSpec {
       Seq((i.toLong, i * 10L)).toDF("id", "v"), src))
     spark.sql("DROP TABLE IF EXISTS gswcat.sink")
     spark.sql("CREATE TABLE gswcat.sink (id BIGINT, v BIGINT)")
-    val ckpt = Files.createTempDirectory("graft_swto_ck").toString
+    val ckpt = scratch("graft_swto_ck").toString
     val q = spark.readStream.format("graft-versioned").load(src)
       .writeStream
       .option("checkpointLocation", ckpt)
@@ -138,7 +136,7 @@ class GraftStreamingWriteSpec extends SparkSpec {
       Seq((i.toLong % 2, i.toLong)).toDF("k", "n").repartition(1), src))
     VersionedTable.init(
       Seq.empty[(Long, Long)].toDF("k", "cnt").repartition(1), dst)
-    val ckpt = Files.createTempDirectory("graft_swcm_ck").toString
+    val ckpt = scratch("graft_swcm_ck").toString
     // complete-mode aggregation, paced into multiple epochs: the old
     // append behavior would land sum(epochs' group counts), not the
     // final counts
@@ -179,11 +177,11 @@ class GraftStreamingWriteSpec extends SparkSpec {
         .start(dst)
       q.awaitTermination(120000)
     }
-    run(Files.createTempDirectory("graft_swq_ck1").toString)
+    run(scratch("graft_swq_ck1").toString)
     assert(VersionedTable.read(spark, dst).count() == 2)
     // fresh checkpoint → NEW queryId, epochs restart at 0; under the
     // old epoch-keyed dedupe this run would silently no-op
-    run(Files.createTempDirectory("graft_swq_ck2").toString)
+    run(scratch("graft_swq_ck2").toString)
     assert(VersionedTable.read(spark, dst).count() == 4,
       "second query's epoch 0 was dropped as an already-applied replay")
     // and the txn registry holds two DISTINCT query ids for epoch 0
@@ -201,7 +199,7 @@ class GraftStreamingWriteSpec extends SparkSpec {
         .repartition(2), src)
     VersionedTable.init(
       Seq.empty[(Long, Long)].toDF("id", "b").repartition(1), dst)
-    val ckpt = Files.createTempDirectory("graft_swc_ck").toString
+    val ckpt = scratch("graft_swc_ck").toString
     val q = spark.readStream.format("graft-versioned").load(src)
       .writeStream.format("graft-versioned")
       .option("clusterBy", "b")

@@ -72,11 +72,11 @@ class Milestone81Spec extends SparkSpec {
     val sentinel = Seq(
       (-1L, EventStreams.FlushSentinelNanos, -1L, "__flush", 0.0, "{}"))
 
-    val streamDir = Files.createTempDirectory("graft_tws_reorder")
-    val ckpt = Files.createTempDirectory("graft_tws_reorder_ckpt")
+    val streamDir = scratch("graft_tws_reorder")
+    val ckpt = scratch("graft_tws_reorder_ckpt")
     def writeAs(rows: Seq[(Long, Long, Long, String, Double, String)],
                 name: String, mtimeS: Long): Unit = {
-      val stage = Files.createTempDirectory(s"graft_tws_stage_$name")
+      val stage = scratch(s"graft_tws_stage_$name")
       rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
         .coalesce(1).write.mode("overwrite").parquet(stage.toString)
       val part = Files.list(stage).iterator().asScala
@@ -145,11 +145,11 @@ class Milestone81Spec extends SparkSpec {
     val sentinel = Seq(
       (-1L, EventStreams.FlushSentinelNanos, -1L, "__flush", 0.0, "{}"))
 
-    val streamDir = Files.createTempDirectory("graft_tws_epoch")
-    val ckpt = Files.createTempDirectory("graft_tws_epoch_ckpt")
+    val streamDir = scratch("graft_tws_epoch")
+    val ckpt = scratch("graft_tws_epoch_ckpt")
     def writeAs(rows: Seq[(Long, Long, Long, String, Double, String)],
                 name: String, mtimeS: Long): Unit = {
-      val stage = Files.createTempDirectory(s"graft_tws_epoch_$name")
+      val stage = scratch(s"graft_tws_epoch_$name")
       rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
         .coalesce(1).write.mode("overwrite").parquet(stage.toString)
       val part = Files.list(stage).iterator().asScala

@@ -193,7 +193,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("bucketed tables join without a shuffle exchange") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh").toString
+    val wh = scratch("graft_wh").toString
     val s2 = spark.newSession()
     val o = Tables.load(s2, sf0001, "orders")
     val c = Tables.load(s2, sf0001, "customer")
@@ -341,7 +341,7 @@ class PlanSpec extends SparkSpec {
     "partitions") {
     // the 100 TB serving property: a probe batch's scan must plan only
     // its nProbe cells' hive directories, never the whole index
-    val idx = java.nio.file.Files.createTempDirectory("graft_planspec_idx")
+    val idx = scratch("graft_planspec_idx")
     try {
       val emb = Tables.load(spark, sf0001, "embeddings")
       graft.ext.SimilaritySearch.writeIvfPqIndex(emb, idx.toString)

@@ -19,7 +19,7 @@ class Round7EdgeSpec extends SparkSpec {
 
   test("twap: single-event users are excluded (no zero-span division), " +
     "two-event user defined") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_e_twap")
+    val dir = scratch("graft_e_twap")
     Seq(
       (1L, 1714558400000000000L, 1L, "e", 5.0, "{}"),
       (2L, 1714558400000000000L, 2L, "e", 3.0, "{}"),
@@ -33,7 +33,7 @@ class Round7EdgeSpec extends SparkSpec {
 
   test("neyman: a single stratum takes the whole budget even with " +
     "zero spread") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_e_ney")
+    val dir = scratch("graft_e_ney")
     // one source, all docs identical length -> sd 0, total weight 0:
     // the 0/0 seat share falls back to count-proportional allocation
     // (this spec CAUGHT the unguarded divide-by-zero under ANSI mode)
@@ -48,7 +48,7 @@ class Round7EdgeSpec extends SparkSpec {
 
   test("prefix containment: corpus of identical docs flags all but " +
     "the lexicographic last") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_e_prefix")
+    val dir = scratch("graft_e_prefix")
     writeDocs(dir, (0 until 5).map(i =>
       (i.toLong, "same text", "en", "s", 1L)))
     val out = SparkEntry.queries("q168_prefix_containment")(spark, dir.toString)
@@ -59,7 +59,7 @@ class Round7EdgeSpec extends SparkSpec {
 
   test("pareto frontier: all docs identical collapses to the full set " +
     "(nothing dominates anything)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_e_pareto")
+    val dir = scratch("graft_e_pareto")
     writeDocs(dir, (0 until 3).map(i =>
       (i.toLong, "alpha beta gamma", "en", "s", 1L)))
     val got = SparkEntry.queries("q183_pareto_frontier")(spark, dir.toString)
@@ -69,7 +69,7 @@ class Round7EdgeSpec extends SparkSpec {
 
   test("k-anonymity: k larger than every group suppresses everything " +
     "at level 0 and the ladder recovers at full generalization") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_e_kanon")
+    val dir = scratch("graft_e_kanon")
     writeDocs(dir, Seq(
       (0L, "t", "en", "s1", 1L), (1L, "t", "fr", "s2", 1L),
       (2L, "t", "de", "s3", 1L), (3L, "t", "es", "s4", 1L),
@@ -82,7 +82,7 @@ class Round7EdgeSpec extends SparkSpec {
   }
 
   test("rate limit: a single event per user is always admitted") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_e_rate")
+    val dir = scratch("graft_e_rate")
     (1 to 5).map(i =>
       (i.toLong, 1714558400000000000L + i * 1000000000L, i.toLong,
         "e", 0.0, "{}"))

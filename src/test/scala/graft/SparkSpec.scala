@@ -1,23 +1,31 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session per suite (spark_guide.md: one lazy session, not per
-  * test). Mirrors the Verify/Bench config including the nanos legacy flag
-  * the events fixture needs.
+  * test), built by the engine's one factory. Always `local[4]`, so the
+  * suites' plans and partition counts do not change with the host's
+  * core count.
   */
-trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .withExtensions(new GraftExtensions)
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
+  lazy val spark: SparkSession = Engine.session(4, getClass.getSimpleName)
 
   val sf0001 = "/root/testdata/sf0.001"
+
+  private lazy val scratchRoot: Path =
+    Files.createTempDirectory(s"graft_${getClass.getSimpleName}_")
+
+  /** A new temp dir under this suite's own root; the whole root is
+    * deleted once the suite has run, whether its tests passed or not.
+    */
+  def scratch(prefix: String): Path =
+    Files.createTempDirectory(scratchRoot, prefix)
+
+  override protected def afterAll(): Unit =
+    try graft.io.FsUtil.deleteRecursively(scratchRoot)
+    finally super.afterAll()
 }

@@ -51,6 +51,23 @@ class SqlSurfaceSpec extends SparkSpec {
     assert(r.getString(0) == "caf\u00e9" && r.getInt(1) == 1)
   }
 
+  test("Engine.session sets the engine's confs and leaves AQE at Spark's defaults") {
+    val sc = spark.sparkContext
+    assert(sc.master == "local[4]" && sc.defaultParallelism == 4)
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(sc.getConf.get("spark.ui.enabled") == "false" && sc.uiWebUrl.isEmpty)
+    assert(spark.conf.get(
+      "spark.sql.streaming.stateStore.maintenanceInterval") == "1h")
+    // not set by the factory: these are Spark's own defaults
+    Seq("spark.sql.adaptive.enabled",
+      "spark.sql.adaptive.coalescePartitions.enabled",
+      "spark.sql.adaptive.skewJoin.enabled").foreach { k =>
+      assert(spark.conf.get(k) == "true", k)
+    }
+  }
+
   test("registered views answer plain SQL (wordcount in one statement)") {
     Engine.registerFunctions(spark)
     Engine.registerViews(spark, sf0001)

@@ -18,7 +18,7 @@ class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val eventsDir: String = {
-    val dir = Files.createTempDirectory("graft_events")
+    val dir = scratch("graft_events")
     Files.copy(
       Paths.get(s"$sf0001/events.parquet"),
       dir.resolve("events.parquet"),
@@ -98,8 +98,8 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     def nanos(s: String): Long =
       java.time.LocalDateTime.parse(s).toEpochSecond(java.time.ZoneOffset.UTC) * 1000000000L
-    val dir = Files.createTempDirectory("graft_late_sess")
-    val staging = Files.createTempDirectory("graft_late_stage")
+    val dir = scratch("graft_late_sess")
+    val staging = scratch("graft_late_stage")
     def writeBatch(name: String, rows: Seq[(Long, Long, Long, String, Double, String)]): Unit = {
       val stage = staging.resolve(name)
       rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -144,8 +144,8 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     def nanos(s: String): Long =
       java.time.LocalDateTime.parse(s).toEpochSecond(java.time.ZoneOffset.UTC) * 1000000000L
-    val dir = Files.createTempDirectory("graft_tomb_sess")
-    val staging = Files.createTempDirectory("graft_tomb_stage")
+    val dir = scratch("graft_tomb_sess")
+    val staging = scratch("graft_tomb_stage")
     def writeBatch(name: String, rows: Seq[(Long, Long, Long, String, Double, String)]): Unit = {
       val stage = staging.resolve(name)
       rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -189,10 +189,10 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     def nanos(s: String): Long =
       java.time.LocalDateTime.parse(s).toEpochSecond(java.time.ZoneOffset.UTC) * 1000000000L
-    val dir = Files.createTempDirectory("graft_rec_src")
-    val staging = Files.createTempDirectory("graft_rec_stage")
-    val ckpt = Files.createTempDirectory("graft_rec_ckpt")
-    val out = Files.createTempDirectory("graft_rec_out")
+    val dir = scratch("graft_rec_src")
+    val staging = scratch("graft_rec_stage")
+    val ckpt = scratch("graft_rec_ckpt")
+    val out = scratch("graft_rec_out")
     def writeBatch(name: String, rows: Seq[(Long, Long, Long, String, Double, String)]): Unit = {
       val stage = staging.resolve(name)
       rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -254,7 +254,7 @@ class StreamingSpec extends SparkSpec {
     val sentinel = Seq(
       (-1L, EventStreams.FlushSentinelNanos, -1L, "__flush", 0.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val staging = Files.createTempDirectory("graft_rr_stage")
+    val staging = scratch("graft_rr_stage")
     def stageDf(name: String,
                 df: org.apache.spark.sql.DataFrame): java.nio.file.Path = {
       val p = staging.resolve(name)
@@ -297,17 +297,17 @@ class StreamingSpec extends SparkSpec {
     val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
-      val srcSplit = Files.createTempDirectory("graft_rr_split")
-      val ckptSplit = Files.createTempDirectory("graft_rr_ckpt1")
-      val outSplit = Files.createTempDirectory("graft_rr_out1")
+      val srcSplit = scratch("graft_rr_split")
+      val ckptSplit = scratch("graft_rr_ckpt1")
+      val outSplit = scratch("graft_rr_out1")
       copyIn(srcSplit, h1, "a")
       run(srcSplit, ckptSplit, outSplit) // the "kill": stop mid-stream
       val n1 = spark.read.parquet(outSplit.toString).count()
       copyIn(srcSplit, h2, "b"); copyIn(srcSplit, sn, "c")
       run(srcSplit, ckptSplit, outSplit) // resume from the checkpoint
-      val srcAll = Files.createTempDirectory("graft_rr_all")
-      val ckptAll = Files.createTempDirectory("graft_rr_ckpt2")
-      val outAll = Files.createTempDirectory("graft_rr_out2")
+      val srcAll = scratch("graft_rr_all")
+      val ckptAll = scratch("graft_rr_ckpt2")
+      val outAll = scratch("graft_rr_out2")
       copyIn(srcAll, h1, "a"); copyIn(srcAll, h2, "b"); copyIn(srcAll, sn, "c")
       run(srcAll, ckptAll, outAll)
       def decisions(out: java.nio.file.Path): Seq[(Long, Long, Boolean)] =
@@ -349,7 +349,7 @@ class StreamingSpec extends SparkSpec {
     val sentinel = Seq(
       (-1L, EventStreams.FlushSentinelNanos, -1L, "__flush", 0.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val staging = Files.createTempDirectory("graft_sr_stage")
+    val staging = scratch("graft_sr_stage")
     def stageDf(name: String,
                 df: org.apache.spark.sql.DataFrame): java.nio.file.Path = {
       val p = staging.resolve(name)
@@ -391,17 +391,17 @@ class StreamingSpec extends SparkSpec {
     val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
-      val srcSplit = Files.createTempDirectory("graft_sr_split")
-      val ckptSplit = Files.createTempDirectory("graft_sr_ckpt1")
-      val outSplit = Files.createTempDirectory("graft_sr_out1")
+      val srcSplit = scratch("graft_sr_split")
+      val ckptSplit = scratch("graft_sr_ckpt1")
+      val outSplit = scratch("graft_sr_out1")
       copyIn(srcSplit, h1, "a")
       run(srcSplit, ckptSplit, outSplit) // the "kill": stop mid-stream
       val n1 = spark.read.parquet(outSplit.toString).count()
       copyIn(srcSplit, h2, "b"); copyIn(srcSplit, sn, "c")
       run(srcSplit, ckptSplit, outSplit) // resume from the checkpoint
-      val srcAll = Files.createTempDirectory("graft_sr_all")
-      val ckptAll = Files.createTempDirectory("graft_sr_ckpt2")
-      val outAll = Files.createTempDirectory("graft_sr_out2")
+      val srcAll = scratch("graft_sr_all")
+      val ckptAll = scratch("graft_sr_ckpt2")
+      val outAll = scratch("graft_sr_out2")
       copyIn(srcAll, h1, "a"); copyIn(srcAll, h2, "b")
       copyIn(srcAll, sn, "c")
       run(srcAll, ckptAll, outAll)
@@ -436,8 +436,8 @@ class StreamingSpec extends SparkSpec {
     def nanos(epochS: Long): Long = epochS * 1000000000L
     val base = java.time.LocalDateTime.parse("2024-05-01T10:00:00")
       .toEpochSecond(java.time.ZoneOffset.UTC)
-    val dir = Files.createTempDirectory("graft_rate_sess")
-    val staging = Files.createTempDirectory("graft_rate_stage")
+    val dir = scratch("graft_rate_sess")
+    val staging = scratch("graft_rate_stage")
     def writeBatch(name: String, rows: Seq[(Long, Long, Long, String, Double, String)]): Unit = {
       val stage = staging.resolve(name)
       rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -484,8 +484,8 @@ class StreamingSpec extends SparkSpec {
     def nanos(epochS: Long): Long = epochS * 1000000000L
     val base = java.time.LocalDateTime.parse("2024-06-01T12:00:00")
       .toEpochSecond(java.time.ZoneOffset.UTC)
-    val dir = Files.createTempDirectory("graft_late_micro")
-    val staging = Files.createTempDirectory("graft_late_stage")
+    val dir = scratch("graft_late_micro")
+    val staging = scratch("graft_late_stage")
     // arr = ts + (id % 4)*30s. id=4 -> arr base+230; id=3 (lag 90s) ->
     // arr base+240 but ts base+150 — 80s behind the id=4 event that
     // arrived first -> DROP; id=0 -> arr/ts base+300 -> admit
@@ -520,55 +520,47 @@ class StreamingSpec extends SparkSpec {
     val rows = Seq(
       (-1L, EventStreams.FlushSentinelNanos, -1L, "__flush", 0.0, "{}"),
       (-2L, EventStreams.FlushSentinelNanos, -2L, "purchase", 0.5, "{}"))
-    val sparkDir = Files.createTempDirectory("graft_sent_spark")
-    val directDir = Files.createTempDirectory("graft_sent_direct")
-    try {
-      rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.mode("overwrite").parquet(sparkDir.toString)
-      graft.streaming.SentinelFiles.writeEvents(directDir, rows)
-      def readBack(d: java.nio.file.Path) =
-        spark.read.schema(EventStreams.rawSchema).parquet(d.toString)
-          .orderBy("event_id").collect().toSeq
-      assert(readBack(directDir) == readBack(sparkDir))
-      // and through the STREAMING reader (unit guard: the 2100 sentinel
-      // must surface as the 2100 instant, not 1970)
-      val ckpt = Files.createTempDirectory("graft_sent_ckpt")
-      val name = "graft_sentinel_files_spec"
-      val q = EventStreams.readStream(spark, directDir.toString,
-          globFilter = Some("*.parquet"))
-        .writeStream.format("memory").queryName(name).outputMode("append")
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-      val yrs = spark.table(name).select(year(col("ts"))).collect()
-        .map(_.getInt(0)).toSeq
-      assert(yrs == Seq(2100, 2100), s"sentinel ts years: $yrs")
-      graft.io.FsUtil.deleteRecursively(ckpt)
-    } finally {
-      graft.io.FsUtil.deleteRecursively(sparkDir)
-      graft.io.FsUtil.deleteRecursively(directDir)
-    }
+    val sparkDir = scratch("graft_sent_spark")
+    val directDir = scratch("graft_sent_direct")
+    rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .coalesce(1).write.mode("overwrite").parquet(sparkDir.toString)
+    graft.streaming.SentinelFiles.writeEvents(directDir, rows)
+    def readBack(d: java.nio.file.Path) =
+      spark.read.schema(EventStreams.rawSchema).parquet(d.toString)
+        .orderBy("event_id").collect().toSeq
+    assert(readBack(directDir) == readBack(sparkDir))
+    // and through the STREAMING reader (unit guard: the 2100 sentinel
+    // must surface as the 2100 instant, not 1970)
+    val ckpt = scratch("graft_sent_ckpt")
+    val name = "graft_sentinel_files_spec"
+    val q = EventStreams.readStream(spark, directDir.toString,
+        globFilter = Some("*.parquet"))
+      .writeStream.format("memory").queryName(name).outputMode("append")
+      .option("checkpointLocation", ckpt.toString)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    try q.awaitTermination() finally q.stop()
+    val yrs = spark.table(name).select(year(col("ts"))).collect()
+      .map(_.getInt(0)).toSeq
+    assert(yrs == Seq(2100, 2100), s"sentinel ts years: $yrs")
   }
   test("SentinelFiles.writeEvents refuses a dir holding other *.parquet " +
     "files and leaves them in place") {
     // the gates read their sentinel dir with a *.parquet glob, so a stray
     // parquet file there would be read as (more) sentinel rows
-    val dir = Files.createTempDirectory("graft_sent_stray")
-    try {
-      val row = Seq(
-        (-1L, EventStreams.FlushSentinelNanos, -1L, "__flush", 0.0, "{}"))
-      graft.streaming.SentinelFiles.writeEvents(dir, row)
-      // rewriting its own sentinel.parquet stays allowed
-      graft.streaming.SentinelFiles.writeEvents(dir, row)
-      val stray = dir.resolve("part-00000.parquet")
-      Files.copy(dir.resolve("sentinel.parquet"), stray)
-      val bytes = Files.readAllBytes(stray).toSeq
-      val e = intercept[IllegalStateException](
-        graft.streaming.SentinelFiles.writeFlushSentinel(dir))
-      assert(e.getMessage.contains("part-00000.parquet"), e.getMessage)
-      assert(Files.readAllBytes(stray).toSeq == bytes)
-      assert(Files.exists(dir.resolve("sentinel.parquet")))
-    } finally graft.io.FsUtil.deleteRecursively(dir)
+    val dir = scratch("graft_sent_stray")
+    val row = Seq(
+      (-1L, EventStreams.FlushSentinelNanos, -1L, "__flush", 0.0, "{}"))
+    graft.streaming.SentinelFiles.writeEvents(dir, row)
+    // rewriting its own sentinel.parquet stays allowed
+    graft.streaming.SentinelFiles.writeEvents(dir, row)
+    val stray = dir.resolve("part-00000.parquet")
+    Files.copy(dir.resolve("sentinel.parquet"), stray)
+    val bytes = Files.readAllBytes(stray).toSeq
+    val e = intercept[IllegalStateException](
+      graft.streaming.SentinelFiles.writeFlushSentinel(dir))
+    assert(e.getMessage.contains("part-00000.parquet"), e.getMessage)
+    assert(Files.readAllBytes(stray).toSeq == bytes)
+    assert(Files.exists(dir.resolve("sentinel.parquet")))
   }
 }
