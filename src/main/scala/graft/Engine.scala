@@ -46,19 +46,6 @@ object Engine {
     spark
   }
 
-  /** Expose the engine's custom Catalyst expressions to SQL on an
-    * already-built session (`GraftExtensions` installs the same table,
-    * `GraftExtensions.functions`, into new ones):
-    * `SELECT cosine_sim(a.embedding, b.embedding) FROM ...` etc. — the
-    * same codegen'd expressions the Column API uses, so SQL users pay no
-    * UDF penalty.
-    */
-  def registerFunctions(spark: SparkSession): Unit =
-    GraftExtensions.functions.foreach { case (name, _, builder) =>
-      org.apache.spark.sql.graftbridge.Bridge
-        .registerFunction(spark, name, builder)
-    }
-
   /** Register every fixture table as a temp view so plain
     * `spark.sql("SELECT ... FROM lineitem")` works — the engine's SQL
     * entry point over a scale-factor directory.

@@ -43,11 +43,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
 
-  /** The engine's SQL function table, `(name, usage, builder)`: the one
-    * list both install paths read — [[GraftExtensions]] injects it into
-    * new sessions and `Engine.registerFunctions` registers it as temp
-    * functions on an already-built one. Builders take literal arguments
-    * where the usage says so.
+  /** The engine's SQL function table, `(name, usage, builder)`, which
+    * [[GraftExtensions]] injects into every session. Builders take
+    * literal arguments where the usage says so.
     */
   val functions: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
     ("poly_hash", "poly_hash(str) - oracle-replayable rolling hash",

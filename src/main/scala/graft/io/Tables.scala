@@ -1,14 +1,8 @@
 package graft.io
 
-import java.io.FileNotFoundException
-
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.expr
-import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.sql.types.LongType
 
 /** Loaders for the driver-generated parquet fixtures (TESTDATA.md).
   *
@@ -74,43 +68,18 @@ object Tables {
     * launches no Spark job: a bare `spark.read.parquet` runs a
     * schema-inference job per call, which costs more than the rest of
     * the load (BENCH_NOTES.md).
-    * The schema comes from one footer via [[footerSchema]], so it is
-    * exactly what inference would give, including for the tables tests
-    * write with their own column sets.
+    * The schema comes from the footer of [[Footers.firstDataFile]], the
+    * file Spark's non-merging inference reads, so it is exactly what
+    * inference would give, including for the tables tests write with
+    * their own column sets.
     */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    val df = spark.read.schema(footerSchema(spark, path)).parquet(path)
+    val schema = Footers.schema(spark, Seq(Footers.firstDataFile(spark, path)))
+    val df = spark.read.schema(schema).parquet(path)
     if (name == "events" && df.schema("ts").dataType == LongType)
       df.withColumn("ts", expr(epochLongToTsSql("ts")).cast("timestamp_ntz"))
     else df
-  }
-
-  /** The schema Spark's non-merging parquet inference gives for `path`,
-    * read on the driver: the footer of the file itself or, for a
-    * directory, of its first data file by name (`_*` and `.*` entries
-    * skipped, as Spark's file index skips them), converted the way the
-    * inference job converts it (Spark's own row schema when the writer
-    * stored one, the session's `nanosAsLong` and other parquet confs).
-    * Throws FileNotFoundException naming `path` when there is no data
-    * file.
-    */
-  private def footerSchema(spark: SparkSession, path: String): StructType = {
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    val file =
-      (if (!fs.exists(root)) None
-       else fs.listStatus(root).filter { s =>
-         val n = s.getPath.getName
-         s.isFile && !n.startsWith("_") && !n.startsWith(".")
-       }.sortBy(_.getPath.getName).headOption)
-        .getOrElse(throw new FileNotFoundException(
-          s"no parquet data file at $path"))
-    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
-    val meta = try reader.getFooter finally reader.close()
-    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, meta),
-      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 
   /** High-cardinality key columns per fixture, the HASH repartition key

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.io.TableFs
+import graft.io.{Footers, TableFs}
 
 /** Snapshot-versioned table storage (poor-man's Delta/Iceberg): data
   * lives in immutable per-commit directories, and each version is a
@@ -932,9 +932,19 @@ object VersionedTable {
     else java.net.URLDecoder.decode(
       s.replace("+", "%2B"), java.nio.charset.StandardCharsets.UTF_8)
 
+  /** Manifest-relative `rels` read with their footer schema
+    * ([[graft.io.Footers]]): the schema a `mergeSchema` read infers,
+    * without its inference job.
+    */
+  private[graft] def readRels(spark: SparkSession, path: String,
+                              rels: Seq[String]): DataFrame = {
+    val files = rels.map(r => absPath(path, r))
+    spark.read.schema(Footers.schema(spark, files)).parquet(files: _*)
+  }
+
   private def readDv(spark: SparkSession, path: String,
                      dvs: Seq[String]): DataFrame =
-    spark.read.parquet(dvs.map(r => absPath(path, r)): _*)
+    readRels(spark, path, dvs)
       .select(col("file").as("__rel"), col("pos").as("__pos"))
 
   /** Read `files` with `dvs` applied, KEEPING a `__file` tag column
@@ -949,8 +959,7 @@ object VersionedTable {
   private def readFilesTagged(spark: SparkSession, path: String,
                               files: Seq[String],
                               dvs: Seq[String]): DataFrame = {
-    val data = spark.read.option("mergeSchema", "true")
-      .parquet(files.map(r => absPath(path, r)): _*)
+    val data = readRels(spark, path, files)
       .withColumn("__file", input_file_name())
     if (dvs.isEmpty) data
     else {
@@ -968,27 +977,28 @@ object VersionedTable {
     */
   private def readFiles(spark: SparkSession, path: String,
                         files: Seq[String], dvs: Seq[String]): DataFrame = {
-    val data = spark.read.option("mergeSchema", "true")
-      .parquet(files.map(r => absPath(path, r)): _*)
+    val data = readRels(spark, path, files)
     if (dvs.isEmpty) data
     else readFilesTagged(spark, path, files, dvs).drop("__file")
   }
 
   /** Snapshot read of any historical version, deletion vectors
-    * applied. `mergeSchema` makes the read SCHEMA-EVOLUTION-aware: a
-    * version whose manifest mixes pre-evolution and post-evolution
-    * files (an `append` introduced a column) surfaces the union schema
-    * with legacy rows null-filled, while older versions — whose
-    * manifests reference only pre-evolution files — keep their
-    * original schema. Footer-merge cost is bounded by the manifest's
-    * file count.
+    * applied. The read is SCHEMA-EVOLUTION-aware: its schema is the
+    * merge of the listed files' footers in manifest order (the fold a
+    * `mergeSchema` read runs, [[graft.io.Footers]]), so a version whose
+    * manifest mixes pre-evolution and post-evolution files (an `append`
+    * introduced a column) surfaces the union schema with legacy rows
+    * null-filled, while older versions — whose manifests reference only
+    * pre-evolution files — keep their original schema. The footers are
+    * read on the driver, one after another, and building the frame
+    * launches no Spark job; the cost is O(files in the manifest).
     */
   def readVersion(spark: SparkSession, path: String, v: Int): DataFrame = {
     val m = readManifest(path, v)
     val base = readFiles(spark, path, m.data, m.dvs)
     // ALTER-added columns not yet materialized in any file surface
     // null-filled (files written after the ALTER carry them for real,
-    // at which point mergeSchema already includes them)
+    // at which point the footer merge already includes them)
     val withXc = m.extraCols.foldLeft(base) { case (df, (n, dt)) =>
       if (df.columns.contains(n)) df
       else df.withColumn(n, lit(null).cast(dt))
@@ -1217,9 +1227,8 @@ object VersionedTable {
                               m: Manifest): Seq[(String, String)] =
     if (m.colMap.nonEmpty) m.colMap
     else {
-      val fromFiles = spark.read.option("mergeSchema", "true")
-        .parquet(m.data.map(r => absPath(path, r)): _*)
-        .schema.fieldNames.toSeq
+      val fromFiles = Footers.schema(spark,
+        m.data.map(r => absPath(path, r))).fieldNames.toSeq
       (fromFiles ++ m.extraCols.map(_._1).filterNot(fromFiles.contains))
         .map(n => n -> n)
     }
@@ -1466,8 +1475,8 @@ object VersionedTable {
     // staged parquet to validate again would double the constraint
     // scan per commit (r12 ADVICE)
     if (!preValidated && constraints(path).nonEmpty && staged.nonEmpty) {
-      val raw = org.apache.spark.sql.SparkSession.active.read
-        .parquet(staged.map(r => absPath(path, r)): _*)
+      val raw = readRels(org.apache.spark.sql.SparkSession.active,
+        path, staged)
       validateConstraints(path,
         if (!mappingNontrivial(cm0)) raw
         else raw.select(cm0.collect {
@@ -1533,8 +1542,8 @@ object VersionedTable {
       if (v0 >= 0) readManifest(path, v0).colMap else Nil
     }
     if (constraints(path).nonEmpty && staged.nonEmpty) {
-      val raw = org.apache.spark.sql.SparkSession.active.read
-        .parquet(staged.map(r => absPath(path, r)): _*)
+      val raw = readRels(org.apache.spark.sql.SparkSession.active,
+        path, staged)
       validateConstraints(path,
         if (!mappingNontrivial(cm0)) raw
         else raw.select(cm0.collect {
@@ -1707,8 +1716,7 @@ object VersionedTable {
   def readCdc(spark: SparkSession, path: String, v: Int): DataFrame = {
     val cdc = commitActions(path, v).cdcFiles
     require(cdc.nonEmpty, s"version $v at $path carries no CDC sidecar")
-    spark.read.option("mergeSchema", "true")
-      .parquet(cdc.map(r => absPath(path, r)): _*)
+    readRels(spark, path, cdc)
   }
 
   private def writeCdcData(df: DataFrame, path: String): Seq[String] = {
@@ -1717,21 +1725,42 @@ object VersionedTable {
     listStagedFiles(path, sub)
   }
 
-  /** NET multiset diff for a CDC sidecar: rows identical pre/post
-    * (no-op updates) cancel, so the write-time sidecar records the
-    * SAME change set batch `tableChanges` derives by exceptAll — the
-    * stream==batch CDF invariant (r13 ADVICE: merge/applyCdc recorded
-    * every matched old row as 'removed' and every update row as
-    * 'added', disagreeing with batch CDF on no-op updates). When the
-    * two sides carry DIFFERENT column sets (schema evolution through
-    * MERGE), no row can be identical anyway — pass both through.
+  /** NET multiset diff from `removed` to `added`, each row tagged in
+    * `tagCol` as 'removed' or 'added': rows identical on both sides
+    * (no-op updates, survivors of a group rewrite) cancel by
+    * multiplicity. The CDC sidecars of [[merge]], [[applyCdc]] and
+    * [[commitReplace]] and batch [[diffVersions]] all come from here, so
+    * a write-time sidecar records the SAME change set batch
+    * `tableChanges` derives — the stream==batch CDF invariant.
+    *
+    * One aggregate, the multiset-with-counts form (V-SMART-Join, VLDB
+    * 2012): removed rows count +1 and added rows -1, grouped by every
+    * column; a group whose sum n is not 0 comes out |n| times, 'removed'
+    * when n > 0 and 'added' when n < 0. That is `removed.exceptAll(added)`
+    * plus `added.exceptAll(removed)` — Spark rewrites each exceptAll
+    * into the same +1/-1 aggregate, grouping keys normalized (NaN = NaN,
+    * -0.0 = 0.0) — in one scan of each side instead of two. Output
+    * columns follow `removed`. When the two sides carry DIFFERENT
+    * column sets (schema evolution through MERGE) no row can be
+    * identical, so both pass through tagged.
     */
-  private def cdcNetDiff(removed: DataFrame, added: DataFrame)
-      : (DataFrame, DataFrame) =
-    if (removed.columns.sorted.sameElements(added.columns.sorted)) {
-      val a = added.select(removed.columns.map(col).toSeq: _*)
-      (removed.exceptAll(a), a.exceptAll(removed))
-    } else (removed, added)
+  private def netDiff(removed: DataFrame, added: DataFrame,
+                      tagCol: String = "_change"): DataFrame = {
+    val cols = removed.columns.toSeq
+    if (!cols.sorted.sameElements(added.columns.sorted))
+      removed.withColumn(tagCol, lit("removed"))
+        .unionByName(added.withColumn(tagCol, lit("added")),
+          allowMissingColumns = true)
+    else
+      removed.withColumn("__net", lit(1L))
+        .unionAll(added.select(cols.map(col): _*)
+          .withColumn("__net", lit(-1L)))
+        .groupBy(cols.map(col): _*).agg(sum("__net").as("__net"))
+        .where(col("__net") =!= 0)
+        .select(cols.map(col) :+ explode(array_repeat(
+          when(col("__net") > 0, lit("removed")).otherwise(lit("added")),
+          abs(col("__net")).cast("int"))).as(tagCol): _*)
+  }
 
   // ---------------------------------------------------------------- //
   // deletes
@@ -1807,8 +1836,7 @@ object VersionedTable {
     val sub = f"d${v + 1}%05d"
     // live rows matching pred → (rel, pos) tombstones; rows already
     // dead under an existing vector are excluded (readFiles applies it)
-    val data = spark.read.option("mergeSchema", "true")
-      .parquet(m.data.map(r => absPath(path, r)): _*)
+    val data = readRels(spark, path, m.data)
       .withColumn("__rel", relExpr)
       .withColumn("__pos", col("_metadata.row_index"))
     val live =
@@ -1860,8 +1888,8 @@ object VersionedTable {
       s"row-level rewrite at $path names files not in v$v: $unknown")
     val carried = m.data.filterNot(replacedSet.contains)
     // CDF sidecar for the SQL group-CoW path: the exact multiset diff
-    // of replaced-group rows vs their replacements (exceptAll both
-    // ways — survivors cancel), computed ONCE at write time so the
+    // of replaced-group rows vs their replacements ([[netDiff]] —
+    // survivors cancel), computed ONCE at write time so the
     // streaming feed serves this commit as a leaf scan. Only when the
     // table opted in (the Delta CDF tax).
     val cdcFiles =
@@ -1874,16 +1902,12 @@ object VersionedTable {
           else Some(readFiles(spark, path, replaced, m.dvs))
         val newRows =
           if (staged.isEmpty) None
-          else Some(spark.read.option("mergeSchema", "true")
-            .parquet(staged.map(r => absPath(path, r)): _*))
+          else Some(readRels(spark, path, staged))
         val diff = (oldRows, newRows) match {
           case (Some(o), Some(n)) =>
             require(o.columns.toSet == n.columns.toSet,
               s"CDC diff at $path: replaced/staged schemas diverge")
-            val oAligned = o.select(n.columns.map(col): _*)
-            oAligned.exceptAll(n).withColumn("_change", lit("removed"))
-              .unionByName(
-                n.exceptAll(oAligned).withColumn("_change", lit("added")))
+            netDiff(o.select(n.columns.map(col): _*), n)
           case (Some(o), None) => o.withColumn("_change", lit("removed"))
           case (None, Some(n)) => n.withColumn("_change", lit("added"))
           case _ => null
@@ -1961,7 +1985,7 @@ object VersionedTable {
     * update rows with unseen keys append. Copy-on-write at FILE
     * granularity, like [[deleteWhere]]: the affected-file probe
     * left-semi-joins the current snapshot against the (broadcast)
-    * distinct update keys, so only files CONTAINING a matched key are
+    * update keys, so only files CONTAINING a matched key are
     * rewritten — a 100 TB table absorbing a point-update batch rewrites
     * the touched files, not the table, and every prior snapshot stays
     * pinned. `input_file_name` is captured at the scan projection
@@ -1974,7 +1998,9 @@ object VersionedTable {
     require(v >= 0, s"no table at $path — call init first")
     validateConstraints(path, updates)
     val m = readManifest(path, v)
-    val keys = broadcast(updates.select(keyCols.map(col): _*).distinct())
+    // raw keys: they feed only semi/anti joins, where duplicates change
+    // nothing — a distinct() would add a shuffle job to each plan
+    val keys = broadcast(updates.select(keyCols.map(col): _*))
     val scan = logicalView(
       readFilesTagged(spark, path, m.data, m.dvs), m, Seq("__file"))
     val affectedUris = scan.join(keys, keyCols, "left_semi")
@@ -1998,11 +2024,7 @@ object VersionedTable {
           if (affected.isEmpty) updates.limit(0)
           else logicalView(readFiles(spark, path, affected, m.dvs), m)
             .join(keys, keyCols, "left_semi")
-        val (netRemoved, netAdded) = cdcNetDiff(removed, updates)
-        writeCdcData(
-          netRemoved.withColumn("_change", lit("removed"))
-            .unionByName(netAdded.withColumn("_change", lit("added")),
-              allowMissingColumns = true), path)
+        writeCdcData(netDiff(removed, updates), path)
       }
     // allowMissingColumns: an update batch may CARRY a new column
     // (schema evolution through MERGE) or lack a recently-added one —
@@ -2063,7 +2085,7 @@ object VersionedTable {
     require(v >= 0, s"no table at $path — call init first")
     validateConstraints(path, batch.where(col(opCol) === 1).drop(opCol))
     val m = readManifest(path, v)
-    val keys = broadcast(batch.select(keyCols.map(col): _*).distinct())
+    val keys = broadcast(batch.select(keyCols.map(col): _*))
     val scan = logicalView(
       readFilesTagged(spark, path, m.data, m.dvs), m, Seq("__file"))
     val affectedUris = scan.join(keys, keyCols, "left_semi")
@@ -2088,11 +2110,7 @@ object VersionedTable {
           if (affected.isEmpty) upserts.limit(0)
           else logicalView(readFiles(spark, path, affected, m.dvs), m)
             .join(keys, keyCols, "left_semi")
-        val (netRemoved, netAdded) = cdcNetDiff(removed, upserts)
-        writeCdcData(
-          netRemoved.withColumn("_change", lit("removed"))
-            .unionByName(netAdded.withColumn("_change", lit("added")),
-              allowMissingColumns = true), path)
+        writeCdcData(netDiff(removed, upserts), path)
       }
     val rewritten = writeCommitDataUnique(
       survivors.unionByName(upserts, allowMissingColumns = true),
@@ -2164,8 +2182,7 @@ object VersionedTable {
         .repartitionByRange(targetFiles, col(zoneCol))
         .sortWithinPartitions(zoneCol),
       path, v + 1)
-    val statRows = spark.read
-      .parquet(files.map(r => absPath(path, r)): _*)
+    val statRows = readRels(spark, path, files)
       .select(relExpr.as("rel"), col(zoneCol).cast("double").as("z"))
       .groupBy("rel")
       .agg(min("z").as("zmin"), max("z").as("zmax"))
@@ -2217,8 +2234,7 @@ object VersionedTable {
     val files = writeCommitData(
       df.repartitionByRange(targetFiles, z).sortWithinPartitions(z),
       path, v + 1)
-    val statRows = spark.read
-      .parquet(files.map(r => absPath(path, r)): _*)
+    val statRows = readRels(spark, path, files)
       .select(relExpr.as("rel"),
         col(colX).cast("double").as("zx"), col(colY).cast("double").as("zy"))
       .groupBy("rel")
@@ -2267,10 +2283,9 @@ object VersionedTable {
     val filesAndValues = writeCommitDataPartitioned(
       snap, path, v + 1, partCol)
     val files = filesAndValues.map(_._1)
-    val isNumeric = org.apache.spark.sql.SparkSession.active
-      .read.option("mergeSchema", "true")
-      .parquet(files.take(1).map(r => absPath(path, r)): _*)
-      .schema.fields.find(_.name == partCol)
+    val isNumeric = Footers.schema(spark,
+        files.take(1).map(r => absPath(path, r)))
+      .fields.find(_.name == partCol)
       .exists(f2 => f2.dataType.isInstanceOf[
         org.apache.spark.sql.types.NumericType])
     val stats =
@@ -2499,8 +2514,7 @@ object VersionedTable {
     // PHYSICAL (bf sidecars describe file contents, like zs lines)
     val physKey = toPhysicalName(m.colMap, keyCol)
     val sub = f"f${v + 1}%05d"
-    spark.read.option("mergeSchema", "true")
-      .parquet(m.data.map(r => absPath(path, r)): _*)
+    readRels(spark, path, m.data)
       .select(relExpr.as("file"),
         explode(array(bloomPositions(col(physKey), bits, hashes): _*))
           .as("p"))
@@ -2535,8 +2549,7 @@ object VersionedTable {
     else {
       val bits = refs.head.bits
       val hashes = refs.head.hashes
-      val sidecar = spark.read
-        .parquet(refs.map(r => absPath(path, r.rel)): _*)
+      val sidecar = readRels(spark, path, refs.map(_.rel))
       val probe = bloomPositions(key, bits, hashes)
       def collectFiles(df: DataFrame): Seq[String] = {
         val rows = df.select("file").distinct()
@@ -2581,7 +2594,7 @@ object VersionedTable {
     * bulk never enters the scan. That makes "what changed between the
     * 2024-03 and 2024-04 corpus snapshots" cost proportional to the
     * CHANGED files, not the table — on a 100 TB snapshot pair where one
-    * commit touched 0.1% of files, the diff reads 0.1%. `exceptAll`
+    * commit touched 0.1% of files, the diff reads 0.1%. [[netDiff]]
     * keeps multiset semantics (duplicate rows diff by multiplicity).
     *
     * Deletion vectors: a DV-only commit changes rows WITHOUT changing
@@ -2639,7 +2652,7 @@ object VersionedTable {
     val bo0 = rd(mB)
     // schema-evolution alignment: a diff straddling an evolving commit
     // can leave one side without a later column — null-fill to the
-    // union schema so exceptAll compares like for like (a legacy row
+    // union schema so the diff compares like for like (a legacy row
     // and its null-extended self are the same row, so evolution alone
     // never reports a change)
     val allCols = (ao0.columns ++ bo0.columns.filterNot(
@@ -2659,7 +2672,6 @@ object VersionedTable {
       if (mB.colMap.isEmpty) df else logicalView(df, mB)
     val ao = view(align(ao0))
     val bo = view(align(bo0))
-    bo.exceptAll(ao).withColumn("change", lit("added"))
-      .unionByName(ao.exceptAll(bo).withColumn("change", lit("removed")))
+    netDiff(ao, bo, "change")
   }
 }

@@ -391,8 +391,7 @@ class GraftDeltaBatchWrite(op: GraftDeltaOperation,
       .map(n => s"$dvDir/$n")
     if (stagedData.nonEmpty)
       VersionedTable.validateAgainstConstraints(op.path,
-        spark.read.parquet(stagedData.map(r =>
-          VersionedTable.absPath(op.path, r)): _*))
+        VersionedTable.readRels(spark, op.path, stagedData))
     VersionedTable.commitDelta(op.path, op.scannedVersion,
       stagedData, stagedDvs)
   }

@@ -282,8 +282,7 @@ class GraftReplaceDataBatchWrite(delegate: BatchWrite,
     val staged = VersionedTable.listStagedFiles(op.path, stagingDir)
     if (staged.nonEmpty)
       VersionedTable.validateAgainstConstraints(op.path,
-        spark.read.parquet(staged.map(r =>
-          VersionedTable.absPath(op.path, r)): _*))
+        VersionedTable.readRels(spark, op.path, staged))
     VersionedTable.commitReplace(op.path, op.scannedVersion,
       op.scannedFiles, staged)
   }

@@ -210,9 +210,8 @@ object GraftVersioned {
       spark: SparkSession, options: CaseInsensitiveStringMap): StructType = {
     val path = tablePath(options)
     val m = VersionedTable.readManifest(path, version(options))
-    val fromFiles = spark.read.option("mergeSchema", "true")
-      .parquet(m.data.map(r => VersionedTable.absPath(path, r)): _*)
-      .schema
+    val fromFiles = graft.io.Footers.schema(spark,
+      m.data.map(r => VersionedTable.absPath(path, r)))
     // ALTER-added columns not yet materialized in any file (the
     // parquet reader null-fills columns absent from a file, so the
     // scan serves them for free)
@@ -278,8 +277,7 @@ object GraftVersioned {
       spark: SparkSession, path: String, version: Int,
       m: VersionedTable.Manifest,
       kept: Seq[String]): Map[String, Array[Long]] = {
-    val dvRows = spark.read
-      .parquet(m.dvs.map(r => VersionedTable.absPath(path, r)): _*)
+    val dvRows = VersionedTable.readRels(spark, path, m.dvs)
       .select("file", "pos")
       .limit(dvServeCap + 1).collect()
     require(dvRows.length <= dvServeCap,

@@ -2,6 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
+
+import graft.io.{Footers, FsUtil}
 
 /** Streaming CDC upsert into a bucket-partitioned parquet snapshot —
   * the MERGE-INTO discipline without a table format: each micro-batch
@@ -27,28 +30,38 @@ object CdcUpsert {
         col("m.ts").as("last_ts"), col("m.event_id").as("last_event_id"),
         col("m.event_type").as("last_type"), col("m.value").as("last_value"))
 
+  /** The snapshot at `snapDir` with its schema supplied, so the read
+    * launches no schema-inference job: the data columns from one part
+    * file's footer (one writer wrote them all, so that is the file
+    * inference would read) plus the `bucket` partition column as LONG.
+    */
+  private def snapshot(spark: SparkSession, snapDir: String): DataFrame =
+    spark.read.schema(Footers.schema(spark,
+        Seq(Footers.firstDataFile(spark, snapDir))).add("bucket", LongType))
+      .parquet(snapDir)
+
   /** Merge one micro-batch of change events into the snapshot at
     * `snapDir`. Read-modify-write touches ONLY the buckets the batch's
     * keys fall in: the affected-bucket set (≤ 8 values — a bounded
     * driver collect) prunes the snapshot read via the hive partition
     * column, and `partitionOverwriteMode=dynamic` limits the overwrite
     * to the partitions present in the merged frame (= the affected
-    * buckets).
+    * buckets). An empty batch has no affected bucket and writes nothing.
     */
   def mergeBatch(spark: SparkSession, batch: DataFrame,
                  snapDir: String): Unit = {
-    if (batch.isEmpty) return
     val changes = latestPerUser(batch).localCheckpoint()
     val affected = changes.select("bucket").distinct()
       .collect().map(_.getLong(0))
+    if (affected.isEmpty) return
     val exists = new java.io.File(snapDir).listFiles() != null &&
       new java.io.File(snapDir).listFiles().nonEmpty
     val merged =
       if (!exists) changes
       else {
-        val existing = spark.read.parquet(snapDir)
+        val existing = snapshot(spark, snapDir)
           .where(col("bucket").isin(affected.toSeq: _*))
-          .select(col("user_id"), col("bucket").cast("long").as("bucket"),
+          .select(col("user_id"), col("bucket"),
             col("last_ts"), col("last_event_id"), col("last_type"),
             col("last_value"))
         existing.unionByName(changes)
@@ -81,14 +94,14 @@ object CdcUpsert {
     * untouched — cost scales with the delete set, not the table.
     */
   def compact(spark: SparkSession, snapDir: String): Unit = {
-    val snap = spark.read.parquet(snapDir)
+    val snap = snapshot(spark, snapDir)
     val tomb = snap.where(col("last_type") === "error")
-      .select(col("bucket").cast("long")).distinct()
+      .select(col("bucket")).distinct()
       .collect().map(_.getLong(0))
     if (tomb.isEmpty) return
     val kept = snap.where(col("bucket").isin(tomb.toSeq: _*))
       .where(col("last_type") =!= "error")
-      .select(col("user_id"), col("bucket").cast("long").as("bucket"),
+      .select(col("user_id"), col("bucket"),
         col("last_ts"), col("last_event_id"), col("last_type"),
         col("last_value"))
       .localCheckpoint()
@@ -98,17 +111,14 @@ object CdcUpsert {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("bucket")
       .parquet(snapDir)
-    tomb.filterNot(keptBuckets).foreach { b =>
-      val d = new java.io.File(s"$snapDir/bucket=$b")
-      Option(d.listFiles()).foreach(_.foreach(_.delete()))
-      d.delete()
-    }
+    tomb.filterNot(keptBuckets).foreach(b =>
+      FsUtil.deleteRecursively(s"$snapDir/bucket=$b"))
   }
 
   /** Read the maintained snapshot back in its serving column order. */
   def readSnapshot(spark: SparkSession, snapDir: String): DataFrame =
-    spark.read.parquet(snapDir)
-      .select(col("user_id"), col("bucket").cast("long").as("bucket"),
+    snapshot(spark, snapDir)
+      .select(col("user_id"), col("bucket"),
         col("last_event_id"), col("last_type"), col("last_value"),
         col("last_ts"))
 }

@@ -40,14 +40,24 @@ object Bridge {
     else None
   }
 
-  /** Register a temp SQL function backed by a Catalyst expression builder
-    * (FunctionRegistry is private[sql] too).
+  /** `StructType.merge` (private[sql]): the schema fold Spark's
+    * `mergeSchema` inference job runs over part-file footers — fields
+    * of `a` first, `b`'s new fields appended, nested structs merged,
+    * conflicting types refused.
     */
-  def registerFunction(spark: org.apache.spark.sql.SparkSession, name: String,
-                       builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "scala_udf")
+  def mergeSchemas(a: org.apache.spark.sql.types.StructType,
+                   b: org.apache.spark.sql.types.StructType,
+                   caseSensitive: Boolean)
+      : org.apache.spark.sql.types.StructType =
+    a.merge(b, caseSensitive)
+
+  /** `StructType.asNullable` (private[spark]): every field, nested ones
+    * included, made nullable — what a file relation reports as its
+    * schema whatever the footers declare.
+    */
+  def asNullable(s: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType =
+    s.asNullable
 
   /** Drain the listener bus (`SparkContext.listenerBus` is
     * private[spark]) so diagnostic listeners (tools.StageCountProbe)

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
+import graft.io.FsUtil
 import graft.streaming.CdcUpsert
 
 /** Semantics tests for the round-8 continuation wave: the streaming
@@ -16,12 +17,6 @@ import graft.streaming.CdcUpsert
 class Extension26Spec extends SparkSpec {
 
   import spark.implicits._
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    Files.walk(p).iterator().asScala.toSeq.reverse
-      .foreach(f => Files.deleteIfExists(f))
-  }
 
   test("streaming funnel: scrambled arrival order and click-before-view " +
     "users fold to the batch rule") {
@@ -53,12 +48,12 @@ class Extension26Spec extends SparkSpec {
       val part = new java.io.File(s"$dir/stage").listFiles()
         .filter(_.getName.endsWith(".parquet")).head
       Files.copy(part.toPath, dir.resolve("events.parquet"))
-      deleteRecursively(java.nio.file.Paths.get(s"$dir/stage"))
+      FsUtil.deleteRecursively(s"$dir/stage")
       val got = SparkEntry.queries("q231_streaming_funnel")(spark, dir.toString)
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(got == Map("1_view" -> 3L, "2_click" -> 1L, "3_purchase" -> 1L),
         s"funnel decisions diverged from the batch rule: $got")
-    } finally deleteRecursively(dir)
+    } finally FsUtil.deleteRecursively(dir)
   }
 
   test("cdc upsert: second merge rewrites ONLY the affected buckets and " +
@@ -94,7 +89,7 @@ class Extension26Spec extends SparkSpec {
       assert(out(8L) == ((2001L, "purchase", 9.0)), s"user 8 not upserted: $out")
       assert(out(16L) == ((2002L, "click", 3.0)), s"user 16 not inserted: $out")
       assert(out(7L) == ((1007L, "view", 1.0)), s"untouched user 7 changed: $out")
-    } finally deleteRecursively(snap)
+    } finally FsUtil.deleteRecursively(snap)
   }
 
   test("cdc compaction: drops tombstoned keys, removes a fully-deleted " +
@@ -126,7 +121,29 @@ class Extension26Spec extends SparkSpec {
       val out = CdcUpsert.readSnapshot(spark, snap.toString)
         .collect().map(_.getLong(0)).toSet
       assert(out == Set(0L, 2L), s"post-compaction keys wrong: $out")
-    } finally deleteRecursively(snap)
+    } finally FsUtil.deleteRecursively(snap)
+  }
+
+  test("cdc compaction removes a fully tombstoned bucket whose " +
+    "directory also holds a nested subdirectory") {
+    val snap = scratch("graft_cdc_compact_nested")
+    def ts(s: String) = java.sql.Timestamp.valueOf(s)
+    CdcUpsert.mergeBatch(spark, Seq(
+        (0L, ts("2024-01-01 00:00:00"), 10L, "view", 1.0),
+        (1L, ts("2024-01-01 00:00:00"), 12L, "error", 0.0))
+      .toDF("user_id", "ts", "event_id", "event_type", "value"),
+      snap.toString)
+    // a nested dir in tombstoned bucket 1, holding a copy of its part file
+    val bucket = snap.resolve("bucket=1")
+    val nested = Files.createDirectory(bucket.resolve("nested"))
+    val part = new java.io.File(bucket.toString).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head.toPath
+    Files.copy(part, nested.resolve(part.getFileName))
+    CdcUpsert.compact(spark, snap.toString)
+    assert(!Files.exists(bucket), "tombstoned bucket directory survived")
+    val out = CdcUpsert.readSnapshot(spark, snap.toString)
+      .collect().map(_.getLong(0)).toSet
+    assert(out == Set(0L), s"tombstoned rows left in the snapshot: $out")
   }
 
   test("streaming moments: scrambled arrival folds to the batch moments") {
@@ -143,7 +160,7 @@ class Extension26Spec extends SparkSpec {
       val part = new java.io.File(s"$dir/stage").listFiles()
         .filter(_.getName.endsWith(".parquet")).head
       Files.copy(part.toPath, dir.resolve("events.parquet"))
-      deleteRecursively(java.nio.file.Paths.get(s"$dir/stage"))
+      FsUtil.deleteRecursively(s"$dir/stage")
       val got = SparkEntry.queries("q237_streaming_moments")(spark, dir.toString)
         .collect()
         .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2), r.getDouble(3)))
@@ -153,7 +170,7 @@ class Extension26Spec extends SparkSpec {
         s"type a moments diverged: $got")
       assert(got("b") == ((3L, 4.0, math.floor(8.0 / 3.0 * 1e6 + 0.5) / 1e6)),
         s"type b moments diverged: $got")
-    } finally deleteRecursively(dir)
+    } finally FsUtil.deleteRecursively(dir)
   }
 
   test("q225 sketch Jaccard sits at least 2x inside the gate tolerance") {

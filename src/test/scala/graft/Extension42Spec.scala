@@ -28,7 +28,6 @@ class Extension42Spec extends SparkSpec {
 
   test("the three round-8 continuation expressions are SQL-registered " +
     "(jaro_winkler, l2_distance, hilbert_index)") {
-    graft.Engine.registerFunctions(spark)
     val r = spark.sql(
       "SELECT jaro_winkler('martha', 'marhta') AS jw, " +
         "l2_distance(array(cast(3.0 as float), cast(0.0 as float)), " +

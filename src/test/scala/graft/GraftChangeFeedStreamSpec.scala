@@ -181,6 +181,73 @@ class GraftChangeFeedStreamSpec extends SparkSpec {
     assert(!got.exists(t => t._1 == 1L && t._4 == 2L))
   }
 
+  test("write-time sidecars equal the two-way exceptAll multiset for " +
+    "merge, applyCdc and SQL UPDATE: duplicate rows, NULLs, a no-op " +
+    "update, NaN and -0.0") {
+    import org.apache.spark.sql.DataFrame
+    import spark.implicits._
+    // the reference diff, computed here the way the sidecars once were
+    def exceptAllDiff(removed: DataFrame, added: DataFrame): Seq[String] = {
+      val a = added.select(removed.columns.map(col).toSeq: _*)
+      removed.exceptAll(a).withColumn("_change", lit("removed"))
+        .unionByName(a.exceptAll(removed).withColumn("_change", lit("added")))
+        .collect().map(_.toString).toSeq.sorted
+    }
+    def sidecar(path: String, v: Int): Seq[String] =
+      VersionedTable.readCdc(spark, path, v)
+        .select("id", "x", "name", "_change")
+        .collect().map(_.toString).toSeq.sorted
+    def snapshot(path: String, v: Int): DataFrame =
+      VersionedTable.readVersion(spark, path, v).select("id", "x", "name")
+    val rows = Seq[(Long, Double, String)](
+      (1L, 1.0, "a"), (1L, 1.0, "a"),          // duplicate identical rows
+      (2L, Double.NaN, null),                  // NaN and NULL
+      (3L, -0.0, "c"),                         // -0.0
+      (4L, 4.0, null), (5L, 5.0, "e"), (7L, -0.0, "g"))
+    def fresh(name: String): String = {
+      val p = scratch(name).resolve("t").toString
+      VersionedTable.init(rows.toDF("id", "x", "name").repartition(1), p)
+      VersionedTable.enableChangeDataFeed(p)
+      p
+    }
+    val updates = Seq[(Long, Double, String)](
+      (1L, 1.0, "a"),                          // one copy of the duplicate
+      (2L, Double.NaN, null),                  // no-op through NaN and NULL
+      (3L, 0.0, "c"),                          // -0.0 -> 0.0
+      (4L, 44.0, null), (6L, 6.0, null), (7L, 7.0, "g"))
+      .toDF("id", "x", "name")
+    val keys = updates.select("id").as[Long].collect().toSeq
+
+    val m = fresh("graft_cdf_parity_merge")
+    VersionedTable.merge(spark, m, updates, Seq("id"))
+    val mergeExp = exceptAllDiff(
+      snapshot(m, 0).where(col("id").isin(keys: _*)), updates)
+    assert(mergeExp.exists(_.startsWith("[1,1.0,a,removed")),
+      s"the duplicate's net removal is missing: $mergeExp")
+    assert(sidecar(m, 1) == mergeExp, "merge sidecar")
+
+    val c = fresh("graft_cdf_parity_cdc")
+    val batch = updates.withColumn("op", lit(1))
+      .unionByName(Seq((5L, 0.0, "", -1)).toDF("id", "x", "name", "op"))
+    VersionedTable.applyCdc(spark, c, batch, Seq("id"), "op")
+    val cdcExp = exceptAllDiff(
+      snapshot(c, 0).where(col("id").isin(keys :+ 5L: _*)), updates)
+    assert(cdcExp.contains("[5,5.0,e,removed]"), cdcExp)
+    assert(sidecar(c, 1) == cdcExp, "applyCdc sidecar")
+
+    // one data file, so the group rewrite replaces the whole snapshot
+    val wh = scratch("graft_cdf_parity_wh").toString
+    spark.conf.set("spark.sql.catalog.gcdfp", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.gcdfp.warehouse", wh)
+    val t = s"$wh/t"
+    VersionedTable.init(rows.toDF("id", "x", "name").repartition(1), t)
+    VersionedTable.enableChangeDataFeed(t)
+    spark.sql("UPDATE gcdfp.t SET x = x + 1 WHERE id IN (1, 4, 7)")
+    val sqlExp = exceptAllDiff(snapshot(t, 0), snapshot(t, 1))
+    assert(sqlExp.count(_ == "[1,1.0,a,removed]") == 2, sqlExp)
+    assert(sidecar(t, 1) == sqlExp, "SQL UPDATE sidecar")
+  }
+
   test("copy-on-write commits refuse loudly; skipChangeCommits skips " +
     "them; pacing splits the backlog per maxVersionsPerTrigger") {
     import spark.implicits._

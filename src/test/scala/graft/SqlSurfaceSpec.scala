@@ -8,7 +8,6 @@ import graft.functions.PolyHash
 class SqlSurfaceSpec extends SparkSpec {
 
   test("custom expressions are callable from SQL and match the JVM spec") {
-    Engine.registerFunctions(spark)
     val r = spark.sql(
       "SELECT poly_hash('abc') AS h, cosine_sim(array(1.0F, 0.0F), array(1.0F, 0.0F)) AS c, " +
         "dot_product(array(2.0F, 3.0F), array(4.0F, 5.0F)) AS d, " +
@@ -69,7 +68,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("registered views answer plain SQL (wordcount in one statement)") {
-    Engine.registerFunctions(spark)
     Engine.registerViews(spark, sf0001)
     val n = spark.sql(
       """SELECT word, count(*) AS cnt

@@ -22,6 +22,9 @@ rules for comparing a parent and a change in a small sandbox:
   the metric's `bound` in BENCHMARK.json (a fraction of the parent's
   median). When the parent's IQR is wider than the bound, the result is
   "unresolved" unless every change run beats every parent run.
+Last, per operation, each side's median over its runs of the run's own
+median seconds (`op_seconds` in the full record each run leaves in
+`<checkout>/.bench_build/results/`), so an A/B shows which operation moved.
 Exit code 0 when every run was correct with no failed operation, else 1.
 """
 
@@ -43,7 +46,8 @@ def seed_list(spec):
 
 
 def run_once(checkout, workload, seed, seconds):
-    """One run.py run in `checkout`; returns its summary line as a dict."""
+    """One run.py run in `checkout`; returns its summary line as a dict,
+    with the full record's `op_seconds` added under the same key."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
     p = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
@@ -51,7 +55,12 @@ def run_once(checkout, workload, seed, seconds):
     if p.returncode != 0 or not lines:
         sys.stderr.write(p.stderr[-4000:])
         sys.exit(f"ab: run.py exited {p.returncode} in {checkout} (seed {seed})")
-    return json.loads(lines[-1])
+    summary = json.loads(lines[-1])
+    record = os.path.join(checkout, ".bench_build", "results",
+                          f"{workload}-seed{seed}-trace0-full.json")
+    with open(record) as f:
+        summary["op_seconds"] = json.load(f)["op_seconds"]
+    return summary
 
 
 def quartiles(xs):
@@ -127,6 +136,18 @@ def main():
               f"gap {v['median_gap']:.3f} vs parent IQR {v['parent_iqr']:.3f}"
               f"  gain={'yes' if v['gain'] else 'no'}"
               f"  within_bound={v['within_bound']}")
+    print("\nper-operation medians (s) over each side's runs:")
+    for op in sorted({op for p in pairs for s in p for op in p[s]["op_seconds"]}):
+        med = {}
+        for s in ("parent", "change"):
+            xs = [p[s]["op_seconds"][op] for p in pairs
+                  if op in p[s]["op_seconds"]]
+            med[s] = statistics.median(xs) if xs else None
+        cells = "  ".join(f"{s} " + ("-" if med[s] is None else f"{med[s]:.3f}")
+                          for s in ("parent", "change"))
+        ratio = (f"  change/parent {med['change'] / med['parent']:.3f}"
+                 if med["parent"] and med["change"] is not None else "")
+        print(f"{op}: {cells}{ratio}")
     ok = all(p[s]["correct"] and p[s]["failed"] == 0
              for p in pairs for s in ("parent", "change"))
     print(f"all runs correct with failed 0: {'yes' if ok else 'no'}")
