@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.io.{Sources, Tables}
 import graft.ops.{MaterializedView, VersionedTable}
-import graft.streaming.{EventStreams, Milestones, SentinelFiles, StreamGate}
+import graft.streaming.{Milestones, StreamGate}
 
 /** Round-10 second wave — new-primitive content only (the r9 rule):
   * q463 introduces ZONE-MAP FILE SKIPPING (per-file min/max manifest
@@ -176,18 +176,14 @@ object ExtensionQueries81 {
       "q466_tws_milestones",
       (s, dir) => {
         import s.implicits._
-        val out = StreamGate.withScratch("graft_tws_sentinel") { case Seq(sentinelDir) =>
-          SentinelFiles.writeFlushSentinel(sentinelDir)
-          val stream = EventStreams.readFlushed(s, dir, sentinelDir)
+        val out = StreamGate.flushed(s, dir, "tws_ms") { events =>
+          val stream = events
             .withWatermark("ts", "2 hours")
             .selectExpr("user_id", "ts", "unix_micros(ts) AS ts_us",
               "event_id", "value")
             .as[Milestones.MsEvent]
-          val plan = Milestones.milestones(stream, 4L)
+          Milestones.milestones(stream, 4L)
             .filter(col("user_id") >= 0)
-          StreamGate.rocksDbState(s) {
-            StreamGate.toMemory(s, "tws_ms", plan, "append")
-          }
         }
         out.orderBy("user_id", "milestone")
       },

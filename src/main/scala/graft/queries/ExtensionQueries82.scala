@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.io.Tables
 import graft.ops.{MaterializedView, VersionedTable}
-import graft.streaming.{EventStreams, FirstSeen, SentinelFiles, StreamGate}
+import graft.streaming.{FirstSeen, StreamGate}
 
 /** Round-10 third wave — new-primitive content only: q467 EXACTLY-ONCE
   * STREAMING MV MAINTENANCE (`foreachBatch` + atomic batch-id commits —
@@ -145,18 +145,14 @@ object ExtensionQueries82 {
       "q469_tws_first_seen_dict",
       (s, dir) => {
         import s.implicits._
-        val out = StreamGate.withScratch("graft_fs_sentinel") { case Seq(sentinelDir) =>
-          SentinelFiles.writeFlushSentinel(sentinelDir)
-          val stream = EventStreams.readFlushed(s, dir, sentinelDir)
+        val out = StreamGate.flushed(s, dir, "tws_fs") { events =>
+          val stream = events
             .withWatermark("ts", "2 hours")
             .selectExpr("user_id", "ts", "unix_micros(ts) AS ts_us",
               "event_type")
             .as[FirstSeen.FsEvent]
-          val plan = FirstSeen.firstSeen(stream)
+          FirstSeen.firstSeen(stream)
             .filter(col("user_id") >= 0)
-          StreamGate.rocksDbState(s) {
-            StreamGate.toMemory(s, "tws_fs", plan, "append")
-          }
         }
         out.orderBy("user_id", "event_type")
       },

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.io.{Sources, Tables}
-import graft.streaming.{EventStreams, SentinelFiles, StreamGate, WarmStart}
+import graft.streaming.{StreamGate, WarmStart}
 
 /** Round-10 fourth wave — new-primitive content only: q470 TWO-D
   * zone-map skipping over a Z-ORDER-clustered layout (conjunctive box
@@ -72,8 +72,7 @@ object ExtensionQueries83 {
       "q471_tws_state_bootstrap",
       (s, dir) => {
         import s.implicits._
-        val out = StreamGate.withScratch("graft_ws_sentinel") { case Seq(sentinelDir) =>
-          SentinelFiles.writeFlushSentinel(sentinelDir)
+        val out = StreamGate.flushed(s, dir, "tws_ws") { events =>
           val ev = Tables.load(s, dir, "events")
             .select(col("user_id"), col("event_id"), col("ts"),
               floor(col("value") * 100 + 0.5).cast("long").as("cents"))
@@ -88,17 +87,14 @@ object ExtensionQueries83 {
           val flushAtMs = ev
             .agg(max(unix_micros(col("ts").cast("timestamp")))).head()
             .getLong(0) / 1000 + 1
-          val stream = EventStreams.readFlushed(s, dir, sentinelDir)
+          val stream = events
             .withWatermark("ts", "2 hours")
             .where(col("user_id") < 0 || col("event_id") % 10 === 3)
             .selectExpr("user_id", "ts", "unix_micros(ts) AS ts_us",
               "CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents")
             .as[WarmStart.WsEvent]
-          val plan = WarmStart.lifetimeTotals(stream, history, flushAtMs)
+          WarmStart.lifetimeTotals(stream, history, flushAtMs)
             .filter(col("user_id") >= 0)
-          StreamGate.rocksDbState(s) {
-            StreamGate.toMemory(s, "tws_ws", plan, "append")
-          }
         }
         out.orderBy("user_id")
       },

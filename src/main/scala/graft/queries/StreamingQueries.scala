@@ -87,18 +87,11 @@ object StreamingQueries {
       "q76_streaming_sessions",
       (s, dir) => {
         import s.implicits._
-        StreamGate.withScratch("graft_sess_sentinel") { case Seq(sentinelDir) =>
-          // raw-schema sentinel parquet: ts in NANOS like the fixture
-          // (2100-01-01 — far past any fixture event + watermark delay)
-          SentinelFiles.writeFlushSentinel(sentinelDir)
-          val stream = EventStreams.readFlushed(s, dir, sentinelDir)
+        StreamGate.flushed(s, dir, "sessions") { events =>
+          val stream = events
             .selectExpr("user_id", "ts", "unix_micros(ts) AS ts_us", "event_id", "value")
             .as[EventStreams.SessionEvent]
-          StreamGate.rocksDbState(s) {
-            StreamGate.toMemory(s, "sessions",
-              EventStreams.gapSessions(stream).filter(col("user_id") >= 0),
-              "append")
-          }
+          EventStreams.gapSessions(stream).filter(col("user_id") >= 0)
         }.orderBy("user_id", "session_idx")
       },
       // the oracle IS batch q29's sessionization SQL: gap > 3600
@@ -246,11 +239,9 @@ object StreamingQueries {
       "q102_streaming_session_window",
       (s, dir) => {
         import s.implicits._
-        val out = StreamGate.withScratch("graft_sw_sentinel") { case Seq(sentinelDir) =>
-          SentinelFiles.writeFlushSentinel(sentinelDir)
-          val stream = EventStreams.readFlushed(s, dir, sentinelDir)
+        val out = StreamGate.flushed(s, dir, "sw") { events =>
+          events
             .withWatermark("ts", "2 hours")
-          val plan = stream
             .groupBy(col("user_id"), session_window(col("ts"), "1 hour").as("sw"))
             .agg(count(lit(1)).cast("long").as("n_events"),
               round(sum("value"), 2).as("session_value"))
@@ -258,9 +249,6 @@ object StreamingQueries {
               col("sw.start").cast("timestamp_ntz").as("session_start"),
               col("sw.end").cast("timestamp_ntz").as("session_end"),
               col("n_events"), col("session_value"))
-          StreamGate.rocksDbState(s) {
-            StreamGate.toMemory(s, "sw", plan, "append")
-          }
         }
         out.where(col("user_id") >= 0)
           .orderBy("user_id", "session_start")
@@ -362,18 +350,14 @@ object StreamingQueries {
       "q139_streaming_conversions",
       (s, dir) => {
         import s.implicits._
-        val out = StreamGate.withScratch("graft_conv_sentinel") { case Seq(sentinelDir) =>
-          SentinelFiles.writeFlushSentinel(sentinelDir)
-          val stream = EventStreams.readFlushed(s, dir, sentinelDir)
+        val out = StreamGate.flushed(s, dir, "conv") { events =>
+          val stream = events
             .where(col("event_type").isin("view", "purchase") || col("user_id") < 0)
             .selectExpr("user_id", "ts", "unix_micros(ts) AS ts_us",
               "event_id", "event_type")
             .as[EventStreams.FlowEvent]
-          val plan = EventStreams.conversionTimeouts(stream)
+          EventStreams.conversionTimeouts(stream)
             .filter(col("user_id") >= 0)
-          StreamGate.rocksDbState(s) {
-            StreamGate.toMemory(s, "conv", plan, "append")
-          }
         }
         out.orderBy("view_event_id")
       },
@@ -405,9 +389,8 @@ object StreamingQueries {
       "q140_streaming_daily_active",
       (s, dir) => {
         import s.implicits._
-        val out = StreamGate.withScratch("graft_dau_sentinel") { case Seq(sentinelDir) =>
-          SentinelFiles.writeFlushSentinel(sentinelDir)
-          val plan = EventStreams.readFlushed(s, dir, sentinelDir)
+        val out = StreamGate.flushed(s, dir, "dau") { events =>
+          events
             .withColumn("day", to_date(col("ts")))
             .withWatermark("ts", "2 hours")
             .dropDuplicatesWithinWatermark("user_id", "event_type", "day")
@@ -415,9 +398,6 @@ object StreamingQueries {
             .agg(count(lit(1)).cast("long").as("active_users"))
             .select(col("w.start").cast("date").as("day"),
               col("event_type"), col("active_users"))
-          StreamGate.rocksDbState(s) {
-            StreamGate.toMemory(s, "dau", plan, "append")
-          }
         }
         out.where(col("event_type") =!= "__flush")
           .orderBy("day", "event_type")
@@ -442,16 +422,12 @@ object StreamingQueries {
       "q167_streaming_rate_limit",
       (s, dir) => {
         import s.implicits._
-        val out = StreamGate.withScratch("graft_rate_sentinel") { case Seq(sentinelDir) =>
-          SentinelFiles.writeFlushSentinel(sentinelDir)
-          val stream = EventStreams.readFlushed(s, dir, sentinelDir)
+        val out = StreamGate.flushed(s, dir, "rate") { events =>
+          val stream = events
             .selectExpr("user_id", "ts", "unix_micros(ts) AS ts_us", "event_id")
             .as[EventStreams.RateEvent]
-          val plan = EventStreams.rateLimit(stream)
+          EventStreams.rateLimit(stream)
             .filter(col("user_id") >= 0)
-          StreamGate.rocksDbState(s) {
-            StreamGate.toMemory(s, "rate", plan, "append")
-          }
         }
         out.orderBy("event_id")
       },
@@ -493,17 +469,13 @@ object StreamingQueries {
       "q174_streaming_anomalies",
       (s, dir) => {
         import s.implicits._
-        val out = StreamGate.withScratch("graft_anom_sentinel") { case Seq(sentinelDir) =>
-          SentinelFiles.writeFlushSentinel(sentinelDir)
-          val stream = EventStreams.readFlushed(s, dir, sentinelDir)
+        val out = StreamGate.flushed(s, dir, "anom") { events =>
+          val stream = events
             .selectExpr("user_id", "ts", "unix_micros(ts) AS ts_us",
               "event_id", "value")
             .as[EventStreams.ValueEvent]
-          val plan = EventStreams.ewmaAnomalies(stream)
+          EventStreams.ewmaAnomalies(stream)
             .filter(col("user_id") >= 0)
-          StreamGate.rocksDbState(s) {
-            StreamGate.toMemory(s, "anom", plan, "append")
-          }
         }
         out.orderBy("event_id")
       },
@@ -921,19 +893,15 @@ object StreamingQueries {
       "q231_streaming_funnel",
       (s, dir) => {
         import s.implicits._
-        val out = StreamGate.withScratch("graft_funnel_sentinel") { case Seq(sentinelDir) =>
-          SentinelFiles.writeFlushSentinel(sentinelDir)
-          val stream = EventStreams.readFlushed(s, dir, sentinelDir)
+        val out = StreamGate.flushed(s, dir, "funnel") { events =>
+          val stream = events
             .where(col("event_type").isin("view", "click", "purchase") ||
               col("user_id") < 0)
             .selectExpr("user_id", "ts", "unix_micros(ts) AS ts_us",
               "event_id", "event_type")
             .as[EventStreams.FlowEvent]
-          val plan = EventStreams.funnelStages(stream)
+          EventStreams.funnelStages(stream)
             .filter(col("user_id") >= 0)
-          StreamGate.rocksDbState(s) {
-            StreamGate.toMemory(s, "funnel", plan, "append")
-          }
         }
         out.groupBy("stage")
           .agg(count(lit(1)).cast("long").as("users"))
@@ -1016,17 +984,13 @@ object StreamingQueries {
       "q237_streaming_moments",
       (s, dir) => {
         import s.implicits._
-        val out = StreamGate.withScratch("graft_mom_sentinel") { case Seq(sentinelDir) =>
-          SentinelFiles.writeFlushSentinel(sentinelDir)
-          val stream = EventStreams.readFlushed(s, dir, sentinelDir)
+        val out = StreamGate.flushed(s, dir, "mom") { events =>
+          val stream = events
             .selectExpr("event_type AS etype", "ts",
               "unix_micros(ts) AS ts_us", "event_id", "value")
             .as[EventStreams.MomentsEvent]
-          val plan = EventStreams.runningMoments(stream)
+          EventStreams.runningMoments(stream)
             .filter(col("event_type") =!= "__flush")
-          StreamGate.rocksDbState(s) {
-            StreamGate.toMemory(s, "mom", plan, "append")
-          }
         }
         out
           .select(col("event_type"), col("n"),
@@ -1273,23 +1237,19 @@ object StreamingQueries {
       "q268_streaming_sprt",
       (s, dir) => {
         import s.implicits._
-        val out = StreamGate.withScratch("graft_sprt_sentinel") { case Seq(sentinelDir) =>
-          SentinelFiles.writeFlushSentinel(sentinelDir)
+        val out = StreamGate.flushed(s, dir, "sprt") { events =>
           // the same grid constants the batch twin derives in-plan
           val a9 = math.floor(math.log(0.20 / 0.10) * 1e9 + 0.5).toLong
           val b9 = math.floor(math.log(0.80 / 0.90) * 1e9 + 0.5).toLong
           val t9 = math.floor(math.log(0.95 / 0.05) * 1e9 + 0.5).toLong
-          val stream = EventStreams.readFlushed(s, dir, sentinelDir)
+          val stream = events
             .selectExpr(
               "CASE WHEN user_id < 0 THEN user_id ELSE user_id % 2 END AS variant",
               "ts", "unix_micros(ts) AS ts_us", "event_id",
               "event_type = 'purchase' AS success")
             .as[EventStreams.SprtEvent]
-          val plan = EventStreams.sprtWalk(stream, a9, b9, t9)
+          EventStreams.sprtWalk(stream, a9, b9, t9)
             .filter(col("variant") >= 0)
-          StreamGate.rocksDbState(s) {
-            StreamGate.toMemory(s, "sprt", plan, "append")
-          }
         }
         out
           .select(col("variant"), col("n_total").as("n_total"),
@@ -1469,20 +1429,16 @@ object StreamingQueries {
       "q292_streaming_lateness",
       (s, dir) => {
         import s.implicits._
-        val out = StreamGate.withScratch("graft_late_sentinel") { case Seq(sentinelDir) =>
-          SentinelFiles.writeFlushSentinel(sentinelDir)
-          val stream = EventStreams.readFlushed(s, dir, sentinelDir)
+        val out = StreamGate.flushed(s, dir, "late") { events =>
+          val stream = events
             .selectExpr("user_id",
               "timestamp_micros(unix_micros(ts) + (event_id % 4) * 30000000)" +
                 " AS arr",
               "unix_micros(ts) + (event_id % 4) * 30000000 AS arr_us",
               "unix_micros(ts) AS ts_us", "event_id")
             .as[EventStreams.LateEvent]
-          val plan = EventStreams.latenessRouter(stream)
+          EventStreams.latenessRouter(stream)
             .filter(col("user_id") >= 0)
-          StreamGate.rocksDbState(s) {
-            StreamGate.toMemory(s, "late", plan, "append")
-          }
         }
         out
           .select(col("user_id"), col("n_events"), col("n_admit"),
@@ -1530,17 +1486,13 @@ object StreamingQueries {
       "q311_streaming_cadence",
       (s, dir) => {
         import s.implicits._
-        val out = StreamGate.withScratch("graft_cad_sentinel") { case Seq(sentinelDir) =>
-          SentinelFiles.writeFlushSentinel(sentinelDir)
-          val stream = EventStreams.readFlushed(s, dir, sentinelDir)
+        val out = StreamGate.flushed(s, dir, "cad") { events =>
+          val stream = events
             .selectExpr("user_id", "ts", "unix_micros(ts) AS ts_us",
               "event_id")
             .as[EventStreams.CadenceEvent]
-          val plan = EventStreams.cadenceMonitor(stream)
+          EventStreams.cadenceMonitor(stream)
             .filter(col("user_id") >= 0)
-          StreamGate.rocksDbState(s) {
-            StreamGate.toMemory(s, "cad", plan, "append")
-          }
         }
         out
           .where(col("n_gaps") >= 5 && col("sg") > 0)
@@ -1593,9 +1545,8 @@ object StreamingQueries {
       "q342_streaming_srm",
       (s, dir) => {
         import s.implicits._
-        val out = StreamGate.withScratch("graft_srm_sentinel") { case Seq(sentinelDir) =>
-          SentinelFiles.writeFlushSentinel(sentinelDir)
-          val plan = EventStreams.readFlushed(s, dir, sentinelDir)
+        val out = StreamGate.flushed(s, dir, "srm") { events =>
+          events
             .withColumn("day", to_date(col("ts")))
             .withColumn("arm", pmod(col("user_id"), lit(2)))
             .withWatermark("ts", "2 hours")
@@ -1610,9 +1561,6 @@ object StreamingQueries {
                 .otherwise(0L)).as("n1"))
             .select(col("w.start").cast("date").as("day"),
               col("n0"), col("n1"))
-          StreamGate.rocksDbState(s) {
-            StreamGate.toMemory(s, "srm", plan, "append")
-          }
         }
         // postlude over the memory sink only (no event re-scan): fold
         // each closed day into the chi-square; drop the sentinel's
@@ -1666,9 +1614,8 @@ object StreamingQueries {
       "q366_streaming_balance",
       (s, dir) => {
         import s.implicits._
-        val out = StreamGate.withScratch("graft_bal_sentinel") { case Seq(sentinelDir) =>
-          SentinelFiles.writeFlushSentinel(sentinelDir)
-          val stream = EventStreams.readFlushed(s, dir, sentinelDir)
+        val out = StreamGate.flushed(s, dir, "bal") { events =>
+          val stream = events
             .where(col("event_type")
               .isin("purchase", "click", "view", "__flush"))
             .select(col("user_id"), col("ts"),
@@ -1678,11 +1625,8 @@ object StreamingQueries {
                 .otherwise(-floor(col("value") * 100 + 0.5).cast("long"))
                 .as("dx"))
             .as[EventStreams.BalanceEvent]
-          val plan = EventStreams.clampedBalance(stream)
+          EventStreams.clampedBalance(stream)
             .filter(col("user_id") >= 0)
-          StreamGate.rocksDbState(s) {
-            StreamGate.toMemory(s, "bal", plan, "append")
-          }
         }
         out
           .select(col("user_id"), col("n_tx"), col("final_cents"),

@@ -1,6 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders,
+  SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
@@ -9,7 +12,7 @@ import org.apache.spark.sql.types._
   * (SURVEY.md §2b row "Streaming": absent from the reference — the only
   * time concept there is the mapper barrier at `master.py:128-134` — so
   * this is pure extension surface, built on watermarks + windowed aggs +
-  * `flatMapGroupsWithState`).
+  * keyed group-state folds).
   *
   * The transformations are shared with the batch path: q21 in
   * graft.queries.Relational runs the same grouping logic through the
@@ -128,40 +131,6 @@ object EventStreams {
     java.math.BigDecimal.valueOf(v).setScale(2, java.math.RoundingMode.HALF_UP)
       .doubleValue()
 
-  /** Custom stateful GAP sessionization via `flatMapGroupsWithState`
-    * (the reference's "bring your own reducer" idea, streaming edition)
-    * — the streaming twin of batch q29: a session ends when the gap to
-    * the next event exceeds `gap` (strictly), sessions are numbered per
-    * user in event-time order, and each session is emitted EXACTLY ONCE
-    * (append semantics, no running updates).
-    *
-    * Emission is strictly WATERMARK-DRIVEN, never eager: a session is
-    * emitted only once `last + gap < watermark`, i.e. once no legally
-    * late event (the engine admits anything ≥ watermark) could still
-    * extend it, start before it, or bridge into it. An earlier design
-    * emitted a span the moment a later event split away from it — wrong
-    * under multi-batch late arrival: an admissible late event landing
-    * BETWEEN an already-emitted span and the open one would silently
-    * merge into the wrong session (caught in round-4 review). Until the
-    * watermark seals them, finished-looking spans wait in state; each
-    * batch merges its (event-time-sorted) events into the span list —
-    * gap-sessionization of a point set is one sorted merge pass, so late
-    * events within the watermark fall into exactly the session batch
-    * q29 would give them.
-    *
-    * State per ACTIVE user is a handful of spans bounded by the
-    * watermark horizon (everything older is sealed and emitted — the
-    * event-time timeout fires at the earliest `last + gap`). After a
-    * user's spans all seal, a counter-only tombstone (16 bytes) remains
-    * so a returning user's `session_idx` continues the batch-equivalent
-    * numbering — which means state grows with the number of distinct
-    * users EVER seen, unbounded on a long-running stream. Pipelines that
-    * key sessions by (user, first_ts) instead of ordinals should pass
-    * `dropIdleTombstones = true`: state is then removed outright once a
-    * user's spans all seal (strictly active-user-bounded), at the
-    * documented cost that a user returning after going fully idle
-    * restarts `session_idx` at 1.
-    */
   /** One typed event on the conversion-tracking path (view or purchase). */
   case class FlowEvent(user_id: Long, ts: java.sql.Timestamp, ts_us: Long,
                        event_id: Long, event_type: String)
@@ -247,129 +216,177 @@ object EventStreams {
   /** Final running moments for one key at stream flush. */
   case class MomentsOut(event_type: String, n: Long, mean: Double, m2: Double)
 
-  /** Keyed moments state: the carried (n, mean, M2) triple — O(1) per
-    * key forever — plus the watermark-pending buffer. */
-  case class MomentsState(n: Double, mean: Double, m2: Double,
-                          pending: Seq[(Long, Long, Double)])
-
   /** Event-time micros past which a key treats the stream as flushed
     * (the 2100 sentinel minus its 2 h watermark lag is far beyond this
     * 2090-01-01 mark, every real event far below). */
   val FlushedThresholdUs: Long = 3786912000000000L
 
+  /** The pending payload of a fold whose step needs only (t_us,
+    * event_id); Spark has no encoder for Unit. */
+  private val NoPayload: Byte = 0
+
+  /** The one per-key fold under the eight ordered operators below — the
+    * reference's pluggable `reducer(values for k)` run on a stream whose
+    * reducer needs its values in event-time order. Arrivals buffer in
+    * keyed state as pending `(t_us, event_id, payload)` rows next to the
+    * operator's carry. Each call releases the rows STRICTLY below the
+    * watermark (a row at exactly ts == watermark may still be preceded by
+    * a same-ts arrival) and folds them in (t_us, event_id) order through
+    * `step(key, carry, t_us, event_id, payload) → (carry, outputs)`, so
+    * the outputs never depend on arrival order. Pending is bounded by the
+    * watermark horizon (2 h of one key's events), not the key's history;
+    * rows beyond the watermark are dropped by the watermark contract.
+    *
+    * Eviction follows one of two rules:
+    *  - per-event operators (`flush` = None) emit only from `step`. A key
+    *    whose carry is still `init` with nothing pending drops its state;
+    *    a timeout is armed only while rows are pending, so a folded key
+    *    keeps its O(1) carry without a timer (an idle-key TTL is the
+    *    deployment eviction knob).
+    *  - flush operators emit `flush(key, carry)` (possibly nothing) once
+    *    the watermark passes [[FlushedThresholdUs]] with nothing pending,
+    *    and drop the key. Until then a timeout stays armed at the
+    *    earliest pending row, or just past the watermark, so the flush
+    *    fires without new input; dropping keys that emit nothing keeps
+    *    them from re-arming that timeout forever.
+    */
+  private def orderedFold[E, K: Encoder, C: TypeTag, P: TypeTag, O: Encoder](
+      events: Dataset[E], init: C, timeCol: String = "ts")(
+      key: E => K, row: E => (Long, Long, P))(
+      step: (K, C, Long, Long, P) => (C, Seq[O]),
+      flush: Option[(K, C) => Seq[O]] = None): Dataset[O] = {
+    implicit val stateEncoder: Encoder[(C, Seq[(Long, Long, P)])] =
+      Encoders.product
+    events
+      .withWatermark(timeCol, "2 hours")
+      .groupByKey(key)
+      .flatMapGroupsWithState[(C, Seq[(Long, Long, P)]), O](
+        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        (k: K, batch: Iterator[E],
+         state: GroupState[(C, Seq[(Long, Long, P)])]) =>
+          val (prev, pending) =
+            state.getOption.getOrElse((init, Seq.empty[(Long, Long, P)]))
+          val wmMs = state.getCurrentWatermarkMs()
+          val (ready, rest) =
+            (pending ++ batch.map(row)).partition(_._1 < wmMs * 1000L)
+          var carry = prev
+          val out = ready.sortBy(r => (r._1, r._2)).flatMap {
+            case (t, id, p) =>
+              val (next, emitted) = step(k, carry, t, id, p)
+              carry = next
+              emitted
+          }
+          val flushed = flush.filter(_ =>
+            rest.isEmpty && wmMs * 1000L > FlushedThresholdUs)
+          if (flushed.nonEmpty ||
+              (flush.isEmpty && rest.isEmpty && carry == init)) {
+            state.remove()
+            (out ++ flushed.toSeq.flatMap(_(k, carry))).iterator
+          } else {
+            state.update((carry, rest))
+            if (flush.nonEmpty || rest.nonEmpty)
+              state.setTimeoutTimestamp(math.max(
+                if (rest.nonEmpty) rest.map(_._1).min / 1000L + 1L else 0L,
+                wmMs + 1L))
+            out.iterator
+          }
+      }
+  }
+
   /** Streaming running moments — q233's Chan merge run continuously:
     * each event folds into the carried (n, mean, M2) triple as a
     * single-element Chan merge (δ = x − mean; mean' = (mean·n + x)/
-    * (n+1); M2' = M2 + δ²·n/(n+1)), in watermark-proven (ts, id) order
-    * (the [[rateLimit]] buffer discipline), and the final triple emits
-    * once the watermark passes [[FlushedThresholdUs]] (the flush
-    * sentinel's doing). This is the per-key streaming aggregate whose
-    * state never grows with history — the shape a 100 TB stream keeps
-    * per key where a windowed agg would keep per (key, window).
+    * (n+1); M2' = M2 + δ²·n/(n+1)), in watermark-proven (ts, id) order,
+    * and the final triple emits once the watermark passes
+    * [[FlushedThresholdUs]] (the flush sentinel's doing). This is the
+    * per-key streaming aggregate whose state never grows with history —
+    * the shape a 100 TB stream keeps per key where a windowed agg would
+    * keep per (key, window).
     */
   def runningMoments(events: Dataset[MomentsEvent]): Dataset[MomentsOut] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", "2 hours")
-      .groupByKey(_.etype)
-      .flatMapGroupsWithState[MomentsState, MomentsOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: String, batch: Iterator[MomentsEvent], state: GroupState[MomentsState]) =>
-          val prev = state.getOption.getOrElse(
-            MomentsState(0.0, 0.0, 0.0, Seq.empty))
-          val pend = prev.pending ++
-            batch.map(e => (e.ts_us, e.event_id, e.value))
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val (ready, rest) = pend.partition(_._1 < wmUs)
-          var n = prev.n; var mean = prev.mean; var m2 = prev.m2
-          ready.sortBy(e => (e._1, e._2)).foreach { case (_, _, x) =>
-            // the SAME op sequence as q233's merge lambda with nb = 1,
-            // so batch-merged and stream-folded moments agree to ulps
-            val d = x - mean
-            m2 = m2 + d * d * n / (n + 1.0)
-            mean = (mean * n + x) / (n + 1.0)
-            n = n + 1.0
-          }
-          val out =
-            if (wmUs > FlushedThresholdUs && rest.isEmpty && n > 0.0) {
-              if (state.exists) state.remove()
-              Seq(MomentsOut(key, n.toLong, mean, m2))
-            } else {
-              state.update(MomentsState(n, mean, m2, rest))
-              state.setTimeoutTimestamp(math.max(
-                if (rest.nonEmpty) rest.map(_._1).min / 1000L + 1L else 0L,
-                state.getCurrentWatermarkMs() + 1L))
-              Nil
-            }
-          out.iterator
-      }
+    orderedFold(events, (0.0, 0.0, 0.0))(
+      _.etype, e => (e.ts_us, e.event_id, e.value))(
+      { case (_, (n, mean, m2), _, _, x) =>
+        // the SAME op sequence as q233's merge lambda with nb = 1, so
+        // batch-merged and stream-folded moments agree to ulps
+        val d = x - mean
+        ((n + 1.0, (mean * n + x) / (n + 1.0), m2 + d * d * n / (n + 1.0)),
+          Nil)
+      },
+      flush = Some({ case (key, (n, mean, m2)) =>
+        if (n > 0.0) Seq(MomentsOut(key, n.toLong, mean, m2)) else Nil
+      }))
   }
 
   /** One reached funnel stage for one user (emitted at most once per
     * (user, stage) — stage decisions are final by construction). */
   case class FunnelOut(user_id: Long, stage: String)
 
-  /** Keyed funnel state: the decided stage timestamps (−1 = not yet
-    * reached; micros) plus the watermark-pending buffer. The decided
-    * triple is 3 longs per user forever (the same bounded carry-over
-    * class as [[rateLimit]]'s token bucket; an idle-key TTL is the
-    * deployment eviction knob); pending is watermark-horizon-bounded.
-    */
-  case class FunnelState(vTs: Long, cTs: Long, pTs: Long,
-                         pending: Seq[(Long, Long, String)])
-
   /** Streaming ordered funnel — batch q72's rule ("first view, first
     * click after that view, first purchase after that click") run as
     * per-user incremental state. A later-arriving EARLIER view can
-    * change which clicks qualify, so events buffer until the watermark
-    * proves nothing can precede them and fold in (ts, id) order (the
-    * [[rateLimit]] secondary-sort discipline); each fold step advances
-    * the 3-long stage triple and emits the stage transition exactly
-    * once. Folding in complete ts order makes every decision final:
-    * vTs is the true min view ts, cTs the min click ts strictly after
-    * it, pTs the min purchase ts strictly after that — identical to
-    * the batch three-join.
+    * change which clicks qualify, so events fold in watermark-proven
+    * (ts, id) order; each fold step advances the decided stage
+    * timestamps (−1 = not yet reached; micros) and emits the stage
+    * transition exactly once. Folding in complete ts order makes every
+    * decision final: vTs is the true min view ts, cTs the min click ts
+    * strictly after it, pTs the min purchase ts strictly after that —
+    * identical to the batch three-join. The decided triple is 3 longs
+    * per user forever (the same bounded carry-over class as
+    * [[rateLimit]]'s token bucket).
     */
   def funnelStages(events: Dataset[FlowEvent]): Dataset[FunnelOut] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", "2 hours")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelState, FunnelOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, batch: Iterator[FlowEvent], state: GroupState[FunnelState]) =>
-          val prev = state.getOption.getOrElse(
-            FunnelState(-1L, -1L, -1L, Seq.empty))
-          val pend = prev.pending ++
-            batch.map(e => (e.ts_us, e.event_id, e.event_type))
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          // same-ts arrivals may still precede a row at ts == watermark
-          val (ready, rest) = pend.partition(_._1 < wmUs)
-          var v = prev.vTs; var c = prev.cTs; var p = prev.pTs
-          val out = ready.sortBy(e => (e._1, e._2)).flatMap {
-            case (ts, _, tpe) => tpe match {
-              case "view" if v == -1L =>
-                v = ts; Seq(FunnelOut(uid, "1_view"))
-              case "click" if v != -1L && c == -1L && ts > v =>
-                c = ts; Seq(FunnelOut(uid, "2_click"))
-              case "purchase" if c != -1L && p == -1L && ts > c =>
-                p = ts; Seq(FunnelOut(uid, "3_purchase"))
-              case _ => Nil
-            }
-          }
-          if (rest.isEmpty && v == -1L && c == -1L && p == -1L) {
-            if (state.exists) state.remove()
-          } else {
-            state.update(FunnelState(v, c, p, rest))
-            if (rest.nonEmpty)
-              state.setTimeoutTimestamp(math.max(
-                rest.map(_._1).min / 1000L + 1L,
-                state.getCurrentWatermarkMs() + 1L))
-          }
-          out.iterator
-      }
+    orderedFold(events, (-1L, -1L, -1L))(
+      _.user_id, e => (e.ts_us, e.event_id, e.event_type))(
+      { case (uid, stages @ (v, c, p), ts, _, tpe) =>
+        tpe match {
+          case "view" if v == -1L =>
+            ((ts, c, p), Seq(FunnelOut(uid, "1_view")))
+          case "click" if v != -1L && c == -1L && ts > v =>
+            ((v, ts, p), Seq(FunnelOut(uid, "2_click")))
+          case "purchase" if c != -1L && p == -1L && ts > c =>
+            ((v, c, ts), Seq(FunnelOut(uid, "3_purchase")))
+          case _ => (stages, Nil)
+        }
+      })
   }
 
+  /** Custom stateful GAP sessionization as a keyed group-state fold
+    * (the reference's "bring your own reducer" idea, streaming edition)
+    * — the streaming twin of batch q29: a session ends when the gap to
+    * the next event exceeds `gap` (strictly), sessions are numbered per
+    * user in event-time order, and each session is emitted EXACTLY ONCE
+    * (append semantics, no running updates).
+    *
+    * Emission is strictly WATERMARK-DRIVEN, never eager: a session is
+    * emitted only once `last + gap < watermark`, i.e. once no legally
+    * late event (the engine admits anything ≥ watermark) could still
+    * extend it, start before it, or bridge into it. An earlier design
+    * emitted a span the moment a later event split away from it — wrong
+    * under multi-batch late arrival: an admissible late event landing
+    * BETWEEN an already-emitted span and the open one would silently
+    * merge into the wrong session. Until the watermark seals them,
+    * finished-looking spans wait in state; each batch merges its
+    * (event-time-sorted) events into the span list —
+    * gap-sessionization of a point set is one sorted merge pass, so late
+    * events within the watermark fall into exactly the session batch
+    * q29 would give them.
+    *
+    * State per ACTIVE user is a handful of spans bounded by the
+    * watermark horizon (everything older is sealed and emitted — the
+    * event-time timeout fires at the earliest `last + gap`). After a
+    * user's spans all seal, a counter-only tombstone (16 bytes) remains
+    * so a returning user's `session_idx` continues the batch-equivalent
+    * numbering — which means state grows with the number of distinct
+    * users EVER seen, unbounded on a long-running stream. Pipelines that
+    * key sessions by (user, first_ts) instead of ordinals should pass
+    * `dropIdleTombstones = true`: state is then removed outright once a
+    * user's spans all seal (strictly active-user-bounded), at the
+    * documented cost that a user returning after going fully idle
+    * restarts `session_idx` at 1.
+    */
   def gapSessions(events: Dataset[SessionEvent],
                   gap: java.time.Duration = java.time.Duration.ofHours(1),
                   dropIdleTombstones: Boolean = false): Dataset[SessionOut] = {
@@ -433,58 +450,26 @@ object EventStreams {
   case class AnomalyAlert(user_id: Long, event_id: Long, value: Double,
                           ewma_before: Double)
 
-  /** Keyed EWMA state: `n` events folded, `acc` the running EWMA,
-    * `pending` the not-yet-decidable (ts_us, event_id, value) rows. */
-  case class EwmaState(n: Long, acc: Double,
-                       pending: Seq[(Long, Long, Double)])
-
   /** Streaming EWMA anomaly detection — q105's α = 1/2 fold (exact
     * halving, the identical IEEE op sequence the batch oracle replays)
     * run continuously per user, emitting an alert whenever an event
     * deviates from the PRE-event EWMA by more than `threshold` after a
-    * warm-up of `warmup` events. Same ordering discipline as
-    * [[rateLimit]]: arrivals buffer until the watermark proves nothing
-    * can precede them, then fold in (ts, id) order; carried state is
-    * (n, acc) — O(1) per key, pending bounded by the watermark horizon.
+    * warm-up of `warmup` events. Events fold in watermark-proven
+    * (ts, id) order; the carry is (events folded, running EWMA) — O(1)
+    * per key, pending bounded by the watermark horizon.
     */
   def ewmaAnomalies(events: Dataset[ValueEvent], threshold: Double = 50.0,
                     warmup: Long = 3L): Dataset[AnomalyAlert] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", "2 hours")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[EwmaState, AnomalyAlert](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, batch: Iterator[ValueEvent], state: GroupState[EwmaState]) =>
-          val prev = state.getOption.getOrElse(EwmaState(0L, 0.0, Seq.empty))
-          val pend = prev.pending ++
-            batch.map(e => (e.ts_us, e.event_id, e.value))
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val (ready, rest) = pend.partition(_._1 < wmUs)
-          var n = prev.n
-          var acc = prev.acc
-          val out = ready.sortBy(e => (e._1, e._2)).flatMap {
-            case (_, id, v) =>
-              val alert =
-                if (n >= warmup && math.abs(v - acc) > threshold)
-                  Seq(AnomalyAlert(uid, id, v,
-                    math.floor(acc * 1e6 + 0.5) / 1e6))
-                else Nil
-              acc = if (n == 0L) v else acc * 0.5 + v * 0.5
-              n += 1
-              alert
-          }
-          if (rest.isEmpty && n == 0L) {
-            if (state.exists) state.remove()
-          } else {
-            state.update(EwmaState(n, acc, rest))
-            if (rest.nonEmpty)
-              state.setTimeoutTimestamp(math.max(
-                rest.map(_._1).min / 1000L + 1L,
-                state.getCurrentWatermarkMs() + 1L))
-          }
-          out.iterator
-      }
+    orderedFold(events, (0L, 0.0))(
+      _.user_id, e => (e.ts_us, e.event_id, e.value))(
+      { case (uid, (n, acc), _, id, v) =>
+        val alert =
+          if (n >= warmup && math.abs(v - acc) > threshold)
+            Seq(AnomalyAlert(uid, id, v, math.floor(acc * 1e6 + 0.5) / 1e6))
+          else Nil
+        ((n + 1L, if (n == 0L) v else acc * 0.5 + v * 0.5), alert)
+      })
   }
 
   /** One Bernoulli observation on the sequential-test path. */
@@ -497,91 +482,52 @@ object EventStreams {
   case class SprtOut(variant: Long, n_total: Long, n_success: Long,
                      n_at_decision: Long, decision: String, llr9: Long)
 
-  /** Keyed SPRT state: observations folded (n), successes (k), the
-    * decision point if crossed (nDec = −1 until then, cumDec the LLR
-    * there) — O(1) per key forever — plus the watermark-pending buffer.
-    */
-  case class SprtState(n: Long, k: Long, nDec: Long, cumDec: Long,
-                       pending: Seq[(Long, Long, Boolean)])
-
   /** Streaming SPRT — batch q264's sequential probability ratio walk
     * run as per-variant incremental state: each observation folds in
-    * watermark-proven (ts, id) order (the [[rateLimit]] buffer
-    * discipline) stepping the integer-grid LLR cum9 = k·a9 + (n−k)·b9;
-    * the FIRST threshold crossing freezes the decision (exactly the
-    * early-stopping semantics — later drift cannot un-decide), and the
-    * final report emits once at sentinel flush. This is the shape an
-    * experimentation platform actually runs: O(1) live state per
-    * variant, decisions available the moment the watermark passes the
-    * crossing, here read out at flush so the finite gate has one row
-    * per variant.
+    * watermark-proven (ts, id) order, stepping the integer-grid LLR
+    * cum9 = k·a9 + (n−k)·b9 over the carried (n, k, nDec, cumDec) —
+    * observations, successes, and the decision point (nDec = −1 until
+    * the walk crosses, cumDec the LLR there). The FIRST threshold
+    * crossing freezes the decision (exactly the early-stopping semantics
+    * — later drift cannot un-decide), and the final report emits once at
+    * sentinel flush. This is the shape an experimentation platform
+    * actually runs: O(1) live state per variant, decisions available the
+    * moment the watermark passes the crossing, here read out at flush so
+    * the finite gate has one row per variant.
     */
   def sprtWalk(events: Dataset[SprtEvent], a9: Long, b9: Long,
                t9: Long): Dataset[SprtOut] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", "2 hours")
-      .groupByKey(_.variant)
-      .flatMapGroupsWithState[SprtState, SprtOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (variant: Long, batch: Iterator[SprtEvent], state: GroupState[SprtState]) =>
-          val prev = state.getOption.getOrElse(
-            SprtState(0L, 0L, -1L, 0L, Seq.empty))
-          val pend = prev.pending ++
-            batch.map(e => (e.ts_us, e.event_id, e.success))
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val (ready, rest) = pend.partition(_._1 < wmUs)
-          var n = prev.n; var k = prev.k
-          var nDec = prev.nDec; var cumDec = prev.cumDec
-          ready.sortBy(e => (e._1, e._2)).foreach { case (_, _, succ) =>
-            n += 1L
-            if (succ) k += 1L
-            if (nDec == -1L) {
-              val cum = k * a9 + (n - k) * b9
-              if (cum >= t9 || cum <= -t9) { nDec = n; cumDec = cum }
-            }
-          }
-          val out =
-            if (wmUs > FlushedThresholdUs && rest.isEmpty && n > 0L) {
-              if (state.exists) state.remove()
-              val dec =
-                if (nDec == -1L) "continue"
-                else if (cumDec >= t9) "accept_h1"
-                else "accept_h0"
-              Seq(SprtOut(variant, n, k, nDec, dec,
-                if (nDec == -1L) 0L else cumDec))
-            } else {
-              state.update(SprtState(n, k, nDec, cumDec, rest))
-              state.setTimeoutTimestamp(math.max(
-                if (rest.nonEmpty) rest.map(_._1).min / 1000L + 1L else 0L,
-                state.getCurrentWatermarkMs() + 1L))
-              Nil
-            }
-          out.iterator
-      }
+    orderedFold(events, (0L, 0L, -1L, 0L))(
+      _.variant, e => (e.ts_us, e.event_id, e.success))(
+      { case (_, (n0, k0, nDec, cumDec), _, _, succ) =>
+        val n = n0 + 1L
+        val k = if (succ) k0 + 1L else k0
+        val cum = k * a9 + (n - k) * b9
+        if (nDec == -1L && (cum >= t9 || cum <= -t9)) ((n, k, n, cum), Nil)
+        else ((n, k, nDec, cumDec), Nil)
+      },
+      flush = Some({ case (variant, (n, k, nDec, cumDec)) =>
+        val dec =
+          if (nDec == -1L) "continue"
+          else if (cumDec >= t9) "accept_h1"
+          else "accept_h0"
+        if (n > 0L) Seq(SprtOut(variant, n, k, nDec, dec, cumDec)) else Nil
+      }))
   }
 
   /** The admit/deny decision for one event. */
   case class RateDecision(user_id: Long, event_id: Long, allowed: Boolean)
-
-  /** Keyed bucket state: `tokens == -1` means no event folded yet (the
-    * first event finds a full bucket); `pending` holds events at or
-    * above the watermark, which may still be preceded by a late arrival
-    * and so cannot be decided yet. */
-  case class RateState(tokens: Long, lastRefill: Long,
-                       pending: Seq[(Long, Long)])
 
   /** Streaming token-bucket rate limiting — the q160 batch semantics
     * (capacity `cap`, one token per `periodUs`, whole periods credited,
     * the partial period banked via `lastRefill += k·period`) run as a
     * continuous stateful operator. The decision at event i depends on
     * every ADMIT before it, so events are decided IN (ts, id) ORDER and
-    * only once the watermark proves nothing can precede them: arrivals
-    * buffer in `pending` until `ts < watermark`, then fold through the
-    * bucket in order. Per-key live state is two longs plus the pending
-    * buffer — and pending is bounded by the watermark horizon (2 h of
-    * one key's events), NOT the key's history; the fold output and the
-    * (tokens, lastRefill) carry-over are O(1). Late events beyond the
+    * only once the watermark proves nothing can precede them. The carry
+    * is (tokens, lastRefill), `tokens == -1` until the first event finds
+    * a full bucket; pending is bounded by the watermark horizon (2 h of
+    * one key's events), NOT the key's history. Late events beyond the
     * watermark are dropped by the watermark contract (the price of a
     * bounded buffer; the batch twin q160 is the backfill-exact path).
     * All arithmetic is integer micros — bit-identical to the batch
@@ -590,52 +536,24 @@ object EventStreams {
   def rateLimit(events: Dataset[RateEvent], cap: Long = 3L,
                 periodUs: Long = 600000000L): Dataset[RateDecision] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", "2 hours")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[RateState, RateDecision](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, batch: Iterator[RateEvent], state: GroupState[RateState]) =>
-          val prev = state.getOption.getOrElse(RateState(-1L, 0L, Seq.empty))
-          val pend = prev.pending ++ batch.map(e => (e.ts_us, e.event_id))
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          // an event at exactly ts == watermark may still be preceded by
-          // a same-ts arrival: only strictly-below-watermark rows fold
-          val (ready, rest) = pend.partition(_._1 < wmUs)
-          var tokens = prev.tokens
-          var last = prev.lastRefill
-          val out = ready.sorted.map { case (ts, id) =>
-            if (tokens == -1L) { tokens = cap; last = ts }
-            else {
-              // defensive clamp at 0: Spark 4.1 drops beyond-watermark
-              // rows before flatMapGroupsWithState (Extension13Spec
-              // demonstrates it), but that filter is version-sensitive —
-              // if a straggler ever reaches the fold it must read as
-              // zero elapsed, not rewind the banked-credit clock
-              val k = math.max(0L, (ts - last) / periodUs)
-              tokens = math.min(cap, tokens + k)
-              last += k * periodUs
-            }
-            val allowed = tokens > 0L
-            if (allowed) tokens -= 1L
-            RateDecision(uid, id, allowed)
+    orderedFold(events, (-1L, 0L))(
+      _.user_id, e => (e.ts_us, e.event_id, NoPayload))(
+      { case (uid, (tokens0, last0), ts, id, _) =>
+        val (tokens, last) =
+          if (tokens0 == -1L) (cap, ts)
+          else {
+            // defensive clamp at 0: Spark 4.1 drops beyond-watermark
+            // rows before the keyed fold (Extension13Spec
+            // demonstrates it), but that filter is version-sensitive —
+            // if a straggler ever reaches the fold it must read as
+            // zero elapsed, not rewind the banked-credit clock
+            val k = math.max(0L, (ts - last0) / periodUs)
+            (math.min(cap, tokens0 + k), last0 + k * periodUs)
           }
-          if (rest.isEmpty && tokens == -1L) {
-            if (state.exists) state.remove()
-          } else {
-            state.update(RateState(tokens, last, rest))
-            if (rest.nonEmpty)
-              // fire once the earliest pending row can have cleared the
-              // watermark; must be strictly beyond the current watermark
-              state.setTimeoutTimestamp(math.max(
-                rest.map(_._1).min / 1000L + 1L,
-                state.getCurrentWatermarkMs() + 1L))
-            // no pending: the (tokens, lastRefill) carry-over stays
-            // without a timeout — any future event re-opens the key; at
-            // deployment scale an idle-key TTL is the eviction knob
-          }
-          out.iterator
-      }
+        val allowed = tokens > 0L
+        ((if (allowed) tokens - 1L else tokens, last),
+          Seq(RateDecision(uid, id, allowed)))
+      })
   }
 
   /** One event of a multi-shard ingest, keyed by user: `arr_us` is the
@@ -645,8 +563,6 @@ object EventStreams {
     * arrival order, not event-time order. */
   case class LateEvent(user_id: Long, arr: java.sql.Timestamp,
                        arr_us: Long, ts_us: Long, event_id: Long)
-  case class LateState(runmax: Long, nEv: Long, nAdmit: Long,
-                       maxLate: Long, pending: Seq[(Long, Long, Long)])
   case class LateOut(user_id: Long, n_events: Long, n_admit: Long,
                      n_drop: Long, max_late_us: Long)
 
@@ -655,64 +571,37 @@ object EventStreams {
     * is DROPPED when it arrives more than `toleranceUs` behind the
     * maximum event time already observed for its key (the per-key
     * watermark proxy), the q249 audit run as a live operator instead
-    * of a post-hoc report. Decisions depend on arrival order, so
-    * events buffer until the ARRIVAL watermark proves their position
-    * (the [[rateLimit]] discipline, ordered by (arr_us, event_id));
-    * live state per key is three counters + a running max + the
-    * watermark-bounded pending buffer. One summary row per key at
-    * sentinel flush. All arithmetic is integer micros — bit-identical
-    * to the batch oracle's per-key window replay.
+    * of a post-hoc report. Decisions depend on arrival order, so events
+    * fold in ARRIVAL-watermark-proven (arr_us, event_id) order; the
+    * carry is a running max plus three counters (events, admits, max
+    * lateness). One summary row per key at sentinel flush. All
+    * arithmetic is integer micros — bit-identical to the batch oracle's
+    * per-key window replay.
     */
   def latenessRouter(events: Dataset[LateEvent],
                      toleranceUs: Long = 60000000L): Dataset[LateOut] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("arr", "2 hours")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[LateState, LateOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, batch: Iterator[LateEvent], state: GroupState[LateState]) =>
-          val prev = state.getOption.getOrElse(
-            LateState(Long.MinValue, 0L, 0L, 0L, Seq.empty))
-          val pend = prev.pending ++
-            batch.map(e => (e.arr_us, e.event_id, e.ts_us))
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val (ready, rest) = pend.partition(_._1 < wmUs)
-          var runmax = prev.runmax
-          var nEv = prev.nEv; var nAdmit = prev.nAdmit
-          var maxLate = prev.maxLate
-          ready.sortBy(e => (e._1, e._2)).foreach { case (_, _, tsUs) =>
-            val late =
-              if (runmax == Long.MinValue || runmax - tsUs < 0L) 0L
-              else runmax - tsUs
-            nEv += 1L
-            if (late <= toleranceUs) nAdmit += 1L
-            if (late > maxLate) maxLate = late
-            if (tsUs > runmax) runmax = tsUs
-          }
-          val out =
-            if (wmUs > FlushedThresholdUs && rest.isEmpty && nEv > 0L) {
-              if (state.exists) state.remove()
-              Seq(LateOut(uid, nEv, nAdmit, nEv - nAdmit, maxLate))
-            } else {
-              state.update(LateState(runmax, nEv, nAdmit, maxLate, rest))
-              state.setTimeoutTimestamp(math.max(
-                if (rest.nonEmpty) rest.map(_._1).min / 1000L + 1L else 0L,
-                state.getCurrentWatermarkMs() + 1L))
-              Nil
-            }
-          out.iterator
-      }
+    orderedFold(events, (Long.MinValue, 0L, 0L, 0L), timeCol = "arr")(
+      _.user_id, e => (e.arr_us, e.event_id, e.ts_us))(
+      { case (_, (runmax, nEv, nAdmit, maxLate), _, _, tsUs) =>
+        val late =
+          if (runmax == Long.MinValue || runmax - tsUs < 0L) 0L
+          else runmax - tsUs
+        ((math.max(runmax, tsUs), nEv + 1L,
+          if (late <= toleranceUs) nAdmit + 1L else nAdmit,
+          math.max(maxLate, late)), Nil)
+      },
+      flush = Some({ case (uid, (_, nEv, nAdmit, maxLate)) =>
+        if (nEv > 0L) Seq(LateOut(uid, nEv, nAdmit, nEv - nAdmit, maxLate))
+        else Nil
+      }))
   }
 
   /** One event of the cadence monitor, keyed by user: gaps are
-    * EVENT-TIME differences, so the fold must see events in (ts_us,
-    * event_id) order — the watermark-buffered pending discipline of
-    * [[latenessRouter]], with the watermark on `ts` itself. */
+    * EVENT-TIME differences, so the fold sees events in (ts_us,
+    * event_id) order, with the watermark on `ts` itself. */
   case class CadenceEvent(user_id: Long, ts: java.sql.Timestamp,
                           ts_us: Long, event_id: Long)
-  case class CadenceState(lastUs: Long, n: Long, sg: Long, sg2: Long,
-                          pending: Seq[(Long, Long)])
   case class CadenceOut(user_id: Long, n_gaps: Long, sg: Long, sg2: Long)
 
   /** Streaming inter-event cadence monitor — the q310 bot audit as a
@@ -722,51 +611,23 @@ object EventStreams {
     * watermark-bounded pending buffer. Gaps are second-granularity
     * LONGs ((ts−prev) div 1e6 on micros) — bit-identical to the batch
     * lag replay, which is the oracle. One summary row per key at
-    * sentinel flush; the caller derives mean/CV from the exact sums.
+    * sentinel flush (none for a single-event key, which has no gaps);
+    * the caller derives mean/CV from the exact sums.
     */
   def cadenceMonitor(events: Dataset[CadenceEvent]): Dataset[CadenceOut] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", "2 hours")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[CadenceState, CadenceOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, batch: Iterator[CadenceEvent],
-         state: GroupState[CadenceState]) =>
-          val prev = state.getOption.getOrElse(
-            CadenceState(Long.MinValue, 0L, 0L, 0L, Seq.empty))
-          val pend = prev.pending ++ batch.map(e => (e.ts_us, e.event_id))
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val (ready, rest) = pend.partition(_._1 < wmUs)
-          var last = prev.lastUs
-          var n = prev.n; var sg = prev.sg; var sg2 = prev.sg2
-          ready.sorted.foreach { case (tsUs, _) =>
-            if (last != Long.MinValue) {
-              val g = (tsUs - last) / 1000000L
-              n += 1L; sg += g; sg2 += g * g
-            }
-            last = tsUs
-          }
-          val out =
-            if (wmUs > FlushedThresholdUs && rest.isEmpty && n > 0L) {
-              if (state.exists) state.remove()
-              Seq(CadenceOut(uid, n, sg, sg2))
-            } else if (wmUs > FlushedThresholdUs && rest.isEmpty) {
-              // n == 0: a single-event user has no gaps and emits no
-              // summary row — but keeping its state would re-register a
-              // timeout at wm+1 every trigger FOREVER in a continuous
-              // deployment. Drop the key entirely once flushed.
-              if (state.exists) state.remove()
-              Nil
-            } else {
-              state.update(CadenceState(last, n, sg, sg2, rest))
-              state.setTimeoutTimestamp(math.max(
-                if (rest.nonEmpty) rest.map(_._1).min / 1000L + 1L else 0L,
-                state.getCurrentWatermarkMs() + 1L))
-              Nil
-            }
-          out.iterator
-      }
+    orderedFold(events, (Long.MinValue, 0L, 0L, 0L))(
+      _.user_id, e => (e.ts_us, e.event_id, NoPayload))(
+      { case (_, (last, n, sg, sg2), tsUs, _, _) =>
+        if (last == Long.MinValue) ((tsUs, n, sg, sg2), Nil)
+        else {
+          val g = (tsUs - last) / 1000000L
+          ((tsUs, n + 1L, sg + g, sg2 + g * g), Nil)
+        }
+      },
+      flush = Some({ case (uid, (_, n, sg, sg2)) =>
+        if (n > 0L) Seq(CadenceOut(uid, n, sg, sg2)) else Nil
+      }))
   }
 
   /** One event of the streaming ledger, keyed by user: `dx` is the
@@ -775,61 +636,29 @@ object EventStreams {
     * arithmetic. */
   case class BalanceEvent(user_id: Long, ts: java.sql.Timestamp,
                           ts_us: Long, event_id: Long, dx: Long)
-  case class BalanceState(bal: Long, peak: Long, hits: Long, n: Long,
-                          pending: Seq[(Long, Long, Long)])
   case class BalanceOut(user_id: Long, n_tx: Long, final_cents: Long,
                         peak_cents: Long, floor_hits: Long)
 
   /** Streaming clamped running balance — the SEQUENTIAL twin of batch
     * q354: per user, b := max(0, b + dx) folded in (ts_us, event_id)
-    * order over the watermark-buffered pending events (the
-    * [[cadenceMonitor]] ordering discipline), carrying (balance, peak,
-    * floor hits, count) as O(1) live state per key. The batch side
-    * computes the SAME recurrence through its associative parallel-scan
-    * identity (b_i = S_i − min(0, min prefix S)); this operator IS the
-    * recurrence — the shared DuckDB oracle proves the two formulations
-    * agree bit-for-bit, which is the point of the pair. One summary row
-    * per key at sentinel flush; keys that flush empty drop their state
-    * (no immortal timeouts in a continuous deployment).
+    * order, carrying (balance, peak, floor hits, count) as O(1) live
+    * state per key. The batch side computes the SAME recurrence through
+    * its associative parallel-scan identity (b_i = S_i − min(0, min
+    * prefix S)); this operator IS the recurrence — the shared DuckDB
+    * oracle proves the two formulations agree bit-for-bit, which is the
+    * point of the pair. One summary row per key at sentinel flush.
     */
   def clampedBalance(events: Dataset[BalanceEvent]): Dataset[BalanceOut] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", "2 hours")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[BalanceState, BalanceOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, batch: Iterator[BalanceEvent],
-         state: GroupState[BalanceState]) =>
-          val prev = state.getOption.getOrElse(
-            BalanceState(0L, 0L, 0L, 0L, Seq.empty))
-          val pend = prev.pending ++
-            batch.map(e => (e.ts_us, e.event_id, e.dx))
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val (ready, rest) = pend.partition(_._1 < wmUs)
-          var bal = prev.bal; var peak = prev.peak
-          var hits = prev.hits; var n = prev.n
-          ready.sorted.foreach { case (_, _, dx) =>
-            bal = math.max(0L, bal + dx)
-            if (bal > peak) peak = bal
-            if (bal == 0L && dx < 0L) hits += 1L
-            n += 1L
-          }
-          val out =
-            if (wmUs > FlushedThresholdUs && rest.isEmpty && n > 0L) {
-              if (state.exists) state.remove()
-              Seq(BalanceOut(uid, n, bal, peak, hits))
-            } else if (wmUs > FlushedThresholdUs && rest.isEmpty) {
-              if (state.exists) state.remove()
-              Nil
-            } else {
-              state.update(BalanceState(bal, peak, hits, n, rest))
-              state.setTimeoutTimestamp(math.max(
-                if (rest.nonEmpty) rest.map(_._1).min / 1000L + 1L else 0L,
-                state.getCurrentWatermarkMs() + 1L))
-              Nil
-            }
-          out.iterator
-      }
+    orderedFold(events, (0L, 0L, 0L, 0L))(
+      _.user_id, e => (e.ts_us, e.event_id, e.dx))(
+      { case (_, (bal0, peak, hits, n), _, _, dx) =>
+        val bal = math.max(0L, bal0 + dx)
+        ((bal, math.max(peak, bal),
+          if (bal == 0L && dx < 0L) hits + 1L else hits, n + 1L), Nil)
+      },
+      flush = Some({ case (uid, (bal, peak, hits, n)) =>
+        if (n > 0L) Seq(BalanceOut(uid, n, bal, peak, hits)) else Nil
+      }))
   }
 }

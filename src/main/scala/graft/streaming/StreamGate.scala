@@ -16,8 +16,14 @@ import graft.io.FsUtil
   * its scratch directories. This is the engine's form of the reference
   * driver's dispatch / barrier / shutdown / cleanup sequence
   * (`master.py:128–134`). Every streaming and versioned-stream gate in
-  * the query registry runs through these four entry points, so a gate
-  * states only its plan, output mode, sink and oracle.
+  * the query registry runs through these five entry points, so a gate
+  * states only its plan, output mode, sink and oracle:
+  *  - [[run]] starts, awaits and stops one query at a given checkpoint;
+  *  - [[toMemory]] runs a plan to a memory sink under its own checkpoint;
+  *  - [[withScratch]] owns the scratch directories of a hand-built run;
+  *  - [[rocksDbState]] sets the keyed-state confs around a run;
+  *  - [[flushed]] is the whole sentinel-flushed gate: fixture plus flush
+  *    sentinel in, appended memory-sink table out.
   */
 object StreamGate {
 
@@ -93,6 +99,21 @@ object StreamGate {
     }
     s.table(name)
   }
+
+  /** The finite gate whose stateful output only emits once the
+    * watermark passes it: write the flush sentinel into a scratch dir,
+    * hand `build` the events fixture under `dir` with the sentinel
+    * unioned in ([[EventStreams.readFlushed]]), and run the plan it
+    * returns to an append-mode memory sink under [[rocksDbState]].
+    * Returns the sink table; the sentinel dir is deleted either way.
+    */
+  def flushed(s: SparkSession, dir: String, tag: String)(
+      build: DataFrame => Dataset[_]): DataFrame =
+    withScratch(s"graft_${tag}_sentinel") { case Seq(sentinelDir) =>
+      SentinelFiles.writeFlushSentinel(sentinelDir)
+      val plan = build(EventStreams.readFlushed(s, dir, sentinelDir))
+      rocksDbState(s) { toMemory(s, tag, plan, "append") }
+    }
 
   /** Create one temp directory per prefix (checkpoints, flush sentinels,
     * staged stream input), run `body` on them in order, and delete them

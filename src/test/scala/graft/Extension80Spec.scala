@@ -52,7 +52,7 @@ class Extension80Spec extends SparkSpec {
   test("q459: index serve equals the direct cross-table nearDupJoin, " +
     "and appendToBandIndex writes delta-only (base files untouched)") {
     val path =
-      s"${System.getProperty("java.io.tmpdir")}/graft_bandidx_spec"
+      scratchPath("graft_bandidx_spec")
     val d = Sampling.hashSplit(Tables.load(spark, sf0001, "documents"),
       "doc_id", "inc", Seq(("corpus", 0.8), ("incoming", 0.2)))
     val incoming = d.filter(col("split") === "incoming")
@@ -90,7 +90,7 @@ class Extension80Spec extends SparkSpec {
     "filtered corpus; compaction removes tombstoned rows and clears " +
     "the tombstone log") {
     val path =
-      s"${System.getProperty("java.io.tmpdir")}/graft_bandidxdc_spec"
+      scratchPath("graft_bandidxdc_spec")
     val d = Sampling.hashSplit(Tables.load(spark, sf0001, "documents"),
       "doc_id", "inc", Seq(("corpus", 0.8), ("incoming", 0.2)))
     val incoming = d.filter(col("split") === "incoming")
@@ -131,14 +131,14 @@ class Extension80Spec extends SparkSpec {
   test("band index: serving a batch against an appended index equals " +
     "serving against an index built in one shot") {
     val oneShot =
-      s"${System.getProperty("java.io.tmpdir")}/graft_bandidx_oneshot"
+      scratchPath("graft_bandidx_oneshot")
     val docs = Tables.load(spark, sf0001, "documents")
       .select("doc_id", "text")
     val probe = docs.where(col("doc_id") % 5 === 0)
     val corpus = docs.where(col("doc_id") % 5 =!= 0)
     Dedup.writeBandIndex(corpus, "text", "doc_id", oneShot)
     val incr =
-      s"${System.getProperty("java.io.tmpdir")}/graft_bandidx_incr"
+      scratchPath("graft_bandidx_incr")
     Dedup.writeBandIndex(corpus.where(col("doc_id") % 3 =!= 0),
       "text", "doc_id", incr)
     Dedup.appendToBandIndex(corpus.where(col("doc_id") % 3 === 0),

@@ -18,12 +18,9 @@ import graft.ops.{MaterializedView, VersionedTable}
   */
 class Extension81Spec extends SparkSpec {
 
-  private def tmp(name: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/$name"
-
   test("zone map: the band read consults the manifest and PRUNES — " +
     "few files selected, result identical to the full-scan filter") {
-    val base = tmp("graft_zonemap_spec")
+    val base = scratchPath("graft_zonemap_spec")
     val ev = Tables.load(spark, sf0001, "events")
       .select(col("event_id"), col("value"))
     Sources.writeWithZoneMap(ev, base, "value", 16)
@@ -44,7 +41,7 @@ class Extension81Spec extends SparkSpec {
 
   test("zone map: a band outside every zone opens ZERO files and " +
     "returns an empty frame with the table schema") {
-    val base = tmp("graft_zonemap_spec2")
+    val base = scratchPath("graft_zonemap_spec2")
     val ev = Tables.load(spark, sf0001, "events")
       .select(col("event_id"), col("value"))
     Sources.writeWithZoneMap(ev, base, "value", 8)
@@ -58,7 +55,7 @@ class Extension81Spec extends SparkSpec {
   test("MV maintenance: applyDelta commits a NEW version and leaves " +
     "the previous one intact; emptied groups disappear") {
     import spark.implicits._
-    val path = tmp("graft_mv_spec")
+    val path = scratchPath("graft_mv_spec")
     val base = Seq((1L, 10L), (1L, 20L), (2L, 5L))
       .toDF("k", "cents")
     MaterializedView.create(base, Seq("k"), "cents", path)
@@ -84,7 +81,7 @@ class Extension81Spec extends SparkSpec {
   test("MV maintenance: a second delta merges associatively — chained " +
     "deltas equal the one-shot recompute") {
     import spark.implicits._
-    val path = tmp("graft_mv_spec2")
+    val path = scratchPath("graft_mv_spec2")
     val ev = Tables.load(spark, sf0001, "events")
       .select(col("user_id"), col("event_id"),
         floor(col("value") * 100 + 0.5).cast("long").as("cents"))
@@ -120,7 +117,7 @@ class Extension81Spec extends SparkSpec {
     "contain matching rows; clean files carry over by reference and " +
     "historical snapshots stay readable") {
     import spark.implicits._
-    val path = tmp("graft_vtab_spec")
+    val path = scratchPath("graft_vtab_spec")
     // two files per commit, keyed so one file holds all the deletions:
     // repartitionByRange on flag puts flag=1 rows into their own file
     val base = Seq((1L, 0), (2L, 0), (3L, 1), (4L, 1))
@@ -164,7 +161,7 @@ class Extension81Spec extends SparkSpec {
   test("versioned table: deleteWhere with no matching rows commits a " +
     "pure-reference manifest (zero files rewritten)") {
     import spark.implicits._
-    val path = tmp("graft_vtab_spec2")
+    val path = scratchPath("graft_vtab_spec2")
     VersionedTable.init(Seq((1L, 0), (2L, 0)).toDF("id", "flag"), path)
     val before = dataFilesOnDisk(path)
     VersionedTable.deleteWhere(spark, path, col("flag") === 99)

@@ -13,13 +13,10 @@ import graft.ops.{MaterializedView, VersionedTable}
   */
 class Extension82Spec extends SparkSpec {
 
-  private def tmp(name: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/$name"
-
   test("exactly-once MV: a re-delivered batch id is a NO-OP — no new " +
     "version, identical contents; a fresh id still applies") {
     import spark.implicits._
-    val path = tmp("graft_smv_spec")
+    val path = scratchPath("graft_smv_spec")
     MaterializedView.create(
       Seq((1L, 10L), (2L, 5L)).toDF("k", "cents"), Seq("k"), "cents", path)
     val delta = Seq((1L, 7L, 1L), (3L, 2L, 1L)).toDF("k", "cents", "op")
@@ -58,7 +55,7 @@ class Extension82Spec extends SparkSpec {
     "the diff of a version with itself reads nothing and returns " +
     "nothing") {
     import spark.implicits._
-    val path = tmp("graft_vdiff_spec")
+    val path = scratchPath("graft_vdiff_spec")
     val base = Seq((1L, 0), (2L, 0), (3L, 1), (4L, 1))
       .toDF("id", "flag").repartitionByRange(2, col("flag"))
     VersionedTable.init(base, path)

@@ -9,12 +9,9 @@ import graft.io.{Sources, Tables}
   */
 class Extension83Spec extends SparkSpec {
 
-  private def tmp(name: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/$name"
-
   test("2-D zone map: the box prunes on BOTH dimensions — fewer files " +
     "than either single-dimension band admits, result == plain filter") {
-    val base = tmp("graft_zonemap2_spec")
+    val base = scratchPath("graft_zonemap2_spec")
     val ev = Tables.load(spark, sf0001, "events")
       .select(col("event_id"), col("value"),
         expr("unix_micros(cast(ts as timestamp)) div 3600000000")

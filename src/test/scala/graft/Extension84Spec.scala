@@ -13,9 +13,6 @@ import graft.ops.VersionedTable
   */
 class Extension84Spec extends SparkSpec {
 
-  private def tmp(name: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/$name"
-
   private def dataFilesOnDisk(path: String): Set[String] = {
     val p = Paths.get(path)
     Files.walk(p).iterator().asScala
@@ -28,7 +25,7 @@ class Extension84Spec extends SparkSpec {
     "matched keys are replaced, new keys appended, and the pre-merge " +
     "snapshot still reads the old payloads") {
     import spark.implicits._
-    val path = tmp("graft_vmerge_spec")
+    val path = scratchPath("graft_vmerge_spec")
     // two files: flag=0 rows (ids 1,2) and flag=1 rows (ids 3,4)
     val base = Seq((1L, 0, 10L), (2L, 0, 20L), (3L, 1, 30L), (4L, 1, 40L))
       .toDF("id", "flag", "cents").repartitionByRange(2, col("flag"))
@@ -62,7 +59,7 @@ class Extension84Spec extends SparkSpec {
   test("merge with keys matching NOTHING appends without rewriting " +
     "any existing file") {
     import spark.implicits._
-    val path = tmp("graft_vmerge_spec2")
+    val path = scratchPath("graft_vmerge_spec2")
     VersionedTable.init(
       Seq((1L, 10L), (2L, 20L)).toDF("id", "cents"), path)
     val v0Files = VersionedTable.manifestFiles(path, 0)
@@ -80,7 +77,7 @@ class Extension84Spec extends SparkSpec {
     "identical data; every pre-compaction snapshot stays readable " +
     "from files still on disk") {
     import spark.implicits._
-    val path = tmp("graft_vcompact_spec")
+    val path = scratchPath("graft_vcompact_spec")
     VersionedTable.init(
       (1L to 20L).map(i => (i, i * 10L)).toDF("id", "cents")
         .repartition(4), path)
@@ -108,7 +105,7 @@ class Extension84Spec extends SparkSpec {
   test("schema evolution: merge carrying a NEW column null-fills the " +
     "rewritten survivors; old snapshots keep their original schema") {
     import spark.implicits._
-    val path = tmp("graft_vevolve_spec")
+    val path = scratchPath("graft_vevolve_spec")
     VersionedTable.init(
       Seq((1L, 10L), (2L, 20L)).toDF("id", "cents"), path)
     // the update batch introduces `tag` — replaces id 2, inserts id 3
@@ -130,7 +127,7 @@ class Extension84Spec extends SparkSpec {
     "reports the real changes only — legacy rows and their " +
     "null-extended selves never diff") {
     import spark.implicits._
-    val path = tmp("graft_vevolve_spec2")
+    val path = scratchPath("graft_vevolve_spec2")
     VersionedTable.init(
       Seq((1L, 10L), (2L, 20L)).toDF("id", "cents"), path)
     VersionedTable.append(

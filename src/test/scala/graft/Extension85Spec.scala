@@ -12,13 +12,10 @@ import graft.ops.{MaterializedView, VersionedTable}
   */
 class Extension85Spec extends SparkSpec {
 
-  private def tmp(name: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/$name"
-
   test("deletion vectors: delete writes NO data file, stacks across " +
     "commits, survives an append, and compaction folds vectors in") {
     import spark.implicits._
-    val path = tmp("graft_dv_spec")
+    val path = scratchPath("graft_dv_spec")
     VersionedTable.init(
       (1L to 20L).map(i => (i, i * 10L)).toDF("id", "cents")
         .repartition(2), path)
@@ -61,7 +58,7 @@ class Extension85Spec extends SparkSpec {
   test("deletion vectors: merge and copy-on-write delete respect " +
     "existing vectors (no resurrection through the probe or rewrite)") {
     import spark.implicits._
-    val path = tmp("graft_dv_spec2")
+    val path = scratchPath("graft_dv_spec2")
     VersionedTable.init(
       (1L to 10L).map(i => (i, i * 10L)).toDF("id", "cents"), path)
     VersionedTable.deleteWhereDV(spark, path, col("id") === 3)
@@ -85,7 +82,7 @@ class Extension85Spec extends SparkSpec {
   test("snapshot diff sees DV-only changes: rows deleted by a vector " +
     "report as removed even though the file list is unchanged") {
     import spark.implicits._
-    val path = tmp("graft_dv_spec3")
+    val path = scratchPath("graft_dv_spec3")
     VersionedTable.init(
       (1L to 10L).map(i => (i, i * 10L)).toDF("id", "cents"), path)
     VersionedTable.deleteWhereDV(spark, path, col("id") <= 2)
@@ -98,7 +95,7 @@ class Extension85Spec extends SparkSpec {
   test("clustered compaction: empty band intersection opens ZERO " +
     "files; post-compaction appends are read unconditionally") {
     import spark.implicits._
-    val path = tmp("graft_cc_spec")
+    val path = scratchPath("graft_cc_spec")
     VersionedTable.init(
       (0L until 100L).map(i => (i, i % 10)).toDF("id", "b")
         .repartition(4), path)
@@ -126,7 +123,7 @@ class Extension85Spec extends SparkSpec {
   test("appendIdempotent: replayed batch is a no-op; a crashed commit " +
     "(orphan data dir, no manifest) recovers on replay") {
     import spark.implicits._
-    val path = tmp("graft_ai_spec")
+    val path = scratchPath("graft_ai_spec")
     VersionedTable.init(Seq((1L, 1L)).toDF("id", "v"), path)
     assert(VersionedTable.appendIdempotent(
       Seq((2L, 2L)).toDF("id", "v"), path, 7L))
@@ -150,7 +147,7 @@ class Extension85Spec extends SparkSpec {
   test("manifest commit is create-exclusive: a second writer racing " +
     "the same version fails loudly instead of clobbering") {
     import spark.implicits._
-    val path = tmp("graft_excl_spec")
+    val path = scratchPath("graft_excl_spec")
     VersionedTable.init(Seq((1L, 1L)).toDF("id", "v"), path)
     // both 'writers' saw v0; writer A commits v1...
     VersionedTable.append(Seq((2L, 2L)).toDF("id", "v"), path)
@@ -165,7 +162,7 @@ class Extension85Spec extends SparkSpec {
 
   test("MaterializedView commit is create-exclusive too") {
     import spark.implicits._
-    val path = tmp("graft_mv_excl_spec")
+    val path = scratchPath("graft_mv_excl_spec")
     MaterializedView.create(
       Seq((1L, 10L)).toDF("k", "v"), Seq("k"), "v", path)
     intercept[Exception] {
@@ -178,7 +175,7 @@ class Extension85Spec extends SparkSpec {
     "both ops resolves to the upsert; unseen deletes no-op; replay " +
     "refuses") {
     import spark.implicits._
-    val path = tmp("graft_cdc_spec")
+    val path = scratchPath("graft_cdc_spec")
     VersionedTable.init(
       Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("id", "cents"), path)
     val batch = Seq(
@@ -209,7 +206,7 @@ class Extension85Spec extends SparkSpec {
   test("URI-encoded table paths: deletes apply on a path containing " +
     "a space (the r10 silent-corruption shape)") {
     import spark.implicits._
-    val path = tmp("graft dv spec enc")
+    val path = scratchPath("graft dv spec enc")
     VersionedTable.init(
       (1L to 10L).map(i => (i, i * 10L)).toDF("id", "cents"), path)
     VersionedTable.deleteWhere(spark, path, col("id") <= 3)

@@ -10,9 +10,6 @@ import graft.ext.Dedup
   */
 class Extension86Spec extends SparkSpec {
 
-  private def tmp(name: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/$name"
-
   private def docs = {
     import spark.implicits._
     Seq(
@@ -27,7 +24,7 @@ class Extension86Spec extends SparkSpec {
   test("idempotent append: committed deltas serve, replays refuse, " +
     "compaction folds deltas and keeps the applied-batch record") {
     import spark.implicits._
-    val path = tmp("graft_bandsa_spec")
+    val path = scratchPath("graft_bandsa_spec")
     graft.io.FsUtil.deleteRecursively(path)
     Dedup.writeBandIndex(docs.where(col("doc_id") <= 2), "text",
       "doc_id", path)
@@ -66,7 +63,7 @@ class Extension86Spec extends SparkSpec {
     "marker never reaches the serve path, and the replayed batch " +
     "commits cleanly over it") {
     import spark.implicits._
-    val path = tmp("graft_bandsa_spec2")
+    val path = scratchPath("graft_bandsa_spec2")
     graft.io.FsUtil.deleteRecursively(path)
     Dedup.writeBandIndex(docs.where(col("doc_id") <= 2), "text",
       "doc_id", path)

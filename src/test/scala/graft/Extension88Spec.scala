@@ -12,9 +12,6 @@ import graft.ops.VersionedTable
   */
 class Extension88Spec extends SparkSpec {
 
-  private def tmp(name: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/$name"
-
   private def mk(path: String): Unit = {
     import spark.implicits._
     val df = (0L until 300L).map(i => (i, i % 10, i * 2L))
@@ -28,7 +25,7 @@ class Extension88Spec extends SparkSpec {
   test("commit timestamps are strictly monotonic; timestamp time " +
     "travel resolves between-commit probes to the EARLIER version and " +
     "refuses probes before the first commit") {
-    val path = tmp("graft_ts_spec")
+    val path = scratchPath("graft_ts_spec")
     mk(path)
     val h = VersionedTable.history(path)
     assert(h.map(_.version) == Seq(0, 1, 2))
@@ -57,7 +54,7 @@ class Extension88Spec extends SparkSpec {
   test("restore re-commits a historical manifest as a NEW version: " +
     "zero data files written, bad state stays in history, deletion " +
     "vectors carry through the restore") {
-    val path = tmp("graft_restore_spec")
+    val path = scratchPath("graft_restore_spec")
     mk(path) // v0..v2: 300 rows
     VersionedTable.deleteWhereDV(spark, path, col("b") === 3) // v3
     val withDv = VersionedTable.read(spark, path).count()
@@ -89,9 +86,9 @@ class Extension88Spec extends SparkSpec {
     "never reach the clone), metadata count carries, clone-of-clone " +
     "works, existing target refuses") {
     import spark.implicits._
-    val src = tmp("graft_clone_spec_src")
-    val dst = tmp("graft_clone_spec_dst")
-    val dst2 = tmp("graft_clone_spec_dst2")
+    val src = scratchPath("graft_clone_spec_src")
+    val dst = scratchPath("graft_clone_spec_dst")
+    val dst2 = scratchPath("graft_clone_spec_dst2")
     mk(src)
     TableFs.deleteRecursive(dst)
     TableFs.deleteRecursive(dst2)

@@ -12,14 +12,11 @@ import graft.ops.VersionedTable
   */
 class Extension89Spec extends SparkSpec {
 
-  private def tmp(name: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/$name"
-
   test("CHECK constraints: SQL NULL semantics, per-verb atomic " +
     "refusal (append / merge / CDC / idempotent append), add-time " +
     "validation, drop re-allows") {
     import spark.implicits._
-    val path = tmp("graft_check_spec")
+    val path = scratchPath("graft_check_spec")
     VersionedTable.init(
       Seq((1L, 10L), (2L, 20L)).toDF("id", "cents"), path)
     // add-time validation: existing data already violates → refused
@@ -75,7 +72,7 @@ class Extension89Spec extends SparkSpec {
   test("CHECK constraints survive a data OVERWRITE and gate the " +
     "overwriting batch (r11 ADVICE: init silently dropped them)") {
     import spark.implicits._
-    val path = tmp("graft_constraint_overwrite_spec")
+    val path = scratchPath("graft_constraint_overwrite_spec")
     // constraints now SURVIVE overwrite, so a prior run's table must
     // be fully removed, not just re-inited
     graft.io.FsUtil.deleteRecursively(path)

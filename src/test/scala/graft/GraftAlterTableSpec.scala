@@ -12,7 +12,7 @@ import graft.ops.VersionedTable
 class GraftAlterTableSpec extends SparkSpec {
 
   private def freshCatalog(name: String): String = {
-    val wh = s"${System.getProperty("java.io.tmpdir")}/graft_altwh_$name"
+    val wh = scratchPath(s"graft_altwh_$name")
     graft.io.FsUtil.deleteRecursively(wh)
     spark.conf.set(s"spark.sql.catalog.$name", "graft.sources.GraftCatalog")
     spark.conf.set(s"spark.sql.catalog.$name.warehouse", wh)

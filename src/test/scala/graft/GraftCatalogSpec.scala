@@ -12,7 +12,7 @@ import graft.ops.VersionedTable
 class GraftCatalogSpec extends SparkSpec {
 
   private lazy val warehouse = {
-    val w = s"${System.getProperty("java.io.tmpdir")}/graft_wh_spec"
+    val w = scratchPath("graft_wh_spec")
     spark.conf.set("spark.sql.catalog.gtest", "graft.sources.GraftCatalog")
     spark.conf.set("spark.sql.catalog.gtest.warehouse", w)
     w
@@ -100,7 +100,7 @@ class GraftCatalogSpec extends SparkSpec {
     "rewriting existing files; overwrite commits a replacement " +
     "snapshot with history preserved") {
     import spark.implicits._
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_w_spec"
+    val path = scratchPath("graft_w_spec")
     graft.io.FsUtil.deleteRecursively(path)
     VersionedTable.init(Seq((1L, 10L)).toDF("id", "v"), path)
     val f0 = VersionedTable.manifestFiles(path, 0)

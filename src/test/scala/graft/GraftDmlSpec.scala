@@ -14,7 +14,7 @@ import graft.ops.VersionedTable
 class GraftDmlSpec extends SparkSpec {
 
   private lazy val warehouse = {
-    val w = s"${System.getProperty("java.io.tmpdir")}/graft_dml_wh"
+    val w = scratchPath("graft_dml_wh")
     spark.conf.set("spark.sql.catalog.gdml", "graft.sources.GraftCatalog")
     spark.conf.set("spark.sql.catalog.gdml.warehouse", w)
     w
@@ -266,7 +266,7 @@ class GraftDmlSpec extends SparkSpec {
   }
 
   private def tmp2(name: String): String = {
-    val p = s"${System.getProperty("java.io.tmpdir")}/$name"
+    val p = scratchPath(name)
     graft.io.FsUtil.deleteRecursively(p)
     p
   }

@@ -16,7 +16,7 @@ import graft.ops.VersionedTable
 class GraftMicroBatchSpec extends SparkSpec {
 
   private def tmp(name: String): String = {
-    val p = s"${System.getProperty("java.io.tmpdir")}/$name"
+    val p = scratchPath(name)
     graft.io.FsUtil.deleteRecursively(p)
     p
   }

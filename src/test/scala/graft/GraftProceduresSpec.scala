@@ -11,7 +11,7 @@ import graft.ops.VersionedTable
 class GraftProceduresSpec extends SparkSpec {
 
   private def freshCatalog(name: String): String = {
-    val wh = s"${System.getProperty("java.io.tmpdir")}/graft_procwh_$name"
+    val wh = scratchPath(s"graft_procwh_$name")
     graft.io.FsUtil.deleteRecursively(wh)
     spark.conf.set(s"spark.sql.catalog.$name", "graft.sources.GraftCatalog")
     spark.conf.set(s"spark.sql.catalog.$name.warehouse", wh)

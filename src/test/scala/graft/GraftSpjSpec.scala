@@ -12,9 +12,6 @@ import graft.ops.VersionedTable
   */
 class GraftSpjSpec extends SparkSpec {
 
-  private def tmp(name: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/$name"
-
   /** Exchanges in the EXECUTED plan — sparkPlan predates
     * EnsureRequirements and never shows them (AQE is disabled inside
     * withSpj so executedPlan is the final physical tree).
@@ -43,8 +40,8 @@ class GraftSpjSpec extends SparkSpec {
     "v2 bucketing; the same join shuffles with it disabled; results " +
     "identical") {
     import spark.implicits._
-    val p1 = tmp("graft_spj_a")
-    val p2 = tmp("graft_spj_b")
+    val p1 = scratchPath("graft_spj_a")
+    val p2 = scratchPath("graft_spj_b")
     VersionedTable.init(
       (0L until 1000L).map(i => (i % 8, i, i * 2L))
         .toDF("pk", "id", "cents").repartition(4), p1)
@@ -79,8 +76,8 @@ class GraftSpjSpec extends SparkSpec {
     "plain shape (uncovered file has no key) — joins shuffle again " +
     "but stay correct; re-OPTIMIZE restores SPJ") {
     import spark.implicits._
-    val p1 = tmp("graft_spj_c")
-    val p2 = tmp("graft_spj_d")
+    val p1 = scratchPath("graft_spj_c")
+    val p2 = scratchPath("graft_spj_d")
     VersionedTable.init(
       (0L until 100L).map(i => (i % 4, i)).toDF("pk", "v")
         .repartition(2), p1)
@@ -107,8 +104,8 @@ class GraftSpjSpec extends SparkSpec {
     "filtered dim hands its key set to the scan at RUNTIME — splits " +
     "of non-matching keys never open; results match the shuffled plan") {
     import spark.implicits._
-    val pf = tmp("graft_dpp_fact")
-    val pd = tmp("graft_dpp_dim")
+    val pf = scratchPath("graft_dpp_fact")
+    val pd = scratchPath("graft_dpp_dim")
     VersionedTable.init(
       (0L until 1600L).map(i => (i % 16, i, i * 2L))
         .toDF("pk", "id", "cents").repartition(4), pf)
@@ -142,7 +139,7 @@ class GraftSpjSpec extends SparkSpec {
   test("partition-value file skipping composes: an equality filter on " +
     "the partition column opens only that key's files") {
     import spark.implicits._
-    val p = tmp("graft_spj_e")
+    val p = scratchPath("graft_spj_e")
     VersionedTable.init(
       (0L until 800L).map(i => (i % 8, i)).toDF("pk", "v")
         .repartition(3), p)

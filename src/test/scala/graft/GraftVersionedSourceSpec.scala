@@ -14,9 +14,6 @@ import graft.ops.VersionedTable
   */
 class GraftVersionedSourceSpec extends SparkSpec {
 
-  private def tmp(name: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/$name"
-
   /** Files the plan's scan will open (manifest-pruned), straight off
     * the physical BatchScan.
     */
@@ -43,7 +40,7 @@ class GraftVersionedSourceSpec extends SparkSpec {
   test("SQL range predicate on the clustered column prunes the scan " +
     "to intersecting files, inside the planner, with residual filters " +
     "kept and PushedFilters visible in EXPLAIN") {
-    val path = tmp("graft_dsv2_spec")
+    val path = scratchPath("graft_dsv2_spec")
     buildTable(path)
     val t = spark.read.format("graft-versioned").load(path)
     t.createOrReplaceTempView("graft_dsv2_t")
@@ -68,7 +65,7 @@ class GraftVersionedSourceSpec extends SparkSpec {
   }
 
   test("an unsatisfiable band opens ZERO files; a full scan opens all") {
-    val path = tmp("graft_dsv2_spec2")
+    val path = scratchPath("graft_dsv2_spec2")
     buildTable(path)
     val t = spark.read.format("graft-versioned").load(path)
     assert(scanFiles(t.where(col("bucket") > 10000)) == 0)
@@ -78,7 +75,7 @@ class GraftVersionedSourceSpec extends SparkSpec {
 
   test("versionAsOf pins a snapshot: the fragmented v1 serves its " +
     "own 5 files and pre-compaction rows; stats-less files never prune") {
-    val path = tmp("graft_dsv2_spec3")
+    val path = scratchPath("graft_dsv2_spec3")
     buildTable(path)
     val v1 = spark.read.format("graft-versioned")
       .option("versionAsOf", "1").load(path)
@@ -97,7 +94,7 @@ class GraftVersionedSourceSpec extends SparkSpec {
   test("appends after a clustered compaction scan conservatively: " +
     "statted files prune, the new stats-less files always open") {
     import spark.implicits._
-    val path = tmp("graft_dsv2_spec4")
+    val path = scratchPath("graft_dsv2_spec4")
     buildTable(path)
     VersionedTable.append(
       Seq((2000L, 55L, 6000L)).toDF("id", "bucket", "cents")
@@ -120,7 +117,7 @@ class GraftVersionedSourceSpec extends SparkSpec {
     "absent key opens ZERO files, uncovered appends stay conservative " +
     "— through both the library path and the DSv2 EqualTo consult") {
     import spark.implicits._
-    val path = tmp("graft_dsv2_bloom")
+    val path = scratchPath("graft_dsv2_bloom")
     buildTable(path) // v2: 5 clustered files over id 0..999
     VersionedTable.buildBloomIndex(spark, path, "id") // v3
     val v = VersionedTable.latestVersion(path)
@@ -159,7 +156,7 @@ class GraftVersionedSourceSpec extends SparkSpec {
     "at once — library boxFiles, readVersionBox rows, and the DSv2 " +
     "conjunctive scan all agree; an out-of-space box opens zero files") {
     import spark.implicits._
-    val path = tmp("graft_dsv2_zorder")
+    val path = scratchPath("graft_dsv2_zorder")
     // uniform 100x100 grid, one row per cell — every quadrant equally
     // loaded, so z-order boundaries are clean
     val grid = (0L until 10000L)
@@ -202,7 +199,7 @@ class GraftVersionedSourceSpec extends SparkSpec {
     "ZERO data files, disabled by deletion vectors / filters / " +
     "group-bys, and exact across every commit verb") {
     import spark.implicits._
-    val path = tmp("graft_mcount_spec")
+    val path = scratchPath("graft_mcount_spec")
     VersionedTable.init(
       (1L to 100L).map(i => (i, i % 7, i)).toDF("id", "b", "c")
         .repartition(3), path)
@@ -249,7 +246,7 @@ class GraftVersionedSourceSpec extends SparkSpec {
     "sidecars), kept snapshots read identically, time travel below " +
     "the horizon fails loudly") {
     import spark.implicits._
-    val path = tmp("graft_vacuum_spec")
+    val path = scratchPath("graft_vacuum_spec")
     VersionedTable.init(
       (1L to 20L).map(i => (i, i * 10L)).toDF("id", "cents")
         .repartition(2), path) // v0
@@ -286,7 +283,7 @@ class GraftVersionedSourceSpec extends SparkSpec {
   test("the scan reports manifest-exact statistics: numRows is the " +
     "footer-count sum of the KEPT files, and a band-pruned side flips " +
     "the join to broadcast under a threshold the full table exceeds") {
-    val path = tmp("graft_stats_spec")
+    val path = scratchPath("graft_stats_spec")
     buildTable(path) // v2: 5 clustered files, 1000 rows, bucket 0..99
     def scanOf(df: DataFrame): graft.sources.GraftVersionedFileScan =
       df.queryExecution.sparkPlan.collectFirst {
@@ -330,7 +327,7 @@ class GraftVersionedSourceSpec extends SparkSpec {
     "data files; disabled by deletion vectors, uncovered appends, and " +
     "unstatted columns; exact values either way") {
     import spark.implicits._
-    val path = tmp("graft_minmax_spec")
+    val path = scratchPath("graft_minmax_spec")
     buildTable(path) // v2: clustered on bucket (0..99), ids 0..999
     def scanClassOf(df: DataFrame): String =
       df.queryExecution.sparkPlan.collectFirst {
@@ -386,7 +383,7 @@ class GraftVersionedSourceSpec extends SparkSpec {
     "a residual filter disables the cap (raw counts would be the " +
     "wrong budget); a limit past the table opens everything") {
     import spark.implicits._
-    val path = tmp("graft_limit_spec")
+    val path = scratchPath("graft_limit_spec")
     VersionedTable.init(
       (0L until 1000L).map(i => (i, i % 7)).toDF("id", "b")
         .repartition(10), path)
@@ -416,7 +413,7 @@ class GraftVersionedSourceSpec extends SparkSpec {
   test("TOP-N pushdown: ORDER BY the clustered column opens only the " +
     "band that can hold the top k (both directions); default NULLS " +
     "FIRST engages on a null-free table via the nc lines; rows exact") {
-    val path = tmp("graft_topn_spec")
+    val path = scratchPath("graft_topn_spec")
     buildTable(path) // 5 range-clustered files, bucket 0..99, 1000 rows
     val t = spark.read.format("graft-versioned").load(path)
     t.createOrReplaceTempView("graft_topn_t")
@@ -446,7 +443,7 @@ class GraftVersionedSourceSpec extends SparkSpec {
     "only (r11 ADVICE: inflated budgets dropped live files); NULLS " +
     "FIRST keeps the null prefix and caps past it") {
     import spark.implicits._
-    val path = tmp("graft_topn_nulls_spec")
+    val path = scratchPath("graft_topn_nulls_spec")
     // bucket: 5 nulls + 0..9 low band, 10..19 high band; clustered
     // compaction range-partitions nulls into the FIRST file
     val rows =
@@ -490,7 +487,7 @@ class GraftVersionedSourceSpec extends SparkSpec {
     "from pv + footer counts with zero data files; non-count aggs and " +
     "uncovered appends fall back") {
     import spark.implicits._
-    val path = tmp("graft_gcount_spec")
+    val path = scratchPath("graft_gcount_spec")
     VersionedTable.init(
       (0L until 640L).map(i => (i % 8, i, i * 2L))
         .toDF("pk", "id", "cents").repartition(3), path)
@@ -526,7 +523,7 @@ class GraftVersionedSourceSpec extends SparkSpec {
     "minus nulls), bare and grouped; DISTINCT and uncovered manifests " +
     "fall back") {
     import spark.implicits._
-    val path = tmp("graft_ccount_spec")
+    val path = scratchPath("graft_ccount_spec")
     // cents null on every 3rd row
     VersionedTable.init(
       (0L until 600L).map(i => (i % 6, i,
@@ -566,7 +563,7 @@ class GraftVersionedSourceSpec extends SparkSpec {
     "merge-on-read scan (r12): tombstoned rows gone, residual filters " +
     "exact, band pruning still prunes, stacked DVs compose; OPTIMIZE " +
     "folds back to the plain scan") {
-    val path = tmp("graft_dsv2_spec5")
+    val path = scratchPath("graft_dsv2_spec5")
     buildTable(path)
     VersionedTable.deleteWhereDV(spark, path, col("bucket") === 7)
     val t = spark.read.format("graft-versioned").load(path)
@@ -594,7 +591,7 @@ class GraftVersionedSourceSpec extends SparkSpec {
     "returns UNESCAPED key values, matching the file-scan path " +
     "(r11 ADVICE: raw __pv dir names leaked through)") {
     import spark.implicits._
-    val path = tmp("graft_gcount_escape_spec")
+    val path = scratchPath("graft_gcount_escape_spec")
     // ':' and '%' are Hive-escaped in partition dir names
     val keys = Seq("a:b", "p%q", "plain")
     VersionedTable.init(
@@ -622,7 +619,7 @@ class GraftVersionedSourceSpec extends SparkSpec {
     "stats round there — r11 ADVICE) and falls back to the file scan " +
     "with the exact answer") {
     import spark.implicits._
-    val path = tmp("graft_minmax_bigint_spec")
+    val path = scratchPath("graft_minmax_bigint_spec")
     val big = (1L << 53) + 1L // rounds DOWN to 2^53 in Double stats
     VersionedTable.init(
       Seq((1L, 10L), (2L, big), (3L, 20L)).toDF("id", "v")
@@ -645,7 +642,7 @@ class GraftVersionedSourceSpec extends SparkSpec {
     assert(scanClassOf(both) != "GraftMetadataAggScan")
     assert(both.head().getLong(1) == big)
     // a safely-ranged table still serves from metadata
-    val path2 = tmp("graft_minmax_bigint_spec2")
+    val path2 = scratchPath("graft_minmax_bigint_spec2")
     VersionedTable.init(
       Seq((1L, 10L), (2L, 20L)).toDF("id", "v").repartition(1), path2)
     VersionedTable.compactClustered(spark, path2, 1, "v")
@@ -661,7 +658,7 @@ class GraftVersionedSourceSpec extends SparkSpec {
     "stats at commit — band-prunable with NO OPTIMIZE; plain appends " +
     "stay unstatted and conservative") {
     import spark.implicits._
-    val path = tmp("graft_writecluster_spec")
+    val path = scratchPath("graft_writecluster_spec")
     graft.io.FsUtil.deleteRecursively(path)
     val df = (0L until 1000L).map(i => (i, i % 100, i * 3L))
       .toDF("id", "bucket", "cents")

@@ -14,9 +14,6 @@ import graft.ops.VersionedTable
   */
 class GraftVersionedStreamSpec extends SparkSpec {
 
-  private def tmp(name: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/$name"
-
   private def runOnce(path: String, ckpt: String, sink: String,
                       options: Map[String, String] = Map.empty): Unit = {
     val reader = options.foldLeft(
@@ -36,9 +33,9 @@ class GraftVersionedStreamSpec extends SparkSpec {
     "checkpoint emits ONLY the commits made in between — no " +
     "duplicates, no loss") {
     import spark.implicits._
-    val path = tmp("graft_stream_src")
-    val ckpt = tmp("graft_stream_ckpt")
-    val sink = tmp("graft_stream_sink")
+    val path = scratchPath("graft_stream_src")
+    val ckpt = scratchPath("graft_stream_ckpt")
+    val sink = scratchPath("graft_stream_sink")
     TableFs.deleteRecursive(ckpt); TableFs.deleteRecursive(sink)
     val df = (0L until 900L).map(i => (i, i % 9, i * 2L))
       .toDF("id", "b", "cents")
@@ -63,9 +60,9 @@ class GraftVersionedStreamSpec extends SparkSpec {
   test("startingVersion=latest serves only post-creation commits; " +
     "metadata-only commits (bloom build) yield empty batches") {
     import spark.implicits._
-    val path = tmp("graft_stream_src2")
-    val ckpt = tmp("graft_stream_ckpt2")
-    val sink = tmp("graft_stream_sink2")
+    val path = scratchPath("graft_stream_src2")
+    val ckpt = scratchPath("graft_stream_ckpt2")
+    val sink = scratchPath("graft_stream_sink2")
     TableFs.deleteRecursive(ckpt); TableFs.deleteRecursive(sink)
     val df = (0L until 400L).map(i => (i, i % 9, i)).toDF("id", "b", "c")
     VersionedTable.init(df.where(col("id") < 200).repartition(2), path)
@@ -89,11 +86,11 @@ class GraftVersionedStreamSpec extends SparkSpec {
     "ignoreChanges=true streams only the ADDED files (rewritten " +
     "survivors re-emit, pure deletes vanish)") {
     import spark.implicits._
-    val path = tmp("graft_stream_src3")
-    val ckpt = tmp("graft_stream_ckpt3")
-    val sink = tmp("graft_stream_sink3")
-    val ckpt2 = tmp("graft_stream_ckpt3b")
-    val sink2 = tmp("graft_stream_sink3b")
+    val path = scratchPath("graft_stream_src3")
+    val ckpt = scratchPath("graft_stream_ckpt3")
+    val sink = scratchPath("graft_stream_sink3")
+    val ckpt2 = scratchPath("graft_stream_ckpt3b")
+    val sink2 = scratchPath("graft_stream_sink3b")
     Seq(ckpt, sink, ckpt2, sink2).foreach(TableFs.deleteRecursive)
     val df = (0L until 300L).map(i => (i, i % 3, i)).toDF("id", "b", "c")
     VersionedTable.init(df.where(col("id") < 100).repartition(1), path)

@@ -771,7 +771,7 @@ class PlanSpec extends SparkSpec {
   test("q463: the zone-mapped read's SCAN enumerates exactly the " +
     "manifest-selected files — pruning is in the plan, not post-hoc") {
     val base =
-      s"${System.getProperty("java.io.tmpdir")}/graft_zm_plan"
+      scratchPath("graft_zm_plan")
     val ev = Tables.load(spark, sf0001, "events")
       .select(col("event_id"), col("value"))
     graft.io.Sources.writeWithZoneMap(ev, base, "value", 16)
@@ -791,7 +791,7 @@ class PlanSpec extends SparkSpec {
     "file — diff cost tracks changed files") {
     import spark.implicits._
     val path =
-      s"${System.getProperty("java.io.tmpdir")}/graft_vdiff_plan"
+      scratchPath("graft_vdiff_plan")
     val base = Seq((1L, 0), (2L, 0), (3L, 1), (4L, 1))
       .toDF("id", "flag").repartitionByRange(2, col("flag"))
     graft.ops.VersionedTable.init(base, path)
@@ -812,7 +812,7 @@ class PlanSpec extends SparkSpec {
     "the planner — BatchScan file count 4 of 8 for the 40% band, " +
     "pushed filters visible, zero files for an unsatisfiable band") {
     val path =
-      s"${System.getProperty("java.io.tmpdir")}/graft_dsv2_plan"
+      scratchPath("graft_dsv2_plan")
     val ev = Tables.load(spark, sf0001, "events")
       .select(col("event_id"), (col("event_id") % 1000).as("bucket"),
         floor(col("value") * 100 + 0.5).cast("long").as("cents"))

@@ -25,6 +25,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def scratch(prefix: String): Path =
     Files.createTempDirectory(scratchRoot, prefix)
 
+  /** The path `name` under this suite's scratch root, not created: every
+    * request for one name within the suite gets the same path, so a suite
+    * can reopen a table, warehouse or checkpoint by name; it is deleted
+    * with the root.
+    */
+  def scratchPath(name: String): String = scratchRoot.resolve(name).toString
+
   override protected def afterAll(): Unit =
     try graft.io.FsUtil.deleteRecursively(scratchRoot)
     finally super.afterAll()
