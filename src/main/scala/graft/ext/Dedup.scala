@@ -4,7 +4,6 @@ import scala.util.Random
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.LogicalRDD
 
 import graft.functions.{PolyHash, Rounding}
 
@@ -583,16 +582,22 @@ object Dedup {
     * that turns pairwise near-dup evidence into "keep one per cluster".
     *
     * Min-label propagation with POINTER HALVING, the Pregel/GraphX-CC
-    * recurrence expressed as DataFrame joins: each round every node takes
-    * the min over its own, its neighbors', and its label's label (the
-    * path-compression step — label chains halve every round, so
-    * convergence is O(log diameter) rounds, not O(diameter); a 100-node
-    * near-dup chain converges in ~8 rounds where plain propagation needs
-    * 99). Each round is two (id)-keyed shuffles — NOT a driver-side
+    * recurrence expressed as DataFrame joins. Labels start at the least
+    * of each node's own id and its neighbors' (one aggregate over the
+    * edge list, not a round); then each round every node takes the min
+    * over its own, its neighbors', and its label's label (the
+    * path-compression step — label chains halve every round, so a chain
+    * whose ids grow along it converges in O(log diameter) rounds, not
+    * O(diameter): the 100-node chain in ExtensionSpec takes 7 rounds
+    * (measured) where plain propagation needs 99; with the same chain's
+    * ids shuffled, halving helps less, and it took 31). Each round is two
+    * (id)-keyed shuffles and one pinned job — NOT a driver-side
     * union-find over collected edges. `localCheckpoint` truncates the
     * growing lineage each round (swap for `checkpoint` on a cluster with
-    * a checkpoint dir). The convergence probe is `limit(1).count()` — an
-    * any-change existence check, not a full scan.
+    * a checkpoint dir). Convergence is read off that same job: each node
+    * carries its previous label through the round, and an Observation on
+    * the pin counts the labels that changed; a round that changes none
+    * ends the loop, so no probe job runs.
     */
   def canonicalize(pairs: DataFrame, maxIter: Int = 64): DataFrame =
     canonicalizeGrouped(pairs, Nil, maxIter)
@@ -621,25 +626,27 @@ object Dedup {
     // plan nests the previous rounds' joins (analysis cost compounds)
     // and the eager count() adds a job per round. Fault-tolerance
     // note for a real cluster: localCheckpoint blocks die with their
-    // executor — an unrecoverable loss mid-loop. There, swap pin to
-    // RELIABLE df.checkpoint() (needs sc.setCheckpointDir on durable
-    // storage), which truncates lineage the same way; persist is the
-    // wrong tool either way.
-    def pin(df: DataFrame): DataFrame = df.localCheckpoint()
-    def unpin(df: DataFrame): Unit = df.queryExecution.logical match {
-      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
-      case _ =>
-    }
+    // executor — an unrecoverable loss mid-loop. There, swap the
+    // localCheckpoint calls (here and in Pins) for RELIABLE
+    // df.checkpoint() (needs sc.setCheckpointDir on durable storage),
+    // which truncates lineage the same way; persist is the wrong tool
+    // either way.
     val g = groupCols.map(col)
     val edges = pairs.select(g ++ Seq(
       col("da").cast("long").as("src"), col("db").cast("long").as("dst")): _*)
     // materialize the edge list ONCE: `und` feeds every iteration's join,
     // and without this the upstream pair pipeline (LSH + verify when fed
     // from nearDupPairs) would be recomputed per round
-    val und = pin(edges.union(edges.select(g ++ Seq(
-      col("dst").as("src"), col("src").as("dst")): _*)))
-    var labels = pin(und.select(g :+ col("src").as("id"): _*).distinct()
-      .withColumn("label", col("id")))
+    val und = edges.union(edges.select(g ++ Seq(
+      col("dst").as("src"), col("src").as("dst")): _*)).localCheckpoint()
+    // seed: each node starts at the least of its own id and its
+    // neighbours' — one aggregate over `und`, left unpinned because
+    // round 1's plan reads it. A node's label is a node of its
+    // component, never above its own id, and only falls from here, so
+    // the fixpoint is still the component minimum
+    var labels = und.groupBy(g :+ col("src"): _*).agg(min("dst").as("m"))
+      .select(g ++ Seq(col("src").as("id"),
+        least(col("src"), col("m")).as("label")): _*)
     // a disambiguated copy of the group columns for non-equi-named joins
     def gAlias(d: DataFrame, idAs: (String, String), valCol: String) =
       d.select(groupCols.map(c => col(c).as(s"__g_$c")) ++ Seq(
@@ -656,13 +663,17 @@ object Dedup {
     var iter = 0
     var done = false
     while (!done && iter < maxIter) {
+      // `old` rides the min aggregate as the self row's label (neighbour
+      // rows carry null), so the round's own pin job counts the changes
       val neighborMin = und
         .join(gAlias(labels, "id" -> "nid", "label"),
           gCond(col("dst") === col("nid")))
-        .select(g ++ Seq(col("src").as("id"), col("label")): _*)
-      val merged = neighborMin.union(
-          labels.select(g ++ Seq(col("id"), col("label")): _*))
-        .groupBy(g :+ col("id"): _*).agg(min("label").as("label"))
+        .select(g ++ Seq(col("src").as("id"), col("label"),
+          lit(null).cast("long").as("old")): _*)
+      val merged = neighborMin.union(labels.select(g ++ Seq(
+          col("id"), col("label"), col("label").as("old")): _*))
+        .groupBy(g :+ col("id"): _*)
+        .agg(min("label").as("label"), max("old").as("old"))
       // pointer halving: also adopt the label of my label (labels are
       // node ids and every node has a row, so the self-join resolves)
       val byLabel = gAlias(merged, "id" -> "lid", "label")
@@ -671,17 +682,12 @@ object Dedup {
         .join(byLabel, gCond(col("label") === col("lid")), "left")
         .select(g ++ Seq(col("id"),
           least(col("label"), coalesce(col("llabel"), col("label")))
-            .as("label")): _*)
-      val nextP = pin(next)
-      val changed = nextP
-        .join(labels.withColumnRenamed("label", "old"),
-          groupCols :+ "id")
-        .where(col("label") =!= col("old"))
-        .limit(1).count()
-      // free the superseded round's blocks now rather than whenever GC
-      // lets ContextCleaner find them: nextP is pinned, so nothing reads
-      // the old labels again (und and the returned frame stay pinned)
-      unpin(labels)
+            .as("label"), col("old")): _*)
+      val (nextP, changed) = Pins.pinCounted(next,
+        sum((col("label") =!= col("old")).cast("long")), "old")
+      // nextP is pinned, so nothing reads the old labels again (und and
+      // the returned frame stay pinned)
+      Pins.unpin(labels)
       labels = nextP
       done = changed == 0
       iter += 1
@@ -689,8 +695,8 @@ object Dedup {
     // silent non-convergence would hand one component several "canonical"
     // ids — dedup would keep duplicate clusters with no sign of trouble
     if (!done) throw new IllegalStateException(
-      s"canonicalize did not converge in $maxIter rounds — graph diameter " +
-        s"exceeds maxIter; raise it (or switch to pointer-doubling for O(log d))")
+      s"canonicalize did not converge in $maxIter rounds — the loop " +
+        s"already halves label chains each round, so raise maxIter")
     labels
   }
 

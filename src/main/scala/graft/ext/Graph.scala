@@ -17,10 +17,11 @@ object Graph {
     * Each iteration is exactly two keyed shuffles at any scale — a join
     * of the (src, dst, deg) edge table with the current ranks on `src`,
     * then an aggregation on `dst` — i.e. the Pregel/GraphX recurrence as
-    * declarative Spark, with no driver-side state beyond the node count.
-    * The edge table (with degrees) is materialized ONCE via
-    * `localCheckpoint` and reused every round; per-round ranks are also
-    * checkpointed so lineage stays O(1) instead of O(iters) (swap for
+    * declarative Spark, with no driver-side state beyond the node count
+    * (read from the node pin's own job). The edge table (with degrees)
+    * is materialized ONCE via `localCheckpoint` and reused every round;
+    * per-round ranks are also checkpointed so lineage stays O(1) instead
+    * of O(iters), and each round frees the ranks it replaces (swap for
     * `checkpoint` on a cluster with a checkpoint dir).
     *
     * Dangling-node mass is NOT redistributed (the common simplification):
@@ -39,8 +40,9 @@ object Graph {
       col(edges.columns(1)).cast("long").as("dst"))
     val e = (if (undirected) e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
              else e0).localCheckpoint()
-    val nodes = e.select(col("src").as("node")).distinct().localCheckpoint()
-    val n = nodes.count().toDouble
+    val (nodes, nNodes) =
+      Pins.pinCounted(e.select(col("src").as("node")).distinct(), count(lit(1)))
+    val n = nNodes.toDouble
     require(n > 0, "pageRank: empty graph")
     val teleport = (1.0 - damping) / n
     val withDeg = e
@@ -56,9 +58,11 @@ object Graph {
           (lit(teleport) + lit(damping) * col("m")).as("rank"))
       // a node with no in-edges receives only teleport mass (cannot occur
       // on an undirected graph, kept for directed generality)
-      ranks = nodes.join(contrib, Seq("node"), "left")
+      val nextRanks = nodes.join(contrib, Seq("node"), "left")
         .select(col("node"), coalesce(col("rank"), lit(teleport)).as("rank"))
         .localCheckpoint()
+      Pins.unpin(ranks)
+      ranks = nextRanks
     }
     ranks
   }
@@ -85,9 +89,10 @@ object Graph {
     val e = (if (undirected) e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
              else e0).localCheckpoint()
     val nodes = e.select(col("src").as("node")).distinct().localCheckpoint()
-    val seed = seeds.select(col(seeds.columns(0)).cast("long").as("node"))
-      .distinct().join(nodes, "node").localCheckpoint()
-    val s = seed.count().toDouble
+    val (seed, nSeeds) = Pins.pinCounted(
+      seeds.select(col(seeds.columns(0)).cast("long").as("node"))
+        .distinct().join(nodes, "node"), count(lit(1)))
+    val s = nSeeds.toDouble
     require(s > 0, "personalizedPageRank: no seed is present in the graph")
     val restart = (1.0 - damping) / s
     val withDeg = e
@@ -107,11 +112,13 @@ object Graph {
         .groupBy("dst")
         .agg(sum("c").as("m"))
         .select(col("dst").as("node"), col("m"))
-      ranks = base.join(contrib, Seq("node"), "left")
+      val nextRanks = base.join(contrib, Seq("node"), "left")
         .select(col("node"),
           (col("base") + lit(damping) * coalesce(col("m"), lit(0.0)))
             .as("rank"))
         .localCheckpoint()
+      Pins.unpin(ranks)
+      ranks = nextRanks
     }
     ranks
   }
@@ -268,8 +275,8 @@ object Graph {
     * (one shuffle on `node`), and checkpoints — lineage stays O(1), and
     * the left-anti visit set guarantees first-reach = minimum hop count,
     * so results are partitioning-invariant. Terminates early when a
-    * frontier empties (the `isEmpty` probe is one cheap job on a frame
-    * that is already checkpointed). Per-round state is the visited set —
+    * frontier empties, which the frontier's own pin job counts (no
+    * separate probe job). Per-round state is the visited set —
     * node-count bounded, never edges × rounds.
     *
     * @param edges    directed (src, dst) rows — symmetrize before the
@@ -288,22 +295,29 @@ object Graph {
       .select(col(sources.columns(0)).cast("long").as("node")).distinct()
       .withColumn("hops", lit(0))
       .localCheckpoint()
+    // a projection, not the pin itself, so unpinning it frees nothing
     var frontier = visited.select("node")
     var hop = 1
     var done = false
     while (hop <= maxHops && !done) {
-      val next = frontier.join(e, frontier("node") === e("src"))
-        .select(e("dst").as("node")).distinct()
-        .join(visited, Seq("node"), "left_anti")
-        .withColumn("hops", lit(hop))
-        .localCheckpoint()
-      if (next.isEmpty) done = true
+      val (next, reached) = Pins.pinCounted(
+        frontier.join(e, frontier("node") === e("src"))
+          .select(e("dst").as("node")).distinct()
+          .join(visited, Seq("node"), "left_anti")
+          .withColumn("hops", lit(hop)), count(lit(1)))
+      // next is pinned and the previous frontier is already in the
+      // pinned visited set, so nothing reads that frontier again
+      Pins.unpin(frontier)
+      if (reached == 0) done = true
       else {
-        visited = visited.unionAll(next).localCheckpoint()
-        frontier = next.select("node")
+        val grown = visited.unionAll(next).localCheckpoint()
+        Pins.unpin(visited)
+        visited = grown
         hop += 1
       }
+      frontier = next
     }
+    Pins.unpin(frontier)
     visited
   }
 }

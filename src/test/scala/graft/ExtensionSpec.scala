@@ -1,5 +1,12 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.ext.{Dedup, Multimodal, Sampling, SimilaritySearch}
@@ -211,6 +218,99 @@ class ExtensionSpec extends SparkSpec {
     val grown = sc.getPersistentRDDs.size - before
     assert(grown <= 2, s"$grown persisted RDDs left by one canonicalize")
     assert(labels.where(col("label") =!= 1L).count() == 0)
+  }
+
+  private var groups = 0
+
+  /** SQL executions that `body` ran, counted as the distinct execution
+    * ids of the jobs started in a fresh job group (broadcast jobs run in
+    * a group of their own, but every execution here also starts a job in
+    * the body's group). The positive control, a shuffled aggregate in a
+    * second group, must count as one execution, and the listener bus is
+    * FIFO per listener: once the control's job is seen, any job `body`
+    * started is too.
+    */
+  private def sqlExecutions(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val seen = new ConcurrentHashMap[String, java.util.Set[String]]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).foreach { p =>
+          val group = p.getProperty("spark.jobGroup.id")
+          val exec = p.getProperty("spark.sql.execution.id")
+          if (group != null && exec != null)
+            seen.computeIfAbsent(group, _ => ConcurrentHashMap.newKeySet[String]())
+              .add(exec)
+        }
+    }
+    groups += 1
+    val (run, control) = (s"graft_cc_run_$groups", s"graft_cc_control_$groups")
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(run, "canonicalize")
+      body
+      sc.setJobGroup(control, "positive control")
+      spark.range(100).groupBy(col("id") % 3).count().collect()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!seen.containsKey(control) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(Option(seen.get(control)).map(_.size) == Some(1),
+        "control execution not counted once: the count means nothing")
+      Option(seen.get(run)).map(_.size).getOrElse(0)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("canonicalize: an empty pair frame returns no rows and terminates") {
+    // the round's change count arrives through an Observation on the pin
+    // job; with no rows it must still arrive (as 0), not block forever
+    val empty = Seq.empty[(Long, Long)].toDF("da", "db")
+    val labels = Await.result(Future(Dedup.canonicalize(empty).collect()),
+      120.seconds)
+    assert(labels.isEmpty)
+  }
+
+  test("canonicalize: seeded disjoint pairs and min-centred stars take one round") {
+    // the neighbour-minimum seed already is the fixpoint here, so the
+    // edge pin and one round's pin are the only SQL executions: no
+    // initial-label pin, no separate convergence probe
+    val pairs = Seq((2L, 1L), (3L, 4L), (10L, 11L)).toDF("da", "db")
+    val stars = Seq((1L, 2L), (1L, 3L), (4L, 1L), (20L, 21L), (22L, 20L))
+      .toDF("da", "db")
+    for ((edges, expect) <- Seq(
+        pairs -> Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L,
+          10L -> 10L, 11L -> 10L),
+        stars -> Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+          20L -> 20L, 21L -> 20L, 22L -> 20L))) {
+      var labels: org.apache.spark.sql.DataFrame = null
+      val execs = sqlExecutions { labels = Dedup.canonicalize(edges) }
+      assert(execs == 2, s"$execs SQL executions, expected edge pin + one round")
+      assert(labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == expect)
+    }
+  }
+
+  test("canonicalize: maxIter = 1 on a 4-node chain does not converge") {
+    // round 1 already reaches the minimum everywhere, but only round 2
+    // can see that nothing changed
+    val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("da", "db")
+    intercept[IllegalStateException](Dedup.canonicalize(chain, maxIter = 1))
+    assert(Dedup.canonicalize(chain, maxIter = 2).collect()
+      .forall(_.getLong(1) == 1L))
+  }
+
+  test("canonicalizeGrouped: a NULL group value labels like a non-null one") {
+    val edges = Seq((1L, 2L), (2L, 3L), (5L, 4L))
+    val grouped = (edges.map { case (a, b) => (Option("g"), a, b) } ++
+      edges.map { case (a, b) => (Option.empty[String], a, b) })
+      .toDF("grp", "da", "db")
+    val got = Dedup.canonicalizeGrouped(grouped, Seq("grp")).collect()
+      .map(r => (Option(r.getString(0)), r.getLong(1)) -> r.getLong(2)).toMap
+    val expect = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L)
+    for (grp <- Seq(Option("g"), None))
+      assert(got.collect { case ((`grp`, id), lab) => id -> lab } == expect,
+        s"group $grp")
   }
 
   test("canonicalizeGrouped: per-group labels identical to per-group canonicalize runs") {

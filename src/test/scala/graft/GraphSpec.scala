@@ -24,6 +24,35 @@ class GraphSpec extends SparkSpec {
     Graph.localTriangleCounts(sym(pairs)).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
 
+  test("pageRank, personalizedPageRank and bfsDistances free each superseded pin") {
+    // every loop re-pins its state each round; only the loop-invariant
+    // pins and the returned frame may stay registered as persisted RDDs.
+    // RDD ids grow, so counting only ids above a fresh one keeps earlier
+    // suites' garbage, which ContextCleaner frees at any time, out of it
+    val edges = sym((1L until 30L).map(i => (i, i + 1)))
+    val sc = spark.sparkContext
+    def grown(run: => org.apache.spark.sql.DataFrame): (Int, Long) = {
+      val first = sc.emptyRDD[Int].id
+      val out = run
+      (sc.getPersistentRDDs.keys.count(_ > first), out.count())
+    }
+    // edge, node and degree pins plus the ranks of the last of 8 rounds
+    val (pr, prRows) = grown(Graph.pageRank(edges, iters = 8))
+    assert(pr <= 4 && prRows == 30, s"pageRank left $pr persisted RDDs")
+    // ... plus the seed and restart-base pins
+    val (ppr, pprRows) = grown(
+      Graph.personalizedPageRank(edges, Seq(1L).toDF("node"), iters = 8))
+    assert(ppr <= 6 && pprRows == 30, s"personalizedPageRank left $ppr")
+    // the edge pin and the visited set of the last of 10 hops
+    val (bfs, bfsRows) = grown(
+      Graph.bfsDistances(edges, Seq(1L).toDF("node"), maxHops = 10))
+    assert(bfs <= 2 && bfsRows == 11, s"bfsDistances left $bfs")
+    // a frontier that empties before maxHops: its last pin is freed too
+    val (done, doneRows) = grown(
+      Graph.bfsDistances(edges, Seq(25L).toDF("node"), maxHops = 64))
+    assert(done <= 2 && doneRows == 30, s"bfsDistances left $done")
+  }
+
   test("1k-spoke hub: zero triangles, zero wedge fan-out at the hub") {
     // hub 0 — its 1000 edges all orient AWAY from the spokes (deg 1)
     // INTO the hub (deg 1000), so the hub opens no wedges; one closing

@@ -26,6 +26,10 @@ Last, per operation, each side's median over its runs of the run's own
 median seconds (`op_seconds` in the full record each run leaves in
 `<checkout>/.bench_build/results/`), so an A/B shows which operation moved.
 Exit code 0 when every run was correct with no failed operation, else 1.
+Before any run it exits 1, naming the path, when a side's
+`.bench_build/target/classpath.txt` lists a classes dir outside that
+checkout: a `.bench_build` copied from another checkout runs that
+checkout's classes, and its first rebuild deletes them.
 """
 
 import argparse
@@ -43,6 +47,19 @@ def seed_list(spec):
         lo, _, hi = part.partition("-")
         out += list(range(int(lo), int(hi) + 1)) if hi else [int(lo)]
     return out
+
+
+def borrowed_classes(checkout):
+    """Classpath entries of `checkout`'s benchmark build that are not jars
+    and lie outside the checkout (run.py writes absolute paths)."""
+    cp = os.path.join(checkout, ".bench_build", "target", "classpath.txt")
+    if not os.path.exists(cp):
+        return []
+    root = os.path.realpath(checkout)
+    with open(cp) as f:
+        entries = [line.strip() for line in f if line.strip()]
+    return [e for e in entries if not e.endswith(".jar") and
+            os.path.commonpath([os.path.realpath(e), root]) != root]
 
 
 def run_once(checkout, workload, seed, seconds):
@@ -106,6 +123,13 @@ def main():
         spec = {m["name"]: m for m in json.load(f)["end_to_end"]}
     sides = {"parent": os.path.abspath(args.parent),
              "change": os.path.abspath(args.change)}
+
+    for s, checkout in sides.items():
+        borrowed = borrowed_classes(checkout)
+        if borrowed:
+            sys.exit(f"ab: {s} checkout {checkout}: .bench_build/target/"
+                     f"classpath.txt lists classes outside it: "
+                     f"{', '.join(borrowed)}; delete its .bench_build")
 
     pairs = []
     for i, seed in enumerate(seed_list(args.seeds)):
